@@ -30,10 +30,17 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from hive_udf_spark.functions.hashing import fast_hash64, portable_hash60
-from hive_udf_spark.functions.text import word_set
+from hive_udf_spark.functions.text import ngrams, tokenize, word_set
 from hive_udf_spark.operators.util import ensure_min_parallelism, scatter_pairs
 
 _LOG = logging.getLogger(__name__)
+
+# dedup_clusters(mode="exact") warns above this many verified pairs: the
+# corpus is then in the quadratic-bucket regime mode="star" exists for.
+_WARN_EDGES = 2_000_000
+# connected_components broadcasts its node-sized label maps up to this many
+# nodes; above it a map may not fit an executor and shuffle joins are used.
+_BROADCAST_LABELS_MAX_NODES = 5_000_000
 
 # ---------------------------------------------------------------------------
 # Exact dedup
@@ -81,6 +88,89 @@ def minhash_signature(
     )
 
 
+def _token_sets(
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    shingle_n: int | None = None,
+    hashed_tokens: bool = False,
+    portable: bool = False,
+    num_hashes: int | None = None,
+) -> DataFrame:
+    """``(__id, __w)``: one distinct shingle set per document, plus the
+    MinHash signature ``sig`` when ``num_hashes`` is given.
+
+    The shingle is the distinct word by default; ``shingle_n=k`` makes it
+    the word k-gram. ``hashed_tokens`` replaces every shingle by its
+    xxhash64 (distinct is preserved modulo 64-bit collisions). Empty sets
+    are dropped: their Jaccard is 0/0 (undefined — and the integer verify
+    ``0 >= t·0`` would pass it), and their all-null signatures collide in
+    every band, so N empty docs would otherwise form an N² candidate
+    clique."""
+    if hashed_tokens and portable:
+        raise ValueError("hashed_tokens is a fast-path option; portable mode keeps exact strings")
+    if shingle_n is None:
+        shingles = word_set(text_col)
+    else:
+        shingles = F.array_distinct(ngrams(tokenize(text_col), shingle_n))
+    if hashed_tokens:
+        shingles = F.transform(shingles, lambda t: F.xxhash64(t))
+    sets = docs.select(F.col(id_col).alias("__id"), shingles.alias("__w")).filter(
+        F.size("__w") > 0
+    )
+    if num_hashes is None:
+        return sets
+    return sets.withColumn("sig", minhash_signature(F.col("__w"), num_hashes, portable))
+
+
+def _materialized(df: DataFrame, caches: list[DataFrame] | None) -> DataFrame:
+    """Compute once a relation that several plan branches read.
+
+    With a ``caches`` list the frame is persisted and appended to it; the
+    CALLER unpersists it after its final action. Without one (the
+    default, which never leaks executor storage across calls) it becomes
+    a lazy local checkpoint: computed by the first stage that needs it,
+    reused by the others, reclaimed by the ContextCleaner when the plan
+    is dropped, with lineage past it truncated. Without either the corpus
+    is re-tokenized and re-hashed once per branch (r14 measured 3 scans
+    of ``documents`` in the near-dup plan, 12 in the prefix plan)."""
+    if caches is None:
+        return df.localCheckpoint(eager=False)
+    df = df.persist()
+    caches.append(df)
+    return df
+
+
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    rows_per_band = num_hashes // bands
+    if bands * rows_per_band != num_hashes:
+        raise ValueError("num_hashes must equal bands * rows_per_band")
+    return rows_per_band
+
+
+def _band_key(sig: Column, band: Column, rows_per_band: int, hashed: bool) -> Column:
+    band_slice = F.slice(sig, band * rows_per_band + 1, rows_per_band)
+    if hashed:
+        return F.xxhash64(band, band_slice)
+    return F.array_join(F.transform(band_slice, lambda x: x.cast("string")), "_")
+
+
+def _banded(
+    df: DataFrame, id_col: str, sig_col: str, bands: int, rows_per_band: int, hashed: bool
+) -> DataFrame:
+    """``(__id, __band, __bkey)``: one fixed-width row per document and
+    LSH band — all that a band join shuffles."""
+    return df.select(
+        F.col(id_col).alias("__id"),
+        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band"),
+        F.col(sig_col).alias("__sig"),
+    ).select(
+        "__id",
+        "__band",
+        _band_key(F.col("__sig"), F.col("__band"), rows_per_band, hashed).alias("__bkey"),
+    )
+
+
 def lsh_candidate_pairs(
     df: DataFrame,
     id_col: str,
@@ -101,18 +191,7 @@ def lsh_candidate_pairs(
     the exact-Jaccard verify removes, so semantics are unchanged; the
     portable/oracle path keeps strings (its SQL mirror reproduces them).
     """
-    band_idx = F.sequence(F.lit(0), F.lit(bands - 1))
-    band_slice = F.slice(F.col("__sig"), F.col("__band") * rows_per_band + 1, rows_per_band)
-    bkey = (
-        F.xxhash64(F.col("__band"), band_slice)
-        if hashed_band_key
-        else F.array_join(F.transform(band_slice, lambda x: x.cast("string")), "_")
-    )
-    banded = df.select(
-        F.col(id_col).alias("__id"),
-        F.explode(band_idx).alias("__band"),
-        F.col(sig_col).alias("__sig"),
-    ).select("__id", "__band", bkey.alias("__bkey"))
+    banded = _banded(df, id_col, sig_col, bands, rows_per_band, hashed_band_key)
     left = banded.alias("a")
     right = banded.alias("b")
     return (
@@ -172,6 +251,72 @@ def jaccard_pair_stats_hoisted(
     return inter, size_a + size_b - inter
 
 
+def _exact_verify(
+    cands: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    threshold: float,
+    id_col: str = "__id",
+    tokens_col: str = "__w",
+    size_col: str | None = None,
+    denominator: str = "union_size",
+    sig_prefilter_margin: float | None = None,
+    num_hashes: int | None = None,
+) -> DataFrame:
+    """Exact set-overlap verify of a candidate pair stream.
+
+    ``cands`` holds two key columns; the token sets of ``left`` (keyed by
+    the first) and ``right`` (keyed by the second) attach with ONE join
+    per side, so the candidate stream — the largest frame in the pipeline,
+    on dup-heavy corpora several times the corpus size — crosses exactly
+    two joins. Each side carries its set size (``size_col``, else computed
+    from the tokens) once per document rather than once per pair.
+
+    ``sig_prefilter_margin``: the sides also carry their ``sig`` and,
+    between the joins' output and the verify, pairs whose unbiased
+    MinHash estimate (agreeing components / ``num_hashes``) is below
+    threshold − margin are dropped — an inline filter, no extra shuffle.
+
+    Returns ``(key_a, key_b, inter_size, union_size, size_a, size_b)``
+    for the pairs with ``inter / denominator ≥ threshold``, tested by
+    integer cross-multiplication in 64 bits, so the comparison is exact
+    and engine-portable."""
+    key_a, key_b = cands.columns
+    prefilter = sig_prefilter_margin is not None
+
+    def side(df: DataFrame, key: str, tag: str) -> DataFrame:
+        size = F.size(tokens_col) if size_col is None else F.col(size_col)
+        cols = [
+            F.col(id_col).alias(key),
+            F.col(tokens_col).alias(f"__w{tag}"),
+            size.alias(f"size_{tag}"),
+        ]
+        if prefilter:
+            cols.append(F.col("sig").alias(f"__s{tag}"))
+        return df.select(*cols)
+
+    joined = cands.join(side(left, key_a, "a"), key_a).join(side(right, key_b, "b"), key_b)
+    if prefilter:
+        est_num = _sig_agreement_unrolled("__sa", "__sb", num_hashes)
+        cut_ppm = int(round((float(threshold) - float(sig_prefilter_margin)) * 1_000_000))
+        joined = joined.filter(est_num * F.lit(1_000_000) >= F.lit(cut_ppm * num_hashes))
+    inter, union = jaccard_pair_stats_hoisted(
+        F.col("__wa"), F.col("__wb"), F.col("size_a"), F.col("size_b")
+    )
+    t_ppm = int(round(float(threshold) * 1_000_000))
+    return joined.select(
+        key_a,
+        key_b,
+        inter.alias("inter_size"),
+        union.alias("union_size"),
+        "size_a",
+        "size_b",
+    ).filter(
+        F.col("inter_size").cast("long") * 1_000_000
+        >= F.lit(t_ppm) * F.col(denominator).cast("long")
+    )
+
+
 def near_dup_pairs(
     docs: DataFrame,
     id_col: str,
@@ -225,105 +370,35 @@ def near_dup_pairs(
     never persists, so repeated calls in a long-lived session cannot
     leak executor storage.
     """
-    rows_per_band = num_hashes // bands
-    if bands * rows_per_band != num_hashes:
-        raise ValueError("num_hashes must equal bands * rows_per_band")
-    if hashed_tokens and portable:
-        raise ValueError("hashed_tokens is a fast-path option; portable mode keeps exact strings")
-    if shingle_n is None:
-        shingles = word_set(text_col)
-    else:
-        from hive_udf_spark.functions.text import ngrams, tokenize
-
-        shingles = F.array_distinct(ngrams(tokenize(text_col), shingle_n))
-    if hashed_tokens:
-        # distinct is preserved under hashing (modulo 64-bit collisions)
-        shingles = F.transform(shingles, lambda t: F.xxhash64(t))
-    # Empty shingle sets are excluded up front: their Jaccard is 0/0
-    # (undefined — and the integer verify `0 >= t·0` would pass it), and
-    # their all-null signatures collide in every band, so N empty docs
-    # would otherwise form an N² candidate clique.
+    rows_per_band = _rows_per_band(num_hashes, bands)
     # A single-split corpus scan (one small parquet file) makes EVERYTHING
     # downstream single-task: the signature transform, the band explode,
     # the 30M-row band-join fan-out AND its partial dedup all inherit the
     # scan's one partition (r15 measured: the candidate stage alone was
     # 6.2 s single-task vs sub-second scattered). Round-robin the cheap
     # text rows up front; no-op once the scan has >= cluster-width splits.
-    docs = ensure_min_parallelism(docs)
-    with_sig = (
-        docs.select(
-            F.col(id_col).alias("__id"),
-            shingles.alias("__ws"),
-        )
-        .filter(F.size("__ws") > 0)
-        .withColumn("sig", minhash_signature(F.col("__ws"), num_hashes, portable))
+    with_sig = _token_sets(
+        ensure_min_parallelism(docs),
+        id_col,
+        text_col,
+        shingle_n=shingle_n,
+        hashed_tokens=hashed_tokens,
+        portable=portable,
+        num_hashes=num_hashes,
     )
-    if caches is not None:
-        with_sig = with_sig.persist()
-        caches.append(with_sig)
-    else:
-        # No caller-managed cache: materialize the signature relation
-        # once anyway (lazy local checkpoint — computed by the first
-        # stage that needs it, reused by the band join and both verify
-        # payload branches, reclaimed by the ContextCleaner when the
-        # plan is dropped). Without this the corpus is re-tokenized and
-        # re-minhashed once per plan branch (r14 measured: documents
-        # scanned 3x in the un-cached plan). Lineage past the
-        # checkpoint is truncated, the same local-materialization
-        # trade-off as the eager localCheckpoints in dedup_clusters.
-        with_sig = with_sig.localCheckpoint(eager=False)
+    # the signature relation feeds the band join and both verify sides
+    with_sig = _materialized(with_sig, caches)
     cands = lsh_candidate_pairs(
         with_sig, "__id", "sig", bands, rows_per_band, hashed_band_key=not portable
     )
-
-    # One join per pair side: signature and token set attach TOGETHER, so
-    # the candidate stream (the largest frame in the pipeline — on
-    # dup-heavy corpora several times the corpus size) crosses exactly two
-    # joins, not four. The prefilter then runs as an inline filter between
-    # the joins — same pruning, zero extra shuffles of the pair stream.
-    need_sig = sig_prefilter_margin is not None
-    # set size rides the payload: it depends only on the document, so it
-    # is computed once per doc here instead of once per candidate pair
-    payload = [F.col("__ws"), F.size("__ws").alias("__n")] + (
-        [F.col("sig")] if need_sig else []
-    )
-    side = with_sig.select(F.col("__id"), F.struct(*payload).alias("__pl"))
-    joined = (
-        cands.join(
-            side.withColumnRenamed("__id", "id_a").withColumnRenamed("__pl", "__pa"),
-            "id_a",
-        )
-        .join(
-            side.withColumnRenamed("__id", "id_b").withColumnRenamed("__pl", "__pb"),
-            "id_b",
-        )
-    )
-    if need_sig:
-        est_num = _sig_agreement_unrolled("__pa.sig", "__pb.sig", num_hashes)
-        # integer cross-multiplication of the unbiased MinHash estimate
-        cut_ppm = int(round((float(threshold) - float(sig_prefilter_margin)) * 1_000_000))
-        joined = joined.filter(est_num * F.lit(1_000_000) >= F.lit(cut_ppm * num_hashes))
-    joined = joined.select(
-        "id_a",
-        "id_b",
-        F.col("__pa.__ws").alias("__wsa"),
-        F.col("__pb.__ws").alias("__wsb"),
-        F.col("__pa.__n").alias("__na"),
-        F.col("__pb.__n").alias("__nb"),
-    )
-    inter, union = jaccard_pair_stats_hoisted(
-        F.col("__wsa"), F.col("__wsb"), F.col("__na"), F.col("__nb")
-    )
-    return (
-        joined.select(
-            "id_a",
-            "id_b",
-            inter.alias("inter_size"),
-            union.alias("union_size"),
-        )
-        # integer cross-multiplication: inter/union >= t  ⟺  inter*K >= t*K*union
-        .filter(F.col("inter_size") * F.lit(1_000_000) >= F.lit(int(threshold * 1_000_000)) * F.col("union_size"))
-    )
+    return _exact_verify(
+        cands,
+        with_sig,
+        with_sig,
+        threshold,
+        sig_prefilter_margin=sig_prefilter_margin,
+        num_hashes=num_hashes,
+    ).select("id_a", "id_b", "inter_size", "union_size")
 
 
 # ---------------------------------------------------------------------------
@@ -337,7 +412,6 @@ def connected_components(
     max_iters: int = 15,
     edges_materialized: bool = False,
     driver_solve_max_edges: int = 1_000_000,
-    broadcast_labels_max_nodes: int = 5_000_000,
 ) -> DataFrame:
     """Min-label propagation connected components on (id_a, id_b) edges.
 
@@ -397,7 +471,7 @@ def connected_components(
     # counting it is cheap; above the cap (map wouldn't fit an executor)
     # fall back to shuffle joins.
     n_nodes = label1.count()
-    bcast = n_nodes <= broadcast_labels_max_nodes
+    bcast = n_nodes <= _BROADCAST_LABELS_MAX_NODES
     l_src = label1.select(F.col("id").alias("src"), F.col("__l1").alias("__la"))
     l_dst = label1.select(F.col("id").alias("dst"), F.col("__l1").alias("__lb"))
     if bcast:
@@ -490,6 +564,19 @@ def connected_components(
     return label1.join(rep, "__l1").select("id", "component")
 
 
+def _clusters(edges: DataFrame, docs: DataFrame, id_col: str) -> DataFrame:
+    """``(id_col, cluster, is_canonical)`` from a checkpointed verified
+    edge list: connected components over every document, the cluster
+    being its minimum id (the canonical member)."""
+    nodes = docs.select(F.col(id_col).alias("id"))
+    comps = connected_components(edges, nodes, edges_materialized=True)
+    return comps.select(
+        F.col("id").alias(id_col),
+        F.col("component").alias("cluster"),
+        (F.col("id") == F.col("component")).alias("is_canonical"),
+    )
+
+
 def dedup_clusters(
     docs: DataFrame,
     id_col: str,
@@ -500,8 +587,7 @@ def dedup_clusters(
     portable: bool = False,
     sig_prefilter_margin: float | None = 0.25,
     hashed_tokens: bool = False,
-    mode: str | None = None,
-    warn_edges: int = 2_000_000,
+    mode: str = "star",
 ) -> DataFrame:
     """Near-dup dedup with linear output: (doc_id, cluster, is_canonical).
 
@@ -521,23 +607,13 @@ def dedup_clusters(
       matters more than cost.
 
     In ``"exact"`` mode a warning is logged when the verified edge list
-    exceeds ``warn_edges`` — the signal that the corpus is in the regime
-    where the default ``mode="star"`` is the right call.
+    exceeds 2M pairs — the signal that the corpus is in the regime where
+    the default ``mode="star"`` is the right call.
 
     The signature cache is scoped: materialized for the edge build, then
     unpersisted as soon as the edge list is checkpointed — nothing stays
     cached after this returns.
     """
-    if mode is None:
-        # the default flipped from "exact" to "star" in r4 — surface the
-        # regime once per call site so pre-r4 pipelines notice the
-        # approximate-clusters semantics change
-        _LOG.info(
-            "dedup_clusters: mode defaulted to 'star' (scale-safe, "
-            "approximate clusters); pass mode='exact' for exact pair "
-            "semantics at quadratic candidate cost"
-        )
-        mode = "star"
     if mode not in ("exact", "star"):
         raise ValueError(f"mode must be 'exact' or 'star', got {mode!r}")
     if mode == "star":
@@ -572,22 +648,16 @@ def dedup_clusters(
     for cached in caches:
         cached.unpersist()
     n_edges = pairs.count()  # checkpointed — counting is cheap
-    if n_edges > warn_edges:
+    if n_edges > _WARN_EDGES:
         _LOG.warning(
-            "dedup_clusters(mode='exact'): %d verified pairs exceed "
-            "warn_edges=%d — this corpus is in the quadratic-bucket regime; "
-            "mode='star' computes the same clusters with linear candidate "
-            "volume (approximate recall).",
+            "dedup_clusters(mode='exact'): %d verified pairs exceed %d — "
+            "this corpus is in the quadratic-bucket regime; mode='star' "
+            "computes the same clusters with linear candidate volume "
+            "(approximate recall).",
             n_edges,
-            warn_edges,
+            _WARN_EDGES,
         )
-    nodes = docs.select(F.col(id_col).alias("id"))
-    comps = connected_components(pairs, nodes, edges_materialized=True)
-    return comps.select(
-        F.col("id").alias(id_col),
-        F.col("component").alias("cluster"),
-        (F.col("id") == F.col("component")).alias("is_canonical"),
-    )
+    return _clusters(pairs, docs, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -659,16 +729,9 @@ def simhash_table(
         packed = packed + F.when(F.col(f"__v{j}") > 0, F.lit(2**j).cast("long")).otherwise(
             F.lit(0).cast("long")
         )
-    out = agg.select("__id", packed.alias("__sh"))
-    if caches is not None:
-        out = out.persist()
-        caches.append(out)
-    else:
-        # downstream self-joins read this table twice; materialize once
-        # (lazy local checkpoint, ContextCleaner-reclaimed) instead of
-        # re-running the token explode + 60-sum aggregate per side
-        out = out.localCheckpoint(eager=False)
-    return out
+    # downstream self-joins read this table twice: compute the token
+    # explode + 60-sum aggregate once, not once per side
+    return _materialized(agg.select("__id", packed.alias("__sh")), caches)
 
 
 def simhash_near_pairs(
@@ -807,45 +870,24 @@ def dedup_clusters_star(
     paths requested through ``dedup_clusters(mode="star", ...)`` are
     honored rather than silently dropped.
     """
-    rows_per_band = num_hashes // bands
-    if bands * rows_per_band != num_hashes:
-        raise ValueError("num_hashes must equal bands * rows_per_band")
-    if hashed_tokens and portable:
-        raise ValueError("hashed_tokens is a fast-path option; portable mode keeps exact strings")
-    shingles = word_set(text_col)
-    if hashed_tokens:
-        # distinct is preserved under hashing (modulo 64-bit collisions)
-        shingles = F.transform(shingles, lambda t: F.xxhash64(t))
+    rows_per_band = _rows_per_band(num_hashes, bands)
     # single-split scan => single-task signature chain, as in
     # near_dup_pairs (r15; no-op at corpus scale). Matched A/B kept this:
     # WITH the scatter the cluster entries measured 3.4/2.6 s vs
     # 14.6/3.4 without in the same session (full-run comparisons were
     # confounded by session-level drift on this box).
     docs = ensure_min_parallelism(docs)
-    with_sig = (
-        docs.select(
-            F.col(id_col).alias("__id"),
-            shingles.alias("__ws"),
-        )
-        # empty word sets: undefined Jaccard + all-null signatures that
-        # bucket together — excluded, as in near_dup_pairs
-        .filter(F.size("__ws") > 0)
-        .withColumn("sig", minhash_signature(F.col("__ws"), num_hashes, portable))
+    with_sig = _token_sets(
+        docs,
+        id_col,
+        text_col,
+        hashed_tokens=hashed_tokens,
+        portable=portable,
+        num_hashes=num_hashes,
     )
     # scoped cache: released below, right after the star edges materialize
     with_sig = with_sig.persist()
-
-    band_slice = F.slice(F.col("__sig"), F.col("__band") * rows_per_band + 1, rows_per_band)
-    bkey = (
-        F.array_join(F.transform(band_slice, lambda x: x.cast("string")), "_")
-        if portable
-        else F.xxhash64(F.col("__band"), band_slice)
-    )
-    banded = with_sig.select(
-        "__id",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band"),
-        F.col("sig").alias("__sig"),
-    ).select("__id", "__band", bkey.alias("__bkey"))
+    banded = _banded(with_sig, "__id", "sig", bands, rows_per_band, not portable)
     # star edges: every member -> bucket minimum (skip singleton buckets)
     bucket_min = banded.groupBy("__band", "__bkey").agg(F.min("__id").alias("__hub"))
     star = (
@@ -854,40 +896,20 @@ def dedup_clusters_star(
         .select(F.col("__hub").alias("id_a"), F.col("__id").alias("id_b"))
         .distinct()
     )
-    # exact-Jaccard verification of the (linear-sized) star edge set; with
-    # a prefilter margin the signature rides along and prunes the payload
-    # join the same way near_dup_pairs does
-    need_sig = sig_prefilter_margin is not None
-    payload = [F.col("__ws"), F.size("__ws").alias("__n")] + (
-        [F.col("sig")] if need_sig else []
-    )
-    side = with_sig.select(F.col("__id"), F.struct(*payload).alias("__pl"))
-    joined = (
-        star.join(side.withColumnRenamed("__id", "id_a").withColumnRenamed("__pl", "__pa"), "id_a")
-        .join(side.withColumnRenamed("__id", "id_b").withColumnRenamed("__pl", "__pb"), "id_b")
-    )
-    if need_sig:
-        est_num = _sig_agreement_unrolled("__pa.sig", "__pb.sig", num_hashes)
-        cut_ppm = int(round((float(threshold) - float(sig_prefilter_margin)) * 1_000_000))
-        joined = joined.filter(est_num * F.lit(1_000_000) >= F.lit(cut_ppm * num_hashes))
-    inter, union = jaccard_pair_stats_hoisted(
-        F.col("__pa.__ws"), F.col("__pb.__ws"), F.col("__pa.__n"), F.col("__pb.__n")
-    )
-    edges = joined.select("id_a", "id_b", inter.alias("__i"), union.alias("__u")).filter(
-        F.col("__i") * F.lit(1_000_000) >= F.lit(int(threshold * 1_000_000)) * F.col("__u")
+    # exact-Jaccard verification of the (linear-sized) star edge set
+    edges = _exact_verify(
+        star,
+        with_sig,
+        with_sig,
+        threshold,
+        sig_prefilter_margin=sig_prefilter_margin,
+        num_hashes=num_hashes,
     ).select("id_a", "id_b")
     # materialize the (small) verified edge list, then drop the signature
     # cache before the CC loop — nothing stays cached after this returns
     edges = edges.localCheckpoint(eager=True)
     with_sig.unpersist()
-
-    nodes = docs.select(F.col(id_col).alias("id"))
-    comps = connected_components(edges, nodes, edges_materialized=True)
-    return comps.select(
-        F.col("id").alias(id_col),
-        F.col("component").alias("cluster"),
-        (F.col("id") == F.col("component")).alias("is_canonical"),
-    )
+    return _clusters(edges, docs, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -914,29 +936,20 @@ def build_minhash_index(
     the index self-contained for exact verification. Empty token sets
     are excluded (undefined 0/0 Jaccard; see near_dup_pairs).
     """
-    shingles = word_set(text_col)
-    if hashed_tokens:
-        if portable:
-            raise ValueError("hashed_tokens is a fast-path option; portable keeps exact strings")
-        shingles = F.transform(shingles, lambda t: F.xxhash64(t))
     # NOT scattered (r15, measured): an ensure_min_parallelism input
     # scatter here improved nothing reliably in the broadcast probe
     # regime (matched runs ~3.3 s either way) and regressed the
     # deliberately broadcast-disabled probe regime 1.3-2x — its SMJ plan
     # re-exchanges the projected columns anyway, so the extra raw-text
     # exchange is pure cost.
-    return (
-        docs.select(F.col(id_col), shingles.alias("tokens"))
-        .filter(F.size("tokens") > 0)
-        .withColumn("sig", minhash_signature(F.col("tokens"), num_hashes, portable))
-    )
-
-
-def _band_key(sig: Column, band: Column, rows_per_band: int, hashed: bool) -> Column:
-    band_slice = F.slice(sig, band * rows_per_band + 1, rows_per_band)
-    if hashed:
-        return F.xxhash64(band, band_slice)
-    return F.array_join(F.transform(band_slice, lambda x: x.cast("string")), "_")
+    return _token_sets(
+        docs,
+        id_col,
+        text_col,
+        hashed_tokens=hashed_tokens,
+        portable=portable,
+        num_hashes=num_hashes,
+    ).select(F.col("__id").alias(id_col), F.col("__w").alias("tokens"), "sig")
 
 
 def probe_minhash_index(
@@ -963,10 +976,7 @@ def probe_minhash_index(
     corpus_id is shuffle-free on that side. Batch-vs-batch pairs are NOT
     emitted (use near_dup_pairs on the batch for those).
     """
-    rows_per_band = num_hashes // bands
-    if bands * rows_per_band != num_hashes:
-        raise ValueError("num_hashes must equal bands * rows_per_band")
-    hashed_key = not portable
+    rows_per_band = _rows_per_band(num_hashes, bands)
     probe = build_minhash_index(
         batch, id_col, text_col, num_hashes, portable, hashed_tokens
     )
@@ -976,14 +986,10 @@ def probe_minhash_index(
     # branch's recompute minimal; materializing full (id, tokens, sig)
     # rows regressed the forced-shuffle bench regime 14% by shipping
     # the unused column through the block store.
-    band_idx = F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band")
 
     def banded(side: DataFrame, role: str) -> DataFrame:
-        s = side.select(F.col(id_col).alias(f"{role}_id"), band_idx, F.col("sig").alias("__s"))
-        return s.select(
-            f"{role}_id",
-            "__band",
-            _band_key(F.col("__s"), F.col("__band"), rows_per_band, hashed_key).alias("__bkey"),
+        return _banded(side, id_col, "sig", bands, rows_per_band, not portable).withColumnRenamed(
+            "__id", f"{role}_id"
         )
 
     cands = (
@@ -992,33 +998,9 @@ def probe_minhash_index(
         .select("batch_id", "corpus_id")
         .distinct()
     )
-    bt = probe.select(
-        F.col(id_col).alias("batch_id"),
-        F.col("tokens").alias("__ta"),
-        F.size("tokens").alias("__na"),
-    )
-    ct = index.select(
-        F.col(id_col).alias("corpus_id"),
-        F.col("tokens").alias("__tb"),
-        F.size("tokens").alias("__nb"),
-    )
-    inter, union = jaccard_pair_stats_hoisted(
-        F.col("__ta"), F.col("__tb"), F.col("__na"), F.col("__nb")
-    )
-    return (
-        cands.join(bt, "batch_id")
-        .join(ct, "corpus_id")
-        .select(
-            "batch_id",
-            "corpus_id",
-            inter.alias("inter_size"),
-            union.alias("union_size"),
-        )
-        .filter(
-            F.col("inter_size") * F.lit(1_000_000)
-            >= F.lit(int(threshold * 1_000_000)) * F.col("union_size")
-        )
-    )
+    return _exact_verify(
+        cands, probe, index, threshold, id_col=id_col, tokens_col="tokens"
+    ).select("batch_id", "corpus_id", "inter_size", "union_size")
 
 
 def prefix_filter_pairs(
@@ -1052,47 +1034,26 @@ def prefix_filter_pairs(
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError("threshold must be in (0, 1]")
-    t_ppm = int(round(threshold * 1_000_000))
     # single-split scan => single-task tokenize/explode chain (r15; no-op
-    # at corpus scale)
-    ws = ensure_min_parallelism(docs).select(
-        F.col(id_col).alias("__id"), word_set(text_col).alias("__w")
-    ).filter(F.size("__w") > 0)
-    if caches is not None:
-        ws = ws.persist()
-        caches.append(ws)
-    else:
-        # materialize the tokenized word-set relation once (lazy local
-        # checkpoint, ContextCleaner-reclaimed): it feeds the frequency
-        # aggregate, the rank join, and both verify sides — without
-        # this the corpus text is re-tokenized per branch (r14
-        # measured: 12 parquet scans of `documents` in one plan).
-        ws = ws.localCheckpoint(eager=False)
+    # at corpus scale). The word sets feed the frequency aggregate, the
+    # rank join and both verify sides.
+    ws = _materialized(_token_sets(ensure_min_parallelism(docs), id_col, text_col), caches)
     ranked = _ranked_by_freq(ws)
     cands = scatter_pairs(_prefix_candidates_from_ranked(ranked, threshold))
-    docs_k = ranked.select(
-        "__id",
-        F.transform(F.col("__rs"), lambda s: s["__k"]).alias("__wk"),
-        F.col("__n"),
+    keys = _ranked_keys(ranked)
+    return _exact_verify(cands, keys, keys, threshold, size_col="__n").select(
+        "id_a",
+        "id_b",
+        F.col("inter_size").cast("long").alias("inter_size"),
+        F.col("union_size").cast("long").alias("union_size"),
     )
-    wa = docs_k.select(
-        F.col("__id").alias("id_a"), F.col("__wk").alias("__wa"), F.col("__n").alias("__na")
-    )
-    wb = docs_k.select(
-        F.col("__id").alias("id_b"), F.col("__wk").alias("__wb"), F.col("__n").alias("__nb")
-    )
-    joined = cands.join(wa, "id_a").join(wb, "id_b")
-    inter, union = jaccard_pair_stats_hoisted(
-        F.col("__wa"), F.col("__wb"), F.col("__na"), F.col("__nb")
-    )
-    return (
-        joined.select(
-            "id_a",
-            "id_b",
-            inter.cast("long").alias("inter_size"),
-            union.cast("long").alias("union_size"),
-        )
-        .filter(F.col("inter_size") * 1_000_000 >= t_ppm * F.col("union_size"))
+
+
+def _token_freq(ws: DataFrame) -> DataFrame:
+    """``(__t, __f)``: the global document frequency of every token of a
+    ``(__id, __w)`` distinct-token relation (partial-counted map-side)."""
+    return ws.select(F.explode("__w").alias("__t")).groupBy("__t").agg(
+        F.count(F.lit(1)).alias("__f")
     )
 
 
@@ -1120,11 +1081,9 @@ def _ranked_by_freq(ws: DataFrame) -> DataFrame:
     No dense rank materialization: a global row_number over the
     vocabulary would be a single-partition window — this stays an
     ordinary shuffle join + per-doc sort, the billion-token shape."""
-    tokens = ws.select(F.explode("__w").alias("__t"))
-    freq = tokens.groupBy("__t").agg(F.count(F.lit(1)).alias("__f"))
     # materialized eagerly: the injectivity guard below must run NOW, and
     # the rank join then reuses the same blocks instead of re-aggregating
-    freq = freq.localCheckpoint(eager=True)
+    freq = _token_freq(ws).localCheckpoint(eager=True)
     n_tok, n_hash = freq.agg(
         F.count(F.lit(1)), F.countDistinct(F.xxhash64("__t"))
     ).collect()[0]
@@ -1152,6 +1111,36 @@ def _ranked_by_freq(ws: DataFrame) -> DataFrame:
     return ranked.localCheckpoint(eager=False)
 
 
+def _ranked_keys(ranked: DataFrame) -> DataFrame:
+    """``(__id, __w, __n)`` from a ``_ranked_by_freq`` relation: each
+    document's token keys — the sets the exact verify intersects."""
+    return ranked.select(
+        "__id", F.transform(F.col("__rs"), lambda s: s["__k"]).alias("__w"), "__n"
+    )
+
+
+def _probe_prefix_len(t_ppm: int) -> Column:
+    """``n − ⌈t·n⌉ + 1``: the prefix of a ``_ranked_by_freq`` row that
+    must hold a token of any set it overlaps in ≥ ⌈t·n⌉ tokens
+    (long-widened: ANSI overflow at int32 n * t_ppm — the pre-r15
+    lesson)."""
+    return (
+        F.col("__n")
+        - F.expr(f"CAST((CAST(__n AS BIGINT) * {t_ppm} + 999999) div 1000000 AS INT)")
+        + F.lit(1)
+    )
+
+
+def _ranked_positions(ranked: DataFrame, prefix_len: Column | None = None) -> DataFrame:
+    """``(__id, __n, __p, __r)``: one row per token of each
+    ``_ranked_by_freq`` row's first ``prefix_len`` tokens (all of them
+    when None), with its 0-based position ``__p`` and join key ``__r``."""
+    rs = F.col("__rs") if prefix_len is None else F.slice("__rs", 1, prefix_len)
+    return ranked.select(
+        "__id", "__n", F.posexplode(rs).alias("__p", "__s")
+    ).select("__id", "__n", "__p", F.col("__s.__k").alias("__r"))
+
+
 def _prefix_candidates_from_ranked(ranked: DataFrame, threshold: float) -> DataFrame:
     """Candidate id pairs from a ``_ranked_by_freq`` relation: the
     AllPairs/PPJoin candidate join with the r15 tightenings —
@@ -1171,13 +1160,6 @@ def _prefix_candidates_from_ranked(ranked: DataFrame, threshold: float) -> DataF
     pair set and the exact verify is unchanged."""
     t_ppm = int(round(threshold * 1_000_000))
     denom = 1_000_000 + t_ppm
-    # probe prefix: n - ceil(t*n) + 1 (long-widened: ANSI overflow at
-    # int32 n * t_ppm — the pre-r15 lesson)
-    plen = (
-        F.col("__n")
-        - F.expr(f"CAST((CAST(__n AS BIGINT) * {t_ppm} + 999999) div 1000000 AS INT)")
-        + F.lit(1)
-    )
     # index (mid) prefix: n - ceil(2t/(1+t)*n) + 1
     ilen = (
         F.col("__n")
@@ -1186,19 +1168,11 @@ def _prefix_candidates_from_ranked(ranked: DataFrame, threshold: float) -> DataF
         )
         + F.lit(1)
     )
-
-    def exploded(prefix_len) -> DataFrame:
-        return ranked.select(
-            "__id",
-            "__n",
-            F.posexplode(F.slice("__rs", 1, prefix_len)).alias("__p", "__s"),
-        ).select("__id", "__n", "__p", F.col("__s.__k").alias("__r"))
-
     # the ranked aggregate's output is byte-small, so AQE coalesces it to
     # ~1 partition and the self-join's fan-out + partial dedup run
     # single-task (r15) — round-robin the skinny exploded prefix rows
-    probe = scatter_pairs(exploded(plen))
-    index = scatter_pairs(exploded(ilen))
+    probe = scatter_pairs(_ranked_positions(ranked, _probe_prefix_len(t_ppm)))
+    index = scatter_pairs(_ranked_positions(ranked, ilen))
     a, b = index.alias("a"), probe.alias("b")
     # alpha = ceil(t/(1+t) * (na+nb)), exact integer rational
     alpha = F.expr(
@@ -1364,93 +1338,54 @@ def containment_pairs(
     if not (0.0 < threshold <= 1.0):
         raise ValueError("threshold must be in (0, 1]")
     t_ppm = int(round(threshold * 1_000_000))
-    if shingle_n is None:
-        unit = word_set(text_col)
-    else:
-        from hive_udf_spark.functions.text import ngrams, tokenize
-
-        unit = F.array_distinct(ngrams(tokenize(text_col), shingle_n))
-    # single-split scan => single-task shingle build (r15; no-op at scale)
-    ws = ensure_min_parallelism(docs).select(
-        F.col(id_col).alias("__id"), unit.alias("__w")
-    ).filter(F.size("__w") > 0)
-    if caches is not None:
-        ws = ws.persist()
-        caches.append(ws)
-    else:
-        # one materialization of the shingle relation for the five plan
-        # branches (frequency, rank join, container side, both verify
-        # sides) — see prefix_filter_pairs; same trade-off.
-        ws = ws.localCheckpoint(eager=False)
-    ranked = _ranked_by_freq(ws)
-    plen = (
-        F.col("__n")
-        - F.expr(f"CAST((CAST(__n AS BIGINT) * {t_ppm} + 999999) div 1000000 AS INT)")
-        + F.lit(1)
+    # single-split scan => single-task shingle build (r15; no-op at scale).
+    # The shingle sets feed five plan branches (frequency, rank join,
+    # container side, both verify sides).
+    ws = _materialized(
+        _token_sets(ensure_min_parallelism(docs), id_col, text_col, shingle_n=shingle_n), caches
     )
-    # probe side: a's prefix WITH positions; container side: b's FULL
+    ranked = _ranked_by_freq(ws)
+    # probe side a: its prefix WITH positions; container side b: its FULL
     # ranked token list with positions — both from the one ranked
     # materialization, keys are the 8-byte hashed ids (string fallback on
     # the astronomically-unlikely vocab collision; see _ranked_by_freq)
-    probe = ranked.select(
-        F.col("__id").alias("id_a"),
-        F.col("__n").alias("__na"),
-        F.posexplode(F.slice("__rs", 1, plen)).alias("__pa", "__s"),
-    ).select("id_a", "__na", "__pa", F.col("__s.__k").alias("__r"))
-    container = ranked.select(
-        F.col("__id").alias("id_b"),
-        F.col("__n").alias("__nb"),
-        F.posexplode(F.col("__rs")).alias("__pb", "__s"),
-    ).select("id_b", "__nb", "__pb", F.col("__s.__k").alias("__r"))
-    probe = scatter_pairs(probe)
-    container = scatter_pairs(container)
+    a = scatter_pairs(_ranked_positions(ranked, _probe_prefix_len(t_ppm))).alias("a")
+    b = scatter_pairs(_ranked_positions(ranked)).alias("b")
     # positional filter (PPJoin adapted to containment): a qualifying
     # (a ⊂~ b) pair needs overlap >= ceil(t*na), all of it at-or-after
     # the first common token in the canonical order — so
     # min(na-pa, nb-pb) >= ceil(t*na) at that token (0-based positions);
     # necessary at the first common token, hence never drops a true pair
     alpha = F.expr(
-        f"CAST((CAST(__na AS BIGINT) * {t_ppm} + 999999) div 1000000 AS BIGINT)"
+        f"CAST((CAST(a.__n AS BIGINT) * {t_ppm} + 999999) div 1000000 AS BIGINT)"
     )
     cands = (
-        probe.join(
-            container,
-            (probe["__r"] == container["__r"])
-            & (F.col("id_a") != F.col("id_b"))
-            & (F.col("__nb").cast("long") * F.lit(1_000_000)
-               >= F.lit(t_ppm) * F.col("__na").cast("long"))
+        a.join(
+            b,
+            (F.col("a.__r") == F.col("b.__r"))
+            & (F.col("a.__id") != F.col("b.__id"))
+            & (F.col("b.__n").cast("long") * F.lit(1_000_000)
+               >= F.lit(t_ppm) * F.col("a.__n").cast("long"))
             & (
                 F.least(
-                    F.col("__na").cast("long") - F.col("__pa"),
-                    F.col("__nb").cast("long") - F.col("__pb"),
+                    F.col("a.__n").cast("long") - F.col("a.__p"),
+                    F.col("b.__n").cast("long") - F.col("b.__p"),
                 )
                 >= alpha
             ),
         )
-        .select("id_a", "id_b")
+        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .distinct()
     )
     cands = scatter_pairs(cands)
-    docs_k = ranked.select(
-        "__id",
-        F.transform(F.col("__rs"), lambda s: s["__k"]).alias("__wk"),
-        F.col("__n"),
-    )
-    wa = docs_k.select(
-        F.col("__id").alias("id_a"), F.col("__wk").alias("__wa"), F.col("__n").alias("__sa")
-    )
-    wb = docs_k.select(
-        F.col("__id").alias("id_b"), F.col("__wk").alias("__wb"), F.col("__n").alias("__sb")
-    )
-    joined = cands.join(wa, "id_a").join(wb, "id_b")
-    inter = F.size(F.array_intersect(F.col("__wa"), F.col("__wb")))
-    out = joined.select(
+    keys = _ranked_keys(ranked)
+    out = _exact_verify(
+        cands, keys, keys, threshold, size_col="__n", denominator="size_a"
+    ).select(
         "id_a",
         "id_b",
-        inter.cast("long").alias("inter_size"),
-        F.col("__sa").cast("long").alias("size_a"),
-        F.col("__sb").cast("long").alias("size_b"),
-    ).filter(F.col("inter_size") * 1_000_000 >= F.lit(t_ppm) * F.col("size_a"))
+        *[F.col(c).cast("long").alias(c) for c in ("inter_size", "size_a", "size_b")],
+    )
     return out.select(
         "*",
         F.expr("(inter_size * 1000000) div size_a").alias("containment_ppm"),

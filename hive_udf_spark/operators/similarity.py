@@ -349,7 +349,20 @@ def embedding_near_pairs_lsh(
     # single-split scan => the quantize + nbits·dim signature arithmetic
     # runs in ONE task (r15, the dedup-family finding); no-op at scale
     vecs = ensure_min_parallelism(vecs)
-    q = vecs.select(F.col(id_col).alias("__id"), quantize_vec(vec_col, scale).alias("__qv"))
+    # the per-pair dot below reads exactly `dim` elements while the norms
+    # fold the whole array, so a vector of any other length would get a
+    # silently wrong cosine: fail the query instead
+    vec = F.col(vec_col)
+    vec = F.when(
+        vec.isNotNull() & (F.size(vec) != dim),
+        F.raise_error(
+            F.concat(
+                F.lit(f"embedding_near_pairs_lsh: {vec_col} must have dim={dim} elements, got "),
+                F.size(vec).cast("string"),
+            )
+        ),
+    ).otherwise(vec)
+    q = vecs.select(F.col(id_col).alias("__id"), quantize_vec(vec, scale).alias("__qv"))
     sigs = q.withColumn("__sig", int_signature_expr(planes))
     if caches is not None:
         sigs = sigs.persist()

@@ -42,10 +42,15 @@ def scatter_pairs(df: DataFrame) -> DataFrame:
 
     The explicit count follows the session's shuffle-partition setting
     (deployment-scaled), and pinning it stops AQE from re-coalescing the
-    exchange. At 100 TB the same skew argument holds and the added
-    shuffle stays proportional to the (id, id) pair count, never to
-    payload bytes."""
-    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    exchange. A non-integer setting (``"auto"`` on some managed
+    platforms) falls back to the context's default parallelism. At
+    100 TB the same skew argument holds and the added shuffle stays
+    proportional to the (id, id) pair count, never to payload bytes."""
+    setting = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
+    try:
+        n = int(setting)
+    except ValueError:
+        n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n)
 
 

@@ -181,45 +181,110 @@ def test_incremental_probe_matches_self_join_cross_pairs(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
+def _exact_jaccard(docs):
+    """Python brute force over every pair of non-empty word sets:
+    ``{(id_a, id_b): (|A∩B|, |A∪B|)}`` with id_a < id_b."""
+    sets = {
+        r.doc_id: set(r.w)
+        for r in docs.select("doc_id", word_set("text").alias("w")).collect()
+        if r.w
+    }
+    ids = sorted(sets)
+    return {
+        (a, b): (len(sets[a] & sets[b]), len(sets[a] | sets[b]))
+        for x, a in enumerate(ids)
+        for b in ids[x + 1 :]
+    }
+
+
+def _passes(inter, union, t):
+    return inter * 1_000_000 >= int(round(t * 1_000_000)) * union
+
+
+def _pair_stats(rows):
+    """``{(id_a, id_b): (inter_size, union_size)}`` of collected pair
+    rows; fails when a pair is emitted more than once."""
+    got = {(r.id_a, r.id_b): (r.inter_size, r.union_size) for r in rows}
+    assert len(got) == len(rows), "duplicate pairs emitted"
+    return got
+
+
+_PREFIX_ROWS = [
+    (1, "common alpha beta gamma delta"),
+    (2, "common alpha beta gamma epsilon"),
+    (3, "common zeta eta theta iota"),
+    (4, "common zeta eta theta kappa"),
+    (5, "totally different words here now"),
+    (6, "common alpha beta gamma delta"),  # exact dup of 1
+]
+
+
 def test_prefix_filter_equals_bruteforce(spark):
-    """Algorithmic completeness: exactly the brute-force pair set, on a
-    corpus engineered with shared rare and common tokens."""
-    from pyspark.sql import functions as F
+    """Algorithmic completeness: exactly the brute-force pair set, with
+    the exact intersection and union sizes, on a corpus engineered with
+    shared rare and common tokens."""
+    from hive_udf_spark.operators.dedup import prefix_filter_pairs
 
-    from hive_udf_spark.functions.text import word_set
-    from hive_udf_spark.operators.dedup import jaccard_pair_stats, prefix_filter_pairs
-
-    rows = [
-        (1, "common alpha beta gamma delta"),
-        (2, "common alpha beta gamma epsilon"),
-        (3, "common zeta eta theta iota"),
-        (4, "common zeta eta theta kappa"),
-        (5, "totally different words here now"),
-        (6, "common alpha beta gamma delta"),  # exact dup of 1
-    ]
-    docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    docs = spark.createDataFrame(_PREFIX_ROWS, ["doc_id", "text"])
+    exact = _exact_jaccard(docs)
     for t in (0.5, 0.6, 0.8, 1.0):
-        got = sorted(
-            (r.id_a, r.id_b)
-            for r in prefix_filter_pairs(docs, "doc_id", "text", threshold=t).collect()
-        )
-        ws = docs.select("doc_id", word_set("text").alias("w"))
-        a, b = ws.alias("a"), ws.alias("b")
-        inter, union = jaccard_pair_stats(F.col("a.w"), F.col("b.w"))
-        want = sorted(
-            (r.id_a, r.id_b)
-            for r in a.join(b, F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("id_a"),
-                F.col("b.doc_id").alias("id_b"),
-                inter.alias("i"),
-                union.alias("u"),
-            )
-            .filter(F.col("i") * 1_000_000 >= int(t * 1_000_000) * F.col("u"))
-            .collect()
-        )
+        got = _pair_stats(prefix_filter_pairs(docs, "doc_id", "text", threshold=t).collect())
+        want = {k: v for k, v in exact.items() if _passes(*v, t)}
         assert got == want, t
 
+
+@pytest.mark.parametrize("hashed_tokens", [False, True])
+@pytest.mark.parametrize("sig_prefilter_margin", [None, 0.25])
+def test_near_dup_pairs_exact_against_bruteforce(
+    spark, sf_dir, hashed_tokens, sig_prefilter_margin
+):
+    """Every pair near_dup_pairs emits carries the exact Python
+    (|A∩B|, |A∪B|) and passes the threshold, on the string and hashed
+    token paths, with and without the signature prefilter. LSH may miss
+    pairs, but the exact duplicates (every band collides) are found."""
+    docs = spark.createDataFrame(_PREFIX_ROWS, ["doc_id", "text"]).unionByName(
+        load_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 5 == 0)
+        .select((F.col("doc_id") + 100).alias("doc_id"), "text")
+    )
+    exact = _exact_jaccard(docs)
+    for t in (0.5, 0.8):
+        got = _pair_stats(
+            near_dup_pairs(
+                docs,
+                "doc_id",
+                "text",
+                threshold=t,
+                hashed_tokens=hashed_tokens,
+                sig_prefilter_margin=sig_prefilter_margin,
+            ).collect()
+        )
+        assert (1, 6) in got
+        for pair, stats in got.items():
+            assert stats == exact[pair], (t, pair)
+            assert _passes(*stats, t), (t, pair)
+
+
+
+def test_threshold_rounds_to_ppm(spark):
+    """The threshold is compared in whole ppm, rounded: 0.518519 * 10**6
+    is 518518.99999999994 in floating point, so truncating would admit a
+    pair of Jaccard 14/27 = 0.5185185... that lies below the threshold."""
+    from hive_udf_spark.operators.dedup import prefix_filter_pairs
+
+    shared = [f"s{i}" for i in range(14)]
+    docs = spark.createDataFrame(
+        [
+            (1, " ".join(shared + [f"a{i}" for i in range(7)])),
+            (2, " ".join(shared + [f"b{i}" for i in range(6)])),
+        ],
+        ["doc_id", "text"],
+    )
+    for pairs in (near_dup_pairs, prefix_filter_pairs):
+        assert _pair_stats(pairs(docs, "doc_id", "text", threshold=0.518518).collect()) == {
+            (1, 2): (14, 27)
+        }, pairs.__name__
+        assert pairs(docs, "doc_id", "text", threshold=0.518519).collect() == [], pairs.__name__
 
 def test_prefix_filter_candidate_reduction(spark):
     """The prefix join must generate far fewer CANDIDATES (pre-verify
@@ -276,15 +341,12 @@ def test_prefix_filter_validation(spark):
 
 def test_prefix_filter_plan_shape(spark):
     """No Python, no cartesian product, and the dup-key freq aggregate
-    partially combines map-side. Since r15 the frequency aggregate is
-    materialized inside an eager localCheckpoint (it feeds the
-    hash-injectivity guard and the rank join), so its partial_count
-    lives in the checkpoint's own plan, not the returned one — assert it
-    on the same aggregate the operator builds."""
-    from pyspark.sql import functions as F
-
-    from hive_udf_spark.functions.text import word_set
-    from hive_udf_spark.operators.dedup import prefix_filter_pairs
+    partially combines map-side. The frequency aggregate is materialized
+    inside an eager localCheckpoint (it feeds the hash-injectivity guard
+    and the rank join), so its partial_count lives in the checkpoint's
+    own plan, not the returned one — assert it on the operator's own
+    frequency aggregate, built from the operator's own token sets."""
+    from hive_udf_spark.operators.dedup import _token_freq, _token_sets, prefix_filter_pairs
 
     docs = spark.createDataFrame(
         [(i, f"tok{i % 7} tok{i % 11} common") for i in range(50)],
@@ -297,9 +359,7 @@ def test_prefix_filter_plan_shape(spark):
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "CartesianProduct" not in plan
     freq_plan = (
-        docs.select(F.explode(word_set("text")).alias("__t"))
-        .groupBy("__t")
-        .agg(F.count(F.lit(1)).alias("__f"))
+        _token_freq(_token_sets(docs, "doc_id", "text"))
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "partial_count" in freq_plan

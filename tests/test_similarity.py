@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from hive_udf_spark.operators.similarity import (
@@ -153,6 +154,25 @@ def test_near_pairs_lsh_high_threshold_planted_dups(spark):
     }
     assert lsh <= exact
     assert len(lsh & exact) / len(exact) >= 0.9
+
+
+def test_near_pairs_lsh_rejects_wrong_dim(spark):
+    """A vector whose length is not ``dim`` fails the query with a clear
+    error instead of getting a cosine whose dot is truncated to ``dim``
+    while its norms use the full length."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import SparkRuntimeException
+
+    from hive_udf_spark.operators.similarity import embedding_near_pairs_lsh
+
+    rows = [(1, [1.0] * 64), (2, [1.0] * 64), (3, [1.0] * 65)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    # both band-join sides fail; when AQE materializes them together the
+    # error arrives wrapped as a multiple-failures Py4JJavaError
+    with pytest.raises((SparkRuntimeException, Py4JJavaError), match="must have dim=64 elements, got 65"):
+        embedding_near_pairs_lsh(df, min_cosine=0.8, dim=64).collect()
+    ok = embedding_near_pairs_lsh(df.filter("vec_id < 3"), min_cosine=0.8, dim=64)
+    assert [(r.id_a, r.id_b) for r in ok.collect()] == [(1, 2)]
 
 
 def test_embedding_dedup_clusters_no_cache_leak_and_valid_partition(spark):
