@@ -1,25 +1,29 @@
-"""Similarity search over embedding columns (BASELINE north star).
+"""Similarity search over embedding columns.
 
-Three tiers:
+Two families, both compiled to JVM expressions only:
 
-* ``topk_dot_quantized`` — brute-force top-k by **integer-quantized dot
-  product**. Quantizing to ints makes the score exact (no float summation
-  order), so results are deterministic and engine-portable — this is the
-  oracle-checkable baseline. Top-k uses two-phase pruning: partition-local
-  row_number ≤ k first, so the final shuffle carries k·P rows per query,
-  not the corpus.
-* ``topk_cosine`` — float cosine via zip_with/aggregate fold (JVM);
-  accuracy-tested against numpy in tests, not oracle-hashed (float ranks
-  are not portable across engines).
-* ``ann_hyperplane_lsh`` — random-hyperplane LSH: sign-bit signatures
-  as a single parsed JVM expression over a literal hyperplane matrix,
-  banded bucket join for candidates, exact cosine re-rank. Approximate;
-  recall is measured in tests against brute force.
+* **Exact integer space** — vectors quantized to ``round(x·scale)``, so
+  every score is an order-independent integer sum that any engine
+  reproduces bit for bit; these are oracle-hashed.
+  ``topk_dot_quantized`` (brute-force top-k by quantized dot),
+  ``embedding_near_pairs`` (the O(n²) all-pairs reference),
+  ``embedding_near_pairs_lsh`` (integer-hyperplane LSH candidates, the
+  same exact verify) and its clustering ``embedding_dedup_clusters``,
+  and the JL projection ``random_projection_quantized``.
+* **Float cosine top-k** — candidate generators feed one exact cosine
+  re-rank and one two-phase top-k (``_cosine_topk``): brute force
+  (``topk_cosine``, every corpus row), random-hyperplane LSH
+  (``ann_hyperplane_lsh``, sign-bit band buckets), IVF (``ann_ivf``,
+  k-means cells) and PQ (``ann_pq``, the ADC top-``refine``). Each side's
+  norm is computed once per vector before the join (``_cosine_side``).
+  Float ranks are not portable across engines, so these are
+  accuracy-tested against numpy instead of oracle-hashed. ``semdedup``
+  applies the same cosine within each IVF cell.
 
-As of round 4 NO operator in this module has a Python stage: hyperplane
-signatures, IVF assignment/probing, and PQ encode/LUT all compile to
-literal-matrix transform/aggregate expressions (numpy appears only in
-driver-side training of centroids/codebooks on bounded samples).
+No operator has a Python stage: hyperplane signatures, IVF assignment
+and probing, and PQ encode/LUT are literal-matrix transform/aggregate
+expressions; numpy appears only in driver-side training of centroids and
+codebooks on a bounded sample (``_training_sample``).
 
 At 100 TB: the corpus side stays partitioned; the query side is small and
 broadcast. LSH bucket joins shuffle (band, bucket) keys only. For IVF-style
@@ -32,7 +36,15 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from hive_udf_spark.operators.dedup import _clusters
+from hive_udf_spark.operators.util import ensure_min_parallelism, scatter_pairs
+
 DEFAULT_QUANT_SCALE = 1000
+# centroids and codebooks train on at most this many hash-sampled vectors
+# (the FAISS recipe: training cost is O(1) in corpus size), for this many
+# Lloyd iterations
+_TRAIN_SIZE = 100_000
+_KMEANS_ITERS = 10
 
 
 def quantize_vec(vec: Column | str, scale: int = DEFAULT_QUANT_SCALE) -> Column:
@@ -104,6 +116,53 @@ def _two_phase_topk(scored: DataFrame, query_key: str, order_cols: list[Column],
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
+def _cosine_side(
+    df: DataFrame, id_col: str, vec: Column, id_name: str, tag: str, *extra: Column
+) -> DataFrame:
+    """``(id_name, __{tag}v, __{tag}n, *extra)``: each vector with its
+    norm, computed once per vector before any join, for
+    ``cosine_with_norms`` on the candidate stream."""
+    return df.select(
+        F.col(id_col).alias(id_name),
+        vec.alias(f"__{tag}v"),
+        norm_double(vec).alias(f"__{tag}n"),
+        *extra,
+    )
+
+
+def _cosine_topk(pairs: DataFrame, k: int) -> DataFrame:
+    """The exact re-rank every float-cosine search ends in: ``pairs``
+    carries a query side (``query_id``, tag ``q``) and a neighbor side
+    (``neighbor_id``, tag ``n``) of :func:`_cosine_side`; returns
+    ``(query_id, neighbor_id, cos_sim, rank)``, the top ``k`` per query
+    by cosine, ties to the lower neighbor id."""
+    scored = pairs.select(
+        "query_id",
+        "neighbor_id",
+        cosine_with_norms(
+            F.col("__qv"), F.col("__nv"), F.col("__qn"), F.col("__nn")
+        ).alias("cos_sim"),
+    )
+    return _two_phase_topk(scored, "query_id", [F.desc("cos_sim"), F.asc("neighbor_id")], k).select(
+        "query_id", "neighbor_id", "cos_sim", "rank"
+    )
+
+
+def _fixed_dim(vec_col: str, dim: int) -> str:
+    """SQL for ``vec_col`` that fails the query on a non-NULL vector whose
+    length is not ``dim``. The fixed-dim expressions in this module (the
+    unrolled per-pair dot, literal-matrix folds whose ``zip_with`` pads
+    the shorter side with NULL) would otherwise give such a vector a
+    silently wrong score, or a NULL one that drops it from every IVF
+    cell."""
+    v = f"`{vec_col}`"
+    return (
+        f"CASE WHEN {v} IS NOT NULL AND size({v}) != {dim} THEN raise_error(concat("
+        f"'{vec_col} must have dim={dim} elements, got ', CAST(size({v}) AS STRING))) "
+        f"ELSE {v} END"
+    )
+
+
 def topk_dot_quantized(
     corpus: DataFrame,
     queries: DataFrame,
@@ -125,8 +184,6 @@ def topk_dot_quantized(
     Exchange + 32-task fan-out, −44% measured), the single-task plan is
     the cheaper one. Dedicated brute-force entries keep the default.
     """
-    from hive_udf_spark.operators.util import ensure_min_parallelism
-
     q = queries.select(
         F.col(id_col).alias("query_id"), quantize_vec(vec_col, scale).alias("__qv")
     )
@@ -294,6 +351,32 @@ def random_projection_quantized(
     return df.select(F.col(id_col), F.expr(proj).alias("proj"))
 
 
+def _band_bits(nbits: int, bands: int) -> int:
+    """Bits per band of an ``nbits`` sign signature split into ``bands``
+    bands. The signature is a sum of ``2**j`` terms in a signed BIGINT, so
+    ``nbits`` above 62 would carry into the wrong bit."""
+    if nbits % bands:
+        raise ValueError("nbits must be divisible by bands")
+    if not (1 <= nbits <= 62):
+        raise ValueError("nbits must fit a signed BIGINT (1..62)")
+    return nbits // bands
+
+
+def _sign_bands(sigs: DataFrame, id_name: str, bands: int, band_bits: int) -> DataFrame:
+    """``(id_name, __band, __bkey)``: one row per band of the ``__sig``
+    signature, keyed by that band's ``band_bits`` bits."""
+    mask = F.lit((1 << band_bits) - 1).cast("long")
+    return (
+        sigs.select(
+            id_name,
+            F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band"),
+            F.col("__sig"),
+        )
+        .withColumn("__bkey", F.expr(f"shiftright(__sig, __band * {band_bits})").bitwiseAND(mask))
+        .select(id_name, "__band", "__bkey")
+    )
+
+
 def embedding_near_pairs_lsh(
     vecs: DataFrame,
     id_col: str = "vec_id",
@@ -336,45 +419,22 @@ def embedding_near_pairs_lsh(
     caches: as in dedup.near_dup_pairs — pass a list to persist the
     signature table across the join branches; caller unpersists.
     """
-    if nbits % bands:
-        raise ValueError("nbits must be divisible by bands")
-    if not (1 <= nbits <= 62):
-        raise ValueError("nbits must fit a signed BIGINT (1..62)")
-    r = nbits // bands
-    mask = F.lit((1 << r) - 1).cast("long")
+    band_bits = _band_bits(nbits, bands)
     planes = int_hyperplanes(dim, nbits, seed, scale)
-
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
     # single-split scan => the quantize + nbits·dim signature arithmetic
     # runs in ONE task (r15, the dedup-family finding); no-op at scale
     vecs = ensure_min_parallelism(vecs)
-    # the per-pair dot below reads exactly `dim` elements while the norms
-    # fold the whole array, so a vector of any other length would get a
-    # silently wrong cosine: fail the query instead
-    vec = F.col(vec_col)
-    vec = F.when(
-        vec.isNotNull() & (F.size(vec) != dim),
-        F.raise_error(
-            F.concat(
-                F.lit(f"embedding_near_pairs_lsh: {vec_col} must have dim={dim} elements, got "),
-                F.size(vec).cast("string"),
-            )
-        ),
-    ).otherwise(vec)
+    # fixed dim: the per-pair dot below reads exactly `dim` elements while
+    # the norms fold the whole array
+    vec = F.expr(_fixed_dim(vec_col, dim))
     q = vecs.select(F.col(id_col).alias("__id"), quantize_vec(vec, scale).alias("__qv"))
     sigs = q.withColumn("__sig", int_signature_expr(planes))
     if caches is not None:
         sigs = sigs.persist()
         caches.append(sigs)
 
-    banded = sigs.select(
-        "__id",
-        F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band"),
-        F.col("__sig"),
-    ).withColumn(
-        "__bkey", F.expr(f"shiftright(__sig, __band * {r})").bitwiseAND(mask)
-    ).select("__id", "__band", "__bkey")
+    banded = _sign_bands(sigs, "__id", bands, band_bits)
     a, b = banded.alias("a"), banded.alias("b")
     cands = (
         a.join(
@@ -386,8 +446,6 @@ def embedding_near_pairs_lsh(
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .distinct()
     )
-
-    from hive_udf_spark.operators.util import scatter_pairs
 
     # byte-tiny pair stream + per-pair dot: round-robin before the verify
     # attach (AQE byte-coalescing + hot-id skew; the dedup-family r15 fix)
@@ -531,55 +589,29 @@ def ann_hyperplane_lsh(
     query-plan-static and oracle-friendly — hyperplane order is random,
     so fixed positions are an unbiased choice. probes ≤ band bits.
     """
-    if nbits % bands:
-        raise ValueError("nbits must be divisible by bands")
-    band_bits = nbits // bands
+    band_bits = _band_bits(nbits, bands)
     if not 0 <= probes <= band_bits:
         raise ValueError("probes must be in [0, nbits/bands]")
-    mask = (1 << band_bits) - 1
-    planes = hyperplanes(dim, nbits, seed)
-    sig = _signature_expr(planes, vec_col)
-
-    def band_keys(df: DataFrame, role: str, n_probes: int = 0) -> DataFrame:
-        s = df.select(F.col(id_col).alias(f"{role}_id"), sig.alias("__sig"))
-        keyed = (
-            s.select(
-                f"{role}_id",
-                F.explode(F.sequence(F.lit(0), F.lit(bands - 1))).alias("__band"),
-                F.col("__sig").alias("__s"),
-            )
-            .withColumn(
-                "__bkey",
-                F.expr(f"shiftright(__s, __band * {band_bits})").bitwiseAND(F.lit(mask)),
-            )
-        )
-        if n_probes:
-            # probe 0 = the exact key; probe j flips bit j-1
-            keyed = keyed.select(
-                f"{role}_id",
-                "__band",
-                F.explode(
-                    F.concat(
-                        F.array(F.col("__bkey")),
-                        F.array(
-                            *[
-                                F.col("__bkey").bitwiseXOR(F.lit(1 << j))
-                                for j in range(n_probes)
-                            ]
-                        ),
-                    )
-                ).alias("__bkey"),
-            )
-        return keyed.select(f"{role}_id", "__band", "__bkey")
-
-    from hive_udf_spark.operators.util import ensure_min_parallelism
+    sig = _signature_expr(hyperplanes(dim, nbits, seed), vec_col)
 
     # single-split corpus scan => the nbits·dim signature expression and
     # the candidate fan-out run in ONE task (r15; no-op at corpus scale).
     # The query side stays unscattered — it is broadcast-sized.
     corpus = ensure_min_parallelism(corpus)
-    qk = band_keys(queries, "query", probes)
-    ck = band_keys(corpus, "neighbor")
+    ck = _sign_bands(
+        corpus.select(F.col(id_col).alias("neighbor_id"), sig.alias("__sig")),
+        "neighbor_id", bands, band_bits,
+    )
+    qk = _sign_bands(
+        queries.select(F.col(id_col).alias("query_id"), sig.alias("__sig")),
+        "query_id", bands, band_bits,
+    )
+    if probes:
+        # probe 0 = the exact key; probe j flips bit j-1
+        flips = [F.col("__bkey").bitwiseXOR(F.lit(1 << j)) for j in range(probes)]
+        qk = qk.select(
+            "query_id", "__band", F.explode(F.array(F.col("__bkey"), *flips)).alias("__bkey")
+        )
     cands = (
         ck.join(
             F.broadcast(qk),
@@ -590,30 +622,9 @@ def ann_hyperplane_lsh(
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm_double(F.col(vec_col)).alias("__qn"),
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm_double(F.col(vec_col)).alias("__cn"),
-    )
-    scored = (
-        cands.join(F.broadcast(qv), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_with_norms(
-                F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-            ).alias("cos_sim"),
-        )
-    )
-    return _two_phase_topk(scored, "query_id", [F.desc("cos_sim"), F.asc("neighbor_id")], k).select(
-        "query_id", "neighbor_id", "cos_sim", "rank"
-    )
+    qv = _cosine_side(queries, id_col, F.col(vec_col), "query_id", "q")
+    nv = _cosine_side(corpus, id_col, F.col(vec_col), "neighbor_id", "n")
+    return _cosine_topk(cands.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id"), k)
 
 
 def embedding_dedup_clusters(
@@ -635,8 +646,6 @@ def embedding_dedup_clusters(
     both scale paths. Deterministic end to end (integer signatures,
     fixed seed): an exact SQL oracle reproduces it including the
     clustering fixpoint."""
-    from hive_udf_spark.operators.dedup import connected_components
-
     caches: list[DataFrame] = []
     pairs = embedding_near_pairs_lsh(
         vecs,
@@ -653,13 +662,7 @@ def embedding_dedup_clusters(
     pairs = pairs.localCheckpoint(eager=True)
     for cached in caches:
         cached.unpersist()
-    nodes = vecs.select(F.col(id_col).alias("id"))
-    comps = connected_components(pairs, nodes, edges_materialized=True)
-    return comps.select(
-        F.col("id").alias(id_col),
-        F.col("component").alias("cluster"),
-        (F.col("id") == F.col("component")).alias("is_canonical"),
-    )
+    return _clusters(pairs, vecs, id_col)
 
 
 def topk_cosine(
@@ -670,32 +673,11 @@ def topk_cosine(
     k: int = 5,
 ) -> DataFrame:
     """Brute-force float-cosine top-k (JVM fold; numpy-verified in tests)."""
-    from hive_udf_spark.operators.util import ensure_min_parallelism
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm_double(F.col(vec_col)).alias("__qn"),
-    )
+    q = _cosine_side(queries, id_col, F.col(vec_col), "query_id", "q")
     # same single-task-crossJoin hazard as topk_dot_quantized
-    c = ensure_min_parallelism(corpus).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__cv"),
-        norm_double(F.col(vec_col)).alias("__cn"),
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_with_norms(
-                F.col("__qv"), F.col("__cv"), F.col("__qn"), F.col("__cn")
-            ).alias("cos_sim"),
-        )
-    )
-    return _two_phase_topk(scored, "query_id", [F.desc("cos_sim"), F.asc("neighbor_id")], k).select(
-        "query_id", "neighbor_id", "cos_sim", "rank"
+    c = _cosine_side(ensure_min_parallelism(corpus), id_col, F.col(vec_col), "neighbor_id", "n")
+    return _cosine_topk(
+        c.crossJoin(F.broadcast(q)).filter(F.col("neighbor_id") != F.col("query_id")), k
     )
 
 
@@ -704,40 +686,44 @@ def topk_cosine(
 # ---------------------------------------------------------------------------
 
 
+def _training_sample(vecs: DataFrame, id_col: str, vec_col: str, seed: int) -> np.ndarray:
+    """The driver-side training set of both trainers, at most
+    ``_TRAIN_SIZE`` vectors as float64 rows.
+
+    The sample is a seeded hash filter (xxhash64(id) mod K == 0 with K
+    sized from a metadata-cheap count), then a sort of the ≈_TRAIN_SIZE
+    SAMPLE for determinism — not a global orderBy of the corpus, which
+    at 100 TB would be a full sort just to take the first 100k rows.
+    Deterministic across runs and partitionings: membership depends only
+    on id hashes, order only on ids."""
+    n_total = vecs.count()  # parquet metadata count — no scan
+    k_mod = max(1, int(n_total) // _TRAIN_SIZE)
+    rows = (
+        vecs.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
+        .filter(F.pmod(F.xxhash64(F.lit(seed), F.col(id_col)), F.lit(k_mod)) == 0)
+        .orderBy("i")
+        .limit(_TRAIN_SIZE)
+        .collect()
+    )
+    return np.asarray([r["v"] for r in rows], dtype=np.float64)
+
+
 def kmeans_centroids(
     vecs: DataFrame,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_centroids: int = 32,
     seed: int = 42,
-    max_iter: int = 10,
-    train_size: int = 100_000,
 ) -> np.ndarray:
     """Deterministic spherical k-means centroids (unit rows), trained on a
-    bounded driver-side sample — the FAISS recipe: IVF coarse quantizers
-    are trained on ~100k vectors regardless of corpus size, so training
-    cost is O(1) in corpus scale.
-
-    The sample is a seeded hash filter (xxhash64(id) mod K == 0 with K
-    sized from a metadata-cheap count), then a sort of the ≈train_size
-    SAMPLE for determinism — not a global orderBy of the corpus, which
-    at 100 TB would be a full sort just to take the first 100k rows.
-    Deterministic across runs and partitionings: membership depends only
-    on id hashes, order only on ids."""
-    n_total = vecs.count()  # parquet metadata count — no scan
-    k_mod = max(1, int(n_total) // int(train_size))
-    rows = (
-        vecs.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
-        .filter(F.pmod(F.xxhash64(F.lit(seed), F.col(id_col)), F.lit(k_mod)) == 0)
-        .orderBy("i")
-        .limit(int(train_size))
-        .collect()
-    )
-    X = np.asarray([r["v"] for r in rows], dtype=np.float64)
+    bounded driver-side sample (:func:`_training_sample`) — the FAISS
+    recipe: IVF coarse quantizers are trained on ~100k vectors regardless
+    of corpus size, so training cost is O(1) in corpus scale."""
+    X = _training_sample(vecs, id_col, vec_col, seed)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     rng = np.random.default_rng(seed)
     C = X[rng.choice(len(X), size=min(n_centroids, len(X)), replace=False)]
-    for _ in range(max_iter):
+    for _ in range(_KMEANS_ITERS):
         assign = np.argmax(X @ C.T, axis=1)
         for j in range(len(C)):
             members = X[assign == j]
@@ -747,18 +733,18 @@ def kmeans_centroids(
     return C
 
 
-def _ivf_cell_expr(centroids: np.ndarray, vec_col: str) -> Column:
-    """INT nearest-centroid id, all JVM. Centroids are unit rows (spherical
-    k-means), so argmax of the raw dot product equals argmax of cosine —
-    no per-row normalization needed."""
-    dots = _dots_sql(f"`{vec_col}`", _dmat_sql(centroids))
+def _ivf_cell_expr(centroids: np.ndarray, vec_sql: str) -> Column:
+    """INT nearest-centroid id of the vector ``vec_sql``, all JVM.
+    Centroids are unit rows (spherical k-means), so argmax of the raw dot
+    product equals argmax of cosine — no per-row normalization needed."""
+    dots = _dots_sql(vec_sql, _dmat_sql(centroids))
     return F.expr(f"CAST({_argbest_sql(dots, len(centroids))} AS INT)")
 
 
-def _ivf_probe_expr(centroids: np.ndarray, vec_col: str, nprobe: int) -> Column:
+def _ivf_probe_expr(centroids: np.ndarray, vec_sql: str, nprobe: int) -> Column:
     """array<int> of the nprobe nearest centroid ids (cosine order, ties
     to lower id — np.argsort(-sims) order), all JVM."""
-    dots = _dots_sql(f"`{vec_col}`", _dmat_sql(centroids))
+    dots = _dots_sql(vec_sql, _dmat_sql(centroids))
     return F.expr(_topn_idx_sql(dots, len(centroids), nprobe))
 
 
@@ -796,36 +782,18 @@ def ann_ivf(
     C = centroids if centroids is not None else kmeans_centroids(
         corpus, id_col, vec_col, n_centroids, seed
     )
-
-    from hive_udf_spark.operators.util import ensure_min_parallelism
-
+    v = _fixed_dim(vec_col, C.shape[1])
     # single-split scan => single-task K·dim cell assignment (r15)
-    corpus = ensure_min_parallelism(corpus)
-    cc = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__nv"),
-        norm_double(F.col(vec_col)).alias("__nn"),
-        _ivf_cell_expr(C, vec_col).alias("__cell"),
+    cc = _cosine_side(
+        ensure_min_parallelism(corpus), id_col, F.expr(v), "neighbor_id", "n",
+        _ivf_cell_expr(C, v).alias("__cell"),
     )
-    cq = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm_double(F.col(vec_col)).alias("__qn"),
-        F.explode(_ivf_probe_expr(C, vec_col, nprobe)).alias("__cell"),
+    cq = _cosine_side(
+        queries, id_col, F.expr(v), "query_id", "q",
+        F.explode(_ivf_probe_expr(C, v, nprobe)).alias("__cell"),
     )
-    scored = (
-        cc.join(F.broadcast(cq), ["__cell"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine_with_norms(
-                F.col("__qv"), F.col("__nv"), F.col("__qn"), F.col("__nn")
-            ).alias("cos_sim"),
-        )
-    )
-    return _two_phase_topk(scored, "query_id", [F.desc("cos_sim"), F.asc("neighbor_id")], k).select(
-        "query_id", "neighbor_id", "cos_sim", "rank"
+    return _cosine_topk(
+        cc.join(F.broadcast(cq), ["__cell"]).filter(F.col("neighbor_id") != F.col("query_id")), k
     )
 
 
@@ -841,24 +809,13 @@ def pq_codebooks(
     n_subspaces: int = 8,
     n_codes: int = 256,
     seed: int = 42,
-    max_iter: int = 10,
-    train_size: int = 100_000,
 ) -> np.ndarray:
     """Per-subspace k-means codebooks, shape (n_subspaces, n_codes,
     sub_dim) — Jégou et al. 2011 product quantization. Trained on the
     same bounded, hash-sampled driver-side set as the IVF coarse
     quantizer (O(1) in corpus scale); deterministic via seeded init.
     """
-    n_total = vecs.count()
-    k_mod = max(1, int(n_total) // int(train_size))
-    rows = (
-        vecs.select(F.col(id_col).alias("i"), F.col(vec_col).alias("v"))
-        .filter(F.pmod(F.xxhash64(F.lit(seed), F.col(id_col)), F.lit(k_mod)) == 0)
-        .orderBy("i")
-        .limit(int(train_size))
-        .collect()
-    )
-    X = np.asarray([r["v"] for r in rows], dtype=np.float64)
+    X = _training_sample(vecs, id_col, vec_col, seed)
     dim = X.shape[1]
     if dim % n_subspaces != 0:
         raise ValueError(f"dim {dim} not divisible by n_subspaces {n_subspaces}")
@@ -868,7 +825,7 @@ def pq_codebooks(
     for s in range(n_subspaces):
         Xs = X[:, s * sub : (s + 1) * sub]
         C = Xs[rng.choice(len(Xs), size=books.shape[1], replace=False)]
-        for _ in range(max_iter):
+        for _ in range(_KMEANS_ITERS):
             d2 = ((Xs[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
             assign = np.argmin(d2, axis=1)
             for j in range(len(C)):
@@ -984,8 +941,6 @@ def ann_pq(
     # corruption)
     n_subspaces, n_codes_eff = int(books.shape[0]), int(books.shape[1])
 
-    from hive_udf_spark.operators.util import ensure_min_parallelism
-
     if codes is not None:
         codes = codes.select(
             F.col(id_col).alias("neighbor_id"), F.col("pq_code").alias("__codes")
@@ -1026,29 +981,9 @@ def ann_pq(
         approx, "query_id", [F.desc("__adc"), F.asc("neighbor_id")], refine
     ).drop("rank")
     # exact re-rank of the refine-sized candidate set
-    qv = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("__qv"),
-        norm_double(F.col(vec_col)).alias("__qn"),
-    )
-    nv = corpus.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("__nv"),
-        norm_double(F.col(vec_col)).alias("__nn"),
-    )
-    rescored = cand.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id").select(
-        "query_id",
-        "neighbor_id",
-        cosine_with_norms(
-            F.col("__qv"), F.col("__nv"), F.col("__qn"), F.col("__nn")
-        ).alias("cos_sim"),
-    )
-    final_w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
-    return (
-        rescored.withColumn("rank", F.row_number().over(final_w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    qv = _cosine_side(queries, id_col, F.col(vec_col), "query_id", "q")
+    nv = _cosine_side(corpus, id_col, F.col(vec_col), "neighbor_id", "n")
+    return _cosine_topk(cand.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id"), k)
 
 
 # ---------------------------------------------------------------------------
@@ -1095,34 +1030,19 @@ def semdedup(
     on cell id and a bounded per-cell join — the right trade when
     near-dup similarity is high (0.9+) and embeddings cluster well.
     """
-    from hive_udf_spark.operators.dedup import connected_components
-
     C = centroids if centroids is not None else kmeans_centroids(
         vecs, id_col, vec_col, n_centroids, seed
     )
-    from hive_udf_spark.operators.util import ensure_min_parallelism
-
+    v = _fixed_dim(vec_col, C.shape[1])
     # single-split scan => single-task K·dim cell assignment AND a
     # single-partition checkpoint that the within-cell self-join inherits
     # (r15; no-op at corpus scale)
-    assigned = ensure_min_parallelism(vecs).select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("__v"),
-        norm_double(F.col(vec_col)).alias("__n"),
-        _ivf_cell_expr(C, vec_col).alias("__cell"),
+    assigned = _cosine_side(
+        ensure_min_parallelism(vecs), id_col, F.expr(v), id_col, "",
+        _ivf_cell_expr(C, v).alias("__cell"),
     ).localCheckpoint(eager=True)
-    a = assigned.select(
-        F.col("id").alias("id_a"),
-        F.col("__v").alias("__va"),
-        F.col("__n").alias("__na"),
-        "__cell",
-    )
-    b = assigned.select(
-        F.col("id").alias("id_b"),
-        F.col("__v").alias("__vb"),
-        F.col("__n").alias("__nb"),
-        "__cell",
-    )
+    a = assigned.toDF("id_a", "__va", "__na", "__cell")
+    b = assigned.toDF("id_b", "__vb", "__nb", "__cell")
     pairs = (
         a.join(b, ["__cell"])
         .filter(F.col("id_a") < F.col("id_b"))
@@ -1137,13 +1057,7 @@ def semdedup(
     )
     if internals is not None:
         internals.append(pairs)
-    nodes = assigned.select("id")
-    comps = connected_components(pairs, nodes, edges_materialized=True)
     # assigned's checkpoint blocks stay until the ContextCleaner drops the
     # unreferenced RDD — an eager unpersist here could strand the returned
     # plan on missing blocks in CC branches that don't re-checkpoint nodes.
-    return comps.select(
-        F.col("id").alias(id_col),
-        F.col("component").alias("cluster"),
-        (F.col("id") == F.col("component")).alias("is_canonical"),
-    )
+    return _clusters(pairs, assigned, id_col)

@@ -1,9 +1,11 @@
 #!/usr/bin/env python
 """Record, and compare between two checkouts, the executed plans of the
-set-similarity join entry points in ``operators/dedup.py``.
+set-similarity joins in ``operators/dedup.py`` and the vector-search
+operators in ``operators/similarity.py``.
 
-Each entry point runs on the ``documents`` table of ``--sf`` under its
-own job group with the event log on. From the log it records, per entry
+Each entry point runs on the ``documents`` (dedup) or ``embeddings``
+(similarity) table of ``--sf`` under its own job group with the event
+log on. From the log it records, per entry
 point, the AQE-final plan of every SQL execution the call starts (plan
 build plus collect), read with ``perfbench.eventlog.final_plans``, as a
 tree of operator names with each Exchange's partitioning kind, and the
@@ -11,8 +13,8 @@ number of Spark jobs; from the collected output, its schema, row count
 and an order-insensitive row digest.
 
 Usage:
-    python scripts/dedup_plan_shapes.py --repo CHECKOUT --sf DIR --out shapes.json
-    python scripts/dedup_plan_shapes.py --compare old.json new.json
+    python scripts/plan_shapes.py --repo CHECKOUT --sf DIR --out shapes.json
+    python scripts/plan_shapes.py --compare old.json new.json
 
 ``--repo`` is the checkout whose ``hive_udf_spark`` is imported (default:
 this one), so a second checkout of an older commit can be recorded with
@@ -84,13 +86,20 @@ def record(repo: str, sf: str, out: str) -> None:
     from pyspark.sql import functions as F
 
     from hive_udf_spark.operators import dedup as D
+    from hive_udf_spark.operators import similarity as S
     from hive_udf_spark.session import get_spark
     from hive_udf_spark.sources import load_table
 
-    spark = get_spark("dedup-plan-shapes", shuffle_partitions=8)
+    spark = get_spark("plan-shapes", shuffle_partitions=8)
     docs = load_table(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
+    emb = load_table(spark, sf, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 10 == 0)
+    # trained outside every job group: the cases that take them record
+    # search plans only, while ann_pq and semdedup below train inline
+    centroids = S.kmeans_centroids(emb, n_centroids=8)
+    books = S.pq_codebooks(emb, n_subspaces=8, n_codes=16)
     cases = {
         "near_dup_pairs": lambda: D.near_dup_pairs(docs, "doc_id", "text"),
         "near_dup_pairs_portable": lambda: D.near_dup_pairs(docs, "doc_id", "text", portable=True),
@@ -111,8 +120,20 @@ def record(repo: str, sf: str, out: str) -> None:
         "containment_pairs": lambda: D.containment_pairs(
             docs, "doc_id", "text", threshold=0.8, shingle_n=3
         ),
+        "topk_cosine": lambda: S.topk_cosine(emb, queries, k=5),
+        "ann_ivf": lambda: S.ann_ivf(emb, queries, k=5, nprobe=2, centroids=centroids),
+        "ann_hyperplane_lsh": lambda: S.ann_hyperplane_lsh(emb, queries, k=5),
+        "ann_hyperplane_lsh_probes": lambda: S.ann_hyperplane_lsh(emb, queries, k=5, probes=2),
+        "ann_pq": lambda: S.ann_pq(emb, queries, k=5, n_codes=16, refine=20),
+        "ann_pq_codes": lambda: S.ann_pq(
+            emb, queries, k=5, refine=20, books=books, codes=S.pq_encode(emb, books)
+        ),
+        "embedding_near_pairs_lsh": lambda: S.embedding_near_pairs_lsh(emb, min_cosine=0.35),
+        "embedding_dedup_clusters": lambda: S.embedding_dedup_clusters(emb, min_cosine=0.35),
+        "semdedup": lambda: S.semdedup(emb, min_cosine=0.35, n_centroids=8),
     }
     docs.count()  # one-off session work stays out of the first case
+    emb.count()
     result = {}
     for name, build in cases.items():
         spark.sparkContext.setJobGroup(name, name)

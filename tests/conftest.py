@@ -17,3 +17,8 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def sf_dir_med():
+    return SF_DIR_MED

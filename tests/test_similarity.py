@@ -175,6 +175,87 @@ def test_near_pairs_lsh_rejects_wrong_dim(spark):
     assert [(r.id_a, r.id_b) for r in ok.collect()] == [(1, 2)]
 
 
+def test_ivf_and_semdedup_reject_wrong_dim(spark):
+    """A vector whose length is not the centroids' dim fails the query on
+    either side of ``ann_ivf`` and in ``semdedup``, instead of getting
+    cell -1 (dropped from every probe) or a NULL cosine; NULL vectors
+    still pass through."""
+    from py4j.protocol import Py4JJavaError
+    from pyspark.errors import SparkRuntimeException
+
+    from hive_udf_spark.operators.similarity import ann_ivf, semdedup
+
+    C = np.eye(2, 64)
+    schema = "vec_id long, embedding array<float>"
+    ok = [(1, [1.0] * 64), (2, [1.0, 0.5] * 32), (3, None)]
+    good = spark.createDataFrame(ok, schema)
+    for n in (65, 63):
+        bad = spark.createDataFrame(ok + [(4, [1.0] * n)], schema)
+        for run in (
+            lambda: ann_ivf(bad, good, k=2, nprobe=2, centroids=C),
+            lambda: ann_ivf(good, bad, k=2, nprobe=2, centroids=C),
+            lambda: semdedup(bad, min_cosine=0.9, centroids=C),
+        ):
+            # AQE may wrap the error as a multiple-failures Py4JJavaError
+            with pytest.raises(
+                (SparkRuntimeException, Py4JJavaError), match=f"must have dim=64 elements, got {n}"
+            ):
+                run().collect()
+    got = ann_ivf(good, good, k=2, nprobe=2, centroids=C).collect()
+    # the NULL query probes every cell and scores NULL; the NULL corpus
+    # vector is in no cell
+    assert {(r.query_id, r.neighbor_id) for r in got if r.cos_sim is not None} == {(1, 2), (2, 1)}
+    assert len(semdedup(good, min_cosine=0.9, centroids=C).collect()) == 3
+
+
+@pytest.mark.parametrize("nbits, bands", [(64, 4), (66, 6), (0, 4)])
+def test_sign_band_operators_reject_nbits_outside_bigint(spark, sf_dir, nbits, bands):
+    """The sign signature is a sum of 2**j terms in a signed BIGINT, so
+    both LSH operators refuse nbits outside 1..62 before planning."""
+    from hive_udf_spark.operators.similarity import embedding_near_pairs_lsh
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    with pytest.raises(ValueError, match=r"1\.\.62"):
+        ann_hyperplane_lsh(emb, emb, nbits=nbits, bands=bands)
+    with pytest.raises(ValueError, match=r"1\.\.62"):
+        embedding_near_pairs_lsh(emb, nbits=nbits, bands=bands)
+
+
+def test_ann_rerank_tail_matches_brute_force_exactly(spark, sf_dir_med):
+    """Every cosine search ends in the same exact re-rank: with every IVF
+    cell probed, or a PQ refine covering the corpus, the rows equal
+    ``topk_cosine``'s bit for bit. LSH rows carry the numpy cosine and
+    contiguous ranks in (cos desc, id asc) order."""
+    from hive_udf_spark.operators.similarity import ann_ivf, ann_pq, kmeans_centroids
+
+    emb = load_table(spark, sf_dir_med, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    n_rows = emb.count()
+
+    def rows(df):
+        return sorted(df.select("query_id", "rank", "neighbor_id", "cos_sim").collect())
+
+    brute = rows(topk_cosine(emb, queries, k=5))
+    assert len(brute) == 5 * queries.count()
+    C = kmeans_centroids(emb, n_centroids=8)
+    assert rows(ann_ivf(emb, queries, k=5, nprobe=8, centroids=C)) == brute
+    assert rows(ann_pq(emb, queries, k=5, n_codes=16, refine=n_rows)) == brute
+
+    ids, V = _load_np(spark, sf_dir_med)
+    row_of = {int(i): r for r, i in enumerate(ids)}
+    Vn = V / np.linalg.norm(V, axis=1, keepdims=True)
+    by_query: dict[int, list] = {}
+    for r in ann_hyperplane_lsh(emb, queries, k=5, nbits=16, bands=4).collect():
+        want = float(Vn[row_of[r.query_id]] @ Vn[row_of[r.neighbor_id]])
+        assert abs(r.cos_sim - want) < 1e-9
+        by_query.setdefault(r.query_id, []).append((r.rank, -r.cos_sim, r.neighbor_id))
+    assert by_query
+    for got in by_query.values():
+        got.sort()
+        assert [rank for rank, _, _ in got] == list(range(1, len(got) + 1))
+        assert [g[1:] for g in got] == sorted(g[1:] for g in got)
+
+
 def test_embedding_dedup_clusters_no_cache_leak_and_valid_partition(spark):
     """Cluster output covers every vector exactly once, canonical = min
     id per cluster, and no cached frames survive the call."""
