@@ -21,10 +21,13 @@ from pyspark.sql import functions as F
 PORTABLE_HASH_BITS = 60
 
 
+def _col(c: Column | str) -> Column:
+    return F.col(c) if isinstance(c, str) else c
+
+
 def fast_hash64(col: Column | str, seed: int = 0) -> Column:
     """xxhash64(seed, x) — fast, Spark-native, not engine-portable."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.xxhash64(F.lit(seed), c)
+    return F.xxhash64(F.lit(seed), _col(col))
 
 
 def portable_hash60(col: Column | str, seed: int = 0) -> Column:
@@ -33,8 +36,7 @@ def portable_hash60(col: Column | str, seed: int = 0) -> Column:
     DuckDB equivalent (exact same values):
         ('0x' || substr(md5(seed || ':' || x), 1, 15))::BIGINT
     """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.conv(F.substring(F.md5(F.concat(F.lit(f"{seed}:"), c)), 1, 15), 16, 10).cast("long")
+    return F.conv(F.substring(F.md5(F.concat(F.lit(f"{seed}:"), _col(col))), 1, 15), 16, 10).cast("long")
 
 
 def portable_hash60_sql(expr: str, seed: int = 0) -> str:

@@ -35,14 +35,11 @@ Standard error ≈ 1.04/√m.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hive_udf_spark.functions.hashing import (
-    PORTABLE_HASH_BITS,
-    portable_hash60,
-    portable_hash60_sql,
-)
+from hive_udf_spark.functions.hashing import portable_hash60_sql
+from hive_udf_spark.functions.pcsa import _bucket_rank, _rank_bits
 
 __all__ = [
     "hllp_table",
@@ -77,24 +74,6 @@ def _check_m(m: int) -> int:
     return m.bit_length() - 1  # b
 
 
-def _max_rank(m: int) -> int:
-    """K: the saturation rank — (60-b) suffix bits give ranks 1..60-b,
-    plus one for the all-zero suffix."""
-    return PORTABLE_HASH_BITS - (m.bit_length() - 1) + 1
-
-
-def _bucket_rank(col: Column, m: int, seed: int) -> tuple[Column, Column]:
-    b = m.bit_length() - 1
-    h = portable_hash60(col, seed)
-    bucket = h.bitwiseAND(F.lit(m - 1))
-    reduced = F.shiftright(h, b)
-    low = reduced.bitwiseAND(-reduced)
-    rank = F.when(reduced == 0, F.lit(_max_rank(m))).otherwise(
-        F.bit_count(low - F.lit(1)) + F.lit(1)
-    )
-    return bucket, rank
-
-
 def hllp_table(
     df: DataFrame,
     group_cols: list[str],
@@ -113,10 +92,11 @@ def hllp_table(
     lc_table/kmv_table/pcsa_table discipline."""
     _check_m(m)
     c = F.col(col)
+    # HLL's rho is PCSA's trailing-zero rank plus one (saturating at K)
     bucket, rank = _bucket_rank(c, m, seed)
     return (
         df.filter(c.isNotNull())
-        .select(*group_cols, bucket.alias("bucket"), rank.cast("int").alias("__r"))
+        .select(*group_cols, bucket.alias("bucket"), (rank + F.lit(1)).cast("int").alias("__r"))
         .groupBy(*group_cols, "bucket")
         .agg(F.max("__r").alias("rank"))
     )
@@ -144,7 +124,7 @@ def hllp_estimate(
     UDAFCardinalityEstimator.java:335-337). Engine-portable: see the
     module docstring's exact-dyadic-sum argument."""
     _check_m(m)
-    k = _max_rank(m)
+    k = _rank_bits(m) + 1
     per_group = sketch.groupBy(*group_cols).agg(
         F.count(F.lit(1)).alias("__nb"),
         # coalesce: a global (group_cols=[]) aggregate over an EMPTY
@@ -179,7 +159,7 @@ def hllp_estimate_sql(
     """DuckDB SQL reproducing hllp_table + hllp_estimate bit-for-bit."""
     _check_m(m)
     b = m.bit_length() - 1
-    k = _max_rank(m)
+    k = _rank_bits(m) + 1
     h = portable_hash60_sql(value_expr, seed)
     alpha_m2_2k = repr(hllp_alpha(m) * float(m) * float(m) * float(2.0**k))
     return f"""

@@ -21,10 +21,14 @@ operations"):
     normalized by the hash range). RSE ≈ 1/√(k−2).
 
 Why these are pure relational plans and not an agg Column like
-``approx_distinct``: Catalyst has no bounded bottom-k aggregate, and
-``collect_set`` alone holds every distinct value per group. Instead the
-build mirrors the reference's PARTIAL1→FINAL protocol
-(UDAFCardinalityEstimator.java:276-317) *relationally*:
+``approx_distinct``: ``collect_set`` alone holds every distinct value per
+group. pyspark 4.1 ships a bounded distinct-value aggregate,
+``theta_sketch_agg``, but its sketch is DataSketches bytes over Spark's
+own hash, which no other engine rebuilds. The sorted ``array<bigint>`` of
+portable hashes stays: the DuckDB oracles reproduce it bit-for-bit and
+the benchmark reads it as an array. The build mirrors the reference's
+PARTIAL1→FINAL protocol (UDAFCardinalityEstimator.java:276-317)
+*relationally*:
 
   partial:  bottom-k per (group, input partition) — map-side, bounded by
             min(k, partition rows) per group, no shuffle of raw values;
@@ -45,13 +49,14 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from hive_udf_spark.functions.hashing import PORTABLE_HASH_BITS, portable_hash60, portable_hash60_sql
+from hive_udf_spark.functions.hashing import PORTABLE_HASH_BITS, _col, portable_hash60, portable_hash60_sql
 
 KMV_DEFAULT_K = 64
 _HASH_RANGE = float(2**PORTABLE_HASH_BITS)
 
 
 def _bottom_k(values: Column, k: int) -> Column:
+    """The k smallest elements, ascending (structs order field by field)."""
     return F.slice(F.array_sort(values), 1, k)
 
 
@@ -79,12 +84,7 @@ def kmv_table(
     partials = base.groupBy(*group_cols, "__pid").agg(
         _bottom_k(F.collect_set("__h"), k).alias("__p")
     )
-    merged = (
-        partials.select(*group_cols, F.explode("__p").alias("__h"))
-        .groupBy(*group_cols)
-        .agg(_bottom_k(F.collect_set("__h"), k).alias("kmv"))
-    )
-    return merged.select(*group_cols, "kmv", kmv_estimate("kmv", k).alias("est_kmv"))
+    return kmv_merge_table(partials, group_cols, "__p", k)
 
 
 def kmv_estimate(sketch: Column | str, k: int) -> Column:
@@ -96,7 +96,7 @@ def kmv_estimate(sketch: Column | str, k: int) -> Column:
     of two (exact in double) and division is correctly rounded, so
     identical inputs give identical floors.
     """
-    s = F.col(sketch) if isinstance(sketch, str) else sketch
+    s = _col(sketch)
     n = F.size(s)
     kth = F.element_at(s, k).cast("double")
     return (
@@ -120,9 +120,7 @@ def kmv_union(a: Column | str, b: Column | str, k: int) -> Column:
     sets. Lossless w.r.t. the bottom-k contract — merging per-day
     sketches gives the identical sketch a direct pass would build
     (UDAFCardinalityEstimator.java:259-265's rollup, exactly)."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return _bottom_k(F.array_distinct(F.concat(ca, cb)), k)
+    return _bottom_k(F.array_distinct(F.concat(_col(a), _col(b))), k)
 
 
 def kmv_merge_table(
@@ -149,8 +147,7 @@ def kmv_jaccard(a: Column | str, b: Column | str, k: int) -> Column:
     two small exact integers, so engine-portable bit-for-bit. Both
     sketches empty ⇒ 0/0: J(∅, ∅) is defined as 0 here (matching
     kmv_difference_estimate's empty-sketch contract), never NULL."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
+    ca, cb = _col(a), _col(b)
     x = kmv_union(ca, cb, k)
     inter = F.size(F.array_intersect(x, F.array_intersect(ca, cb)))
     return F.when(
@@ -165,8 +162,7 @@ def kmv_intersect_estimate(a: Column | str, b: Column | str, k: int) -> Column:
     this is non-negative by construction. Both sketches empty ⇒ the
     intersection is provably 0 — returned as 0, not NULL (the module's
     uniform empty-sketch contract)."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
+    ca, cb = _col(a), _col(b)
     x = kmv_union(ca, cb, k)
     return (
         F.when(
@@ -189,8 +185,7 @@ def kmv_difference_estimate(a: Column | str, b: Column | str, k: int) -> Column:
     Non-negative by construction, deterministic given the sketches, and
     a ratio of small exact integers times the portable union estimate —
     engine-reproducible bit-for-bit like the other KMV ops."""
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
+    ca, cb = _col(a), _col(b)
     x = kmv_union(ca, cb, k)
     frac = F.size(F.array_intersect(x, F.array_except(ca, cb))).cast(
         "double"

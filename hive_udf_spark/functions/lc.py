@@ -17,10 +17,11 @@ Execution design (SURVEY.md §4.3):
     Python anywhere. This is the 100 TB path.
   * **Facade path** — ``lc_agg``: additionally materializes the bitmap
     bytes (the re-aggregable ``binary`` field of the reference's result
-    struct) via ``collect_set(bucket)`` + one Arrow-batched scalar pandas
-    UDF per *group result row* (not per input row). Use when sketches are
-    persisted for later rollup; prefer ``lc_cardinality`` when only the
-    number is needed.
+    struct) from native ``bitmap_construct_agg`` chunks of 4 KiB each,
+    whose fixed buffers OR-merge map-side; no Python in the plan. Use when
+    sketches are persisted for later rollup; prefer ``lc_cardinality``
+    when only the number is needed. ``lc_table`` is the relational form
+    for large maps: its shuffle carries only the occupied 64-bit words.
 
 Serialized format (explicit + versioned, unlike the reference's
 BytesWritable padding that needs ``.trim()`` at :308/:372):
@@ -43,9 +44,16 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from hive_udf_spark.functions.hashing import _col
+from hive_udf_spark.functions.sketch import _sketch_struct
+
 _MAGIC = b"SGLC"
 _VERSION = 1
 _HEADER = len(_MAGIC) + 1 + 4  # magic + version + size_bytes
+
+
+def _header(size_bytes: int) -> bytes:
+    return _MAGIC + bytes([_VERSION]) + _struct.pack("<I", size_bytes)
 
 
 # ---------------------------------------------------------------------------
@@ -86,18 +94,26 @@ class LCSketch:
         return out
 
     def to_bytes(self) -> bytes:
-        return _MAGIC + bytes([_VERSION]) + _struct.pack("<I", self.size_bytes) + self.bits.tobytes()
+        return _header(self.size_bytes) + self.bits.tobytes()
 
     @classmethod
     def from_bytes(cls, data: bytes) -> "LCSketch":
         if data[: len(_MAGIC)] != _MAGIC:
             raise ValueError("not an SGLC sketch (bad magic)")
+        if len(data) < _HEADER:
+            raise ValueError(f"SGLC header truncated: {len(data)} of {_HEADER} bytes")
         version = data[len(_MAGIC)]
         if version != _VERSION:
             raise ValueError(f"unsupported SGLC version {version}")
         (size_bytes,) = _struct.unpack_from("<I", data, len(_MAGIC) + 1)
+        # stored sketches are outside input: a cut or padded blob would
+        # otherwise load with a short bitmap and estimate wrongly
+        if len(data) != _HEADER + size_bytes:
+            raise ValueError(
+                f"SGLC sketch of {size_bytes} bitmap bytes carries {len(data) - _HEADER}"
+            )
         sk = cls(size_bytes)
-        sk.bits = np.frombuffer(data[_HEADER : _HEADER + size_bytes], dtype=np.uint8).copy()
+        sk.bits = np.frombuffer(data[_HEADER:], dtype=np.uint8).copy()
         return sk
 
 
@@ -107,6 +123,13 @@ def lc_estimate_from_occupied(occupied: int, m: int) -> int:
     if empty <= 0:
         return m  # bitmap saturated; LC is out of its operating range
     return int(round(-m * math.log(empty / m)))
+
+
+def _lc_estimate(occupied: Column, m: int) -> Column:
+    """:func:`lc_estimate_from_occupied` as a Column expression (bigint)."""
+    return F.when(occupied >= F.lit(m), F.lit(m).cast("long")).otherwise(
+        F.round(-F.lit(float(m)) * F.log((F.lit(m).cast("double") - occupied) / F.lit(float(m)))).cast("long")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -123,7 +146,7 @@ def lc_bucket(col: Column | str, size_bytes: int) -> Column:
     NULL value is NULL and every downstream consumer (count_distinct,
     bitmap_construct_agg, the isNotNull filters in lc_table /
     lc_two_phase) drops it."""
-    c = F.col(col) if isinstance(col, str) else col
+    c = _col(col)
     return F.when(
         c.isNotNull(), F.pmod(F.xxhash64(c), F.lit(int(size_bytes) * 8))
     )
@@ -137,14 +160,8 @@ def lc_cardinality(col: Column | str, size_bytes: int = 1_000_000) -> Column:
     the shuffle regardless of input size — the same O(m) bound as the
     reference's bitmap. NULL for empty groups (reference :329-331).
     """
-    c = F.col(col) if isinstance(col, str) else col
-    m = int(size_bytes) * 8
-    occupied = F.count_distinct(lc_bucket(c, size_bytes))
-    est = F.when(
-        occupied >= F.lit(m), F.lit(m).cast("long")  # saturated
-    ).otherwise(
-        F.round(-F.lit(float(m)) * F.log((F.lit(m).cast("double") - occupied) / F.lit(float(m)))).cast("long")
-    )
+    c = _col(col)
+    est = _lc_estimate(F.count_distinct(lc_bucket(c, size_bytes)), int(size_bytes) * 8)
     return F.when(F.count(c) > F.lit(0), est).otherwise(F.lit(None)).alias("lc_cardinality")
 
 
@@ -178,11 +195,10 @@ def lc_agg(col: Column | str, size_bytes: int = 1_000_000) -> Column:
     occupancy; for sparse corpus-scale sketch tables :func:`lc_table`
     (occupied-words-only shuffle) is still the lighter relational path.
     """
-    c = F.col(col) if isinstance(col, str) else col
+    c = _col(col)
     size_bytes = int(size_bytes)
     if size_bytes <= 0:
         raise ValueError("size_bytes must be positive")
-    m = size_bytes * 8
     bucket = lc_bucket(c, size_bytes)
     chunks = []
     occupied = None
@@ -199,21 +215,12 @@ def lc_agg(col: Column | str, size_bytes: int = 1_000_000) -> Column:
         chunks.append(bm)
         cnt = F.bitmap_count(chunks[-1])
         occupied = cnt if occupied is None else occupied + cnt
-    est = F.when(
-        occupied >= F.lit(m), F.lit(m).cast("long")
-    ).otherwise(
-        F.round(
-            -F.lit(float(m))
-            * F.log((F.lit(m).cast("double") - occupied) / F.lit(float(m)))
-        ).cast("long")
-    )
-    header = _MAGIC + bytes([_VERSION]) + _struct.pack("<I", size_bytes)
-    struct = F.struct(
-        F.lit("LC").alias("type"),
-        est.cast("long").alias("cardinality"),
-        F.concat(F.lit(header), *chunks).alias("binary"),
-    )
-    return F.when(F.count(c) > F.lit(0), struct).otherwise(F.lit(None)).alias("approx_distinct")
+    return _sketch_struct(
+        "LC",
+        F.count(c) > F.lit(0),
+        _lc_estimate(occupied, size_bytes * 8),
+        F.concat(F.lit(_header(size_bytes)), *chunks),
+    ).alias("approx_distinct")
 
 
 def _word_le_hex(word: Column) -> Column:
@@ -259,7 +266,6 @@ def lc_table(
     """
     if size_bytes <= 0 or size_bytes % 8 != 0:
         raise ValueError("size_bytes must be a positive multiple of 8 (whole 64-bit words)")
-    m = int(size_bytes) * 8
     n_words = size_bytes // 8
     gcols = [F.col(g) for g in group_cols]
     buckets = df.select(
@@ -275,15 +281,6 @@ def lc_table(
         F.sum(F.bit_count("__word")).alias("__occupied"),
         F.sort_array(F.collect_list(F.struct("__w", "__word"))).alias("__we"),
     )
-    est = F.when(
-        F.col("__occupied") >= F.lit(m), F.lit(m).cast("long")
-    ).otherwise(
-        F.round(
-            -F.lit(float(m))
-            * F.log((F.lit(m).cast("double") - F.col("__occupied")) / F.lit(float(m)))
-        ).cast("long")
-    )
-    header = _MAGIC + bytes([_VERSION]) + _struct.pack("<I", int(size_bytes))
     # Dense-bitmap assembly is a LINEAR run-length emit over the sorted
     # occupied-word entries: each entry contributes (zero-run since the
     # previous occupied word) + its own 8 hex bytes, then one trailing
@@ -318,12 +315,14 @@ def lc_table(
         ).cast("int"),
     )
     dense_hex = F.concat(F.array_join(runs, ""), trailing)
+    # every group here has a value, so its sketch is present
     return per_group.select(
         *group_cols,
-        F.struct(
-            F.lit("LC").alias("type"),
-            est.alias("cardinality"),
-            F.concat(F.lit(header), F.unhex(dense_hex)).alias("binary"),
+        _sketch_struct(
+            "LC",
+            F.lit(True),
+            _lc_estimate(F.col("__occupied"), int(size_bytes) * 8),
+            F.concat(F.lit(_header(int(size_bytes))), F.unhex(dense_hex)),
         ).alias("approx_distinct"),
     )
 
@@ -355,12 +354,11 @@ def lc_merge_agg(sketch_binary: Column | str) -> Column:
     (SURVEY.md §4.3) — but the rows being shuffled here are already-reduced
     sketches (one per group per day, say), so the shuffle volume is tiny.
     """
-    c = F.col(sketch_binary) if isinstance(sketch_binary, str) else sketch_binary
-    merged = _lc_merge_bytes_agg(c)
-    return F.struct(
-        F.lit("LC").alias("type"),
-        lc_estimate_bytes(merged).alias("cardinality"),
-        merged.alias("binary"),
+    merged = _lc_merge_bytes_agg(_col(sketch_binary))
+    # present = merged bytes not NULL, read in the projection after the
+    # aggregate: a pandas grouped-agg cannot share an .agg with count
+    return _sketch_struct(
+        "LC", merged.isNotNull(), lc_estimate_bytes(merged), merged
     ).alias("sketch_merge")
 
 
@@ -394,12 +392,9 @@ def lc_two_phase(
     """
     from collections.abc import Iterator
 
-    from pyspark.sql import functions as FF
-
     keyed = df.select(
-        *[FF.col(k) for k in key_cols],
-        lc_bucket(FF.col(value_col), size_bytes).alias("__bucket"),
-    ).filter(FF.col("__bucket").isNotNull())
+        *key_cols, lc_bucket(value_col, size_bytes).alias("__bucket")
+    ).filter(F.col("__bucket").isNotNull())
 
     key_fields = ", ".join(f"`{k}` {dict(df.dtypes)[k]}" for k in key_cols)
     partial_schema = f"{key_fields}, __sketch binary"
@@ -420,16 +415,7 @@ def lc_two_phase(
             yield pd.DataFrame(out)
 
     partials = keyed.mapInPandas(partial, schema=partial_schema)
-
-    @F.pandas_udf(T.BinaryType())
-    def merge_bytes(blobs: pd.Series) -> bytes:
-        merged: LCSketch | None = None
-        for raw in blobs:
-            sk = LCSketch.from_bytes(bytes(raw))
-            merged = sk if merged is None else merged.merge(sk)
-        return merged.to_bytes() if merged is not None else None
-
-    merged = partials.groupBy(*key_cols).agg(merge_bytes(F.col("__sketch")).alias("__m"))
+    merged = partials.groupBy(*key_cols).agg(_lc_merge_bytes_agg(F.col("__sketch")).alias("__m"))
     return merged.select(
         *key_cols, lc_estimate_bytes(F.col("__m")).alias("lc_estimate")
     )

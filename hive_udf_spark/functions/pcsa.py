@@ -83,6 +83,8 @@ def _frac_pow2_neg_literals(m: int) -> list[float]:
 
 
 def _bucket_rank(col: Column, m: int, seed: int) -> tuple[Column, Column]:
+    """Register index and trailing-zero rank of the portable hash; the
+    register model PCSA (bit per rank) and HyperLogLog (max rank + 1) share."""
     # m is a power of two, so bucket/reduce are exact bit ops (a double
     # division would lose low bits of the 60-bit hash)
     h = portable_hash60(col, seed)

@@ -1,13 +1,14 @@
 """Mergeable quantile-sample sketch (coordinated bottom-k row sample).
 
 Fourth sketch family beside HLL/LC (cardinality) and KMV (distinct
-sets): re-aggregable QUANTILES. Spark's ``percentile_approx`` computes
-grouped quantiles with an internal mergeable summary, but that summary
-is not exposed as data — you cannot store per-day quantile state and
-roll it up later, the way the reference stores cardinality sketches
-({type, cardinality, binary}) for re-aggregation
-(UDAFCardinalityEstimator.java:259-265). This module fills that gap with
-the simplest sketch whose merge is EXACT:
+sets): re-aggregable QUANTILES, stored per day and rolled up later the
+way the reference stores cardinality sketches ({type, cardinality,
+binary}) for re-aggregation (UDAFCardinalityEstimator.java:259-265).
+pyspark 4.1 also exposes a mergeable quantile summary as data
+(``kll_sketch_agg_*``), but as DataSketches bytes that no other engine
+rebuilds. This module keeps the simplest sketch whose merge is EXACT, as
+a plain array: the DuckDB oracles reproduce it bit-for-bit and the
+benchmark reads it directly:
 
   sketch = the k rows with the smallest ``hash(row_key)``, kept as
   ``array<struct<h, v>>`` sorted by hash, plus the exact row count.
@@ -21,11 +22,12 @@ as ``kmv_table``. Quantile estimates read the sampled values at the
 scaled rank; rank error is the binomial bound ~ √(q(1−q)/k)
 (tests/test_qsketch.py measures it).
 
-Relational PARTIAL→FINAL build, exactly the kmv_table discipline:
-map-side bottom-k per (group, input partition), then one shuffle of
-≤k-pair arrays per group per partition — raw rows never shuffle. With
-``portable=True`` the hash is md5-based, so a DuckDB oracle reproduces
-sketch, merge, and quantile bit-for-bit (the strongest §5.2 check form).
+Relational PARTIAL→FINAL build, the kmv_table discipline: a map-side
+rank-filtered window keeps bottom-k per (group, input partition), then
+one shuffle of ≤k-pair arrays per group per partition — raw rows never
+shuffle. With ``portable=True`` the hash is md5-based, so a DuckDB
+oracle reproduces sketch, merge, and quantile bit-for-bit (the strongest
+§5.2 check form).
 
 Values are BIGINT (quantize floats to integer cents/ppm first — the
 repo-wide convention for engine-exact numerics).
@@ -35,16 +37,12 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
-from hive_udf_spark.functions.hashing import fast_hash64, portable_hash60
+from hive_udf_spark.functions.hashing import _col, fast_hash64, portable_hash60
+from hive_udf_spark.functions.kmv import _bottom_k
 
 QSKETCH_DEFAULT_K = 256
-
-
-def _bottom_k_pairs(pairs: Column, k: int) -> Column:
-    # struct sort orders by field position: h first, then v — the same
-    # (h, v) order the oracle's ROW_NUMBER() OVER (ORDER BY h, v) uses
-    return F.slice(F.array_sort(pairs), 1, k)
 
 
 def quantile_sketch_table(
@@ -55,7 +53,6 @@ def quantile_sketch_table(
     k: int = QSKETCH_DEFAULT_K,
     portable: bool = False,
     seed: int = 5,
-    bounded_buffer: bool = True,
 ) -> DataFrame:
     """Per-group quantile sketches: ``group_cols + (qs: array<struct<h,v>>,
     n_rows: bigint)``.
@@ -65,21 +62,13 @@ def quantile_sketch_table(
     (reference null-row semantics). ``group_cols=[]`` builds one global
     sketch.
 
-    Memory contract (r4 verdict finding 3; default flipped r6 per r5
-    verdict item 6): the DEFAULT ``bounded_buffer=True`` plan holds a
-    strict map-side bound — a rank-filtered window per (group,
-    partition) that Spark plans as a map-side Partial WindowGroupLimit
-    (spillable external sort keeping only k rows per cell), with the
-    exact row count taken by a separate scalar aggregation. Its extra
-    scan benched 0.95× the single-pass mode on parquet-sized partitions
-    at sf0.1 (SCALE_NOTES r6), i.e. free. ``bounded_buffer=False``
-    keeps the single-pass plan: one scan, but the partial
-    ``collect_list`` buffers every (group, partition) pair before
-    trimming to k — the SHUFFLE is still bounded (≤k pairs per group
-    per input partition) while the map-side aggregation buffer is
-    O(rows in the partition), degrading via ObjectHashAggregate's
-    sort-based spill fallback on fat partitions. Both modes produce
-    IDENTICAL sketches (pytest-pinned).
+    Memory contract: a strict map-side bound — a rank-filtered window
+    per (group, partition) that Spark plans as a map-side Partial
+    WindowGroupLimit (spillable external sort keeping only k rows per
+    cell), with the exact row count taken by a separate aggregation. A
+    single-pass ``collect_list`` would buffer every row of a fat
+    partition before trimming to k; the extra scan costs nothing on
+    parquet-sized partitions (SCALE_NOTES r6).
     """
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -89,55 +78,37 @@ def quantile_sketch_table(
         F.struct(h.alias("h"), F.col(value_col).cast("bigint").alias("v")).alias("__p"),
         F.spark_partition_id().alias("__pid"),
     )
-    if bounded_buffer:
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy(*group_cols, "__pid").orderBy("__p")
-        trimmed = (
-            base.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") <= k)
-            .drop("__rn")
-        )
-        sample = (
-            trimmed.groupBy(*group_cols, "__pid")
-            .agg(F.collect_list("__p").alias("__s"))  # already ≤k per cell
-            .groupBy(*group_cols)
-            .agg(_bottom_k_pairs(F.flatten(F.collect_list("__s")), k).alias("qs"))
-        )
-        counts = base.groupBy(*group_cols).agg(
-            F.count("*").cast("bigint").alias("n_rows")
-        )
-        if group_cols:
-            from hive_udf_spark.operators.util import null_safe_cond
-
-            return sample.join(counts, null_safe_cond(sample, counts, group_cols)).select(
-                *[sample[g] for g in group_cols], sample["qs"], counts["n_rows"]
-            )
-        # global form: both sides are exactly one row (counts is 0 on
-        # empty input, sample an empty array — same contract as default)
-        return sample.crossJoin(counts).select("qs", "n_rows")
-    partials = base.groupBy(*group_cols, "__pid").agg(
-        _bottom_k_pairs(F.collect_list("__p"), k).alias("__s"),
-        F.count("*").alias("__n"),
+    w = Window.partitionBy(*group_cols, "__pid").orderBy("__p")
+    trimmed = (
+        base.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= k)
+        .drop("__rn")
     )
-    finals = (
-        partials.select(*group_cols, "__n", "__s")
+    # struct sort orders by field position: h first, then v — the same
+    # (h, v) order the oracle's ROW_NUMBER() OVER (ORDER BY h, v) uses
+    sample = (
+        trimmed.groupBy(*group_cols, "__pid")
+        .agg(F.collect_list("__p").alias("__s"))  # already ≤k per cell
         .groupBy(*group_cols)
-        .agg(
-            _bottom_k_pairs(F.flatten(F.collect_list("__s")), k).alias("qs"),
-            # global form (group_cols=[]) still emits one row on empty
-            # input (standard global-agg semantics): an empty sketch with
-            # n_rows 0, whose quantiles are NULL (qsketch_quantile)
-            F.coalesce(F.sum("__n"), F.lit(0)).cast("bigint").alias("n_rows"),
-        )
+        .agg(_bottom_k(F.flatten(F.collect_list("__s")), k).alias("qs"))
     )
-    return finals
+    counts = base.groupBy(*group_cols).agg(
+        F.count("*").cast("bigint").alias("n_rows")
+    )
+    if group_cols:
+        from hive_udf_spark.operators.util import null_safe_cond
+
+        return sample.join(counts, null_safe_cond(sample, counts, group_cols)).select(
+            *[sample[g] for g in group_cols], sample["qs"], counts["n_rows"]
+        )
+    # global form: both sides are exactly one row on empty input too (an
+    # empty sketch with n_rows 0, whose quantiles are NULL)
+    return sample.crossJoin(counts).select("qs", "n_rows")
 
 
 def qsketch_values(sketch: Column | str) -> Column:
     """Sampled values of a sketch, sorted ascending (array<bigint>)."""
-    s = F.col(sketch) if isinstance(sketch, str) else sketch
-    return F.array_sort(F.transform(s, lambda p: p.getField("v")))
+    return F.array_sort(F.transform(_col(sketch), lambda p: p.getField("v")))
 
 
 def qsketch_quantile(sketch: Column | str, q: float) -> Column:
@@ -166,7 +137,8 @@ def qsketch_merge_table(
         df.select(*group_cols, F.col(n_col).alias("__n"), F.col(sketch_col).alias("__s"))
         .groupBy(*group_cols)
         .agg(
-            _bottom_k_pairs(F.flatten(F.collect_list("__s")), k).alias("qs"),
-            F.sum("__n").cast("bigint").alias("n_rows"),
+            _bottom_k(F.flatten(F.collect_list("__s")), k).alias("qs"),
+            # an empty global input still counts 0 rows, as a build does
+            F.coalesce(F.sum("__n"), F.lit(0)).cast("bigint").alias("n_rows"),
         )
     )

@@ -39,6 +39,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from hive_udf_spark.functions.hashing import _col
+
 # Defaults mirrored from UDAFCardinalityEstimator.java:89-90.
 HLL_DEFAULT_B = 16
 LC_DEFAULT_SIZE = 1_000_000
@@ -49,8 +51,13 @@ _KINDS = ("hll", "lc")
 _HLL_B_MIN, _HLL_B_MAX = 4, 21
 
 
-def _col(c: Column | str) -> Column:
-    return F.col(c) if isinstance(c, str) else c
+def _sketch_struct(kind: str, present: Column, cardinality: Column, binary: Column) -> Column:
+    """The re-aggregable result ``{type, cardinality, binary}``, NULL
+    where ``present`` is false (UDAFCardinalityEstimator.java:329-331)."""
+    return F.when(
+        present,
+        F.struct(F.lit(kind).alias("type"), cardinality.alias("cardinality"), binary.alias("binary")),
+    )
 
 
 def approx_distinct(col: Column | str, kind: str = "hll", b: int | None = None) -> Column:
@@ -78,16 +85,12 @@ def approx_distinct(col: Column | str, kind: str = "hll", b: int | None = None) 
         if not (_HLL_B_MIN <= b <= _HLL_B_MAX):
             raise ValueError(f"HLL b (lgConfigK) must be in [{_HLL_B_MIN},{_HLL_B_MAX}], got {b}")
         sketch = F.hll_sketch_agg(c, F.lit(b))
-        struct = F.struct(
-            F.lit("HLL").alias("type"),
-            F.hll_sketch_estimate(sketch).alias("cardinality"),
-            sketch.alias("binary"),
-        )
-        # Empty group (or all-null input) → NULL, like the reference.
-        return F.when(F.count(c) > F.lit(0), struct).otherwise(F.lit(None)).alias("approx_distinct")
+        return _sketch_struct(
+            "HLL", F.count(c) > F.lit(0), F.hll_sketch_estimate(sketch), sketch
+        ).alias("approx_distinct")
     from hive_udf_spark.functions import lc
 
-    return lc.lc_agg(c, size_bytes=b or LC_DEFAULT_SIZE)
+    return lc.lc_agg(c, size_bytes=LC_DEFAULT_SIZE if b is None else b)
 
 
 def sketch_merge_agg(sketch_struct: Column | str, strict: bool = False) -> Column:
@@ -106,12 +109,9 @@ def sketch_merge_agg(sketch_struct: Column | str, strict: bool = False) -> Colum
     """
     s = _col(sketch_struct)
     merged = F.hll_union_agg(s.getField("binary"), not strict)
-    struct = F.struct(
-        F.lit("HLL").alias("type"),
-        F.hll_sketch_estimate(merged).alias("cardinality"),
-        merged.alias("binary"),
-    )
-    return F.when(F.count(s) > F.lit(0), struct).otherwise(F.lit(None)).alias("sketch_merge")
+    return _sketch_struct(
+        "HLL", F.count(s) > F.lit(0), F.hll_sketch_estimate(merged), merged
+    ).alias("sketch_merge")
 
 
 def approx_distinct_on(

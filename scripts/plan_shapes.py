@@ -1,16 +1,19 @@
 #!/usr/bin/env python
 """Record, and compare between two checkouts, the executed plans of the
-set-similarity joins in ``operators/dedup.py`` and the vector-search
-operators in ``operators/similarity.py``.
+set-similarity joins in ``operators/dedup.py``, the vector-search
+operators in ``operators/similarity.py`` and the sketch builds and merges
+in ``functions/{sketch,lc,kmv,qsketch,hllp,pcsa}.py``.
 
-Each entry point runs on the ``documents`` (dedup) or ``embeddings``
-(similarity) table of ``--sf`` under its own job group with the event
-log on. From the log it records, per entry
-point, the AQE-final plan of every SQL execution the call starts (plan
-build plus collect), read with ``perfbench.eventlog.final_plans``, as a
-tree of operator names with each Exchange's partitioning kind, and the
-number of Spark jobs; from the collected output, its schema, row count
-and an order-insensitive row digest.
+Each entry point runs on the ``documents`` (dedup), ``embeddings``
+(similarity) or ``events`` (sketches) table of ``--sf`` under its own job
+group with the event log on. The merge cases read sketch tables built and
+collected before the first case, so they record merge plans only. From
+the log it records, per entry point, the AQE-final plan of every SQL
+execution the call starts (plan build plus collect), read with
+``perfbench.eventlog.final_plans``, as a tree of operator names with
+each Exchange's partitioning kind, and the number of Spark jobs; from the
+collected output, its schema, row count and an order-insensitive row
+digest.
 
 Usage:
     python scripts/plan_shapes.py --repo CHECKOUT --sf DIR --out shapes.json
@@ -85,6 +88,12 @@ def record(repo: str, sf: str, out: str) -> None:
     sys.path.insert(0, repo)
     from pyspark.sql import functions as F
 
+    from hive_udf_spark.functions import hllp as H
+    from hive_udf_spark.functions import kmv as KMV
+    from hive_udf_spark.functions import lc as LC
+    from hive_udf_spark.functions import pcsa as P
+    from hive_udf_spark.functions import qsketch as Q
+    from hive_udf_spark.functions import sketch as SK
     from hive_udf_spark.operators import dedup as D
     from hive_udf_spark.operators import similarity as S
     from hive_udf_spark.session import get_spark
@@ -100,6 +109,19 @@ def record(repo: str, sf: str, out: str) -> None:
     # search plans only, while ann_pq and semdedup below train inline
     centroids = S.kmeans_centroids(emb, n_centroids=8)
     books = S.pq_codebooks(emb, n_subspaces=8, n_codes=16)
+    ev = load_table(spark, sf, "events").select(
+        "event_id", "user_id", "event_type", F.to_date("ts").alias("day"),
+        F.col("value").cast("bigint").alias("value"),
+    )
+    g = ["event_type", "day"]
+
+    def stored(df):
+        return spark.createDataFrame(df.collect(), df.schema)
+
+    hll_in = stored(SK.approx_distinct_table(ev, g, "user_id"))
+    lc_in = stored(LC.lc_table(ev, g, "user_id", size_bytes=8192))
+    kmv_in = stored(KMV.kmv_table(ev, g, "user_id", k=64))
+    qs_in = stored(Q.quantile_sketch_table(ev, g, "value", "event_id", k=64))
     cases = {
         "near_dup_pairs": lambda: D.near_dup_pairs(docs, "doc_id", "text"),
         "near_dup_pairs_portable": lambda: D.near_dup_pairs(docs, "doc_id", "text", portable=True),
@@ -131,6 +153,19 @@ def record(repo: str, sf: str, out: str) -> None:
         "embedding_near_pairs_lsh": lambda: S.embedding_near_pairs_lsh(emb, min_cosine=0.35),
         "embedding_dedup_clusters": lambda: S.embedding_dedup_clusters(emb, min_cosine=0.35),
         "semdedup": lambda: S.semdedup(emb, min_cosine=0.35, n_centroids=8),
+        "approx_distinct_table_hll": lambda: SK.approx_distinct_table(ev, g, "user_id"),
+        "approx_distinct_table_lc_agg": lambda: SK.approx_distinct_table(ev, g, "user_id", kind="lc", b=8192),
+        "approx_distinct_table_lc_table": lambda: SK.approx_distinct_table(ev, g, "user_id", kind="lc", b=65536),
+        "sketch_merge_agg": lambda: hll_in.groupBy("event_type").agg(SK.sketch_merge_agg("approx_distinct")),
+        "lc_merge_agg": lambda: lc_in.groupBy("event_type").agg(LC.lc_merge_agg("approx_distinct.binary")),
+        "kmv_table": lambda: KMV.kmv_table(ev, g, "user_id", k=64),
+        "kmv_merge_table": lambda: KMV.kmv_merge_table(kmv_in, ["event_type"], "kmv", 64),
+        "quantile_sketch_table": lambda: Q.quantile_sketch_table(ev, g, "value", "event_id", k=64),
+        "quantile_sketch_table_global": lambda: Q.quantile_sketch_table(ev, [], "value", "event_id", k=64),
+        "qsketch_merge_table": lambda: Q.qsketch_merge_table(qs_in, ["event_type"], "qs", "n_rows", 64),
+        "hllp_estimate": lambda: H.hllp_estimate(H.hllp_table(ev, g, "user_id"), g),
+        "pcsa_estimate": lambda: P.pcsa_estimate(P.pcsa_table(ev, g, "user_id"), g),
+        "lc_two_phase": lambda: LC.lc_two_phase(ev, g, "user_id", size_bytes=8192),
     }
     docs.count()  # one-off session work stays out of the first case
     emb.count()

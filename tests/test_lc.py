@@ -29,6 +29,18 @@ def test_lcsketch_roundtrip_and_algebra():
     assert b.merge(a).to_bytes() == m.to_bytes()
 
 
+def test_lcsketch_from_bytes_rejects_wrong_length():
+    """A stored blob whose length disagrees with its header is refused,
+    not loaded with a short bitmap."""
+    sk = LCSketch(16)
+    sk.set_buckets(np.array([1, 77]))
+    blob = sk.to_bytes()
+    assert LCSketch.from_bytes(blob).estimate() == sk.estimate() == 2
+    for bad in (blob[:-8], blob + b"\0", blob[:6]):
+        with pytest.raises(ValueError):
+            LCSketch.from_bytes(bad)
+
+
 def test_lcsketch_incompatible_merge_raises():
     with pytest.raises(ValueError, match="different sizes"):
         LCSketch(1024).merge(LCSketch(2048))
@@ -226,7 +238,8 @@ def test_lc_table_storage_roundtrip(spark, sf_dir, tmp_path):
 def test_lc_null_skipping_semantics(spark):
     """NULL rows never set a bucket (reference :238-240): mixed groups
     don't gain a phantom distinct, all-NULL groups produce no lc_table
-    row / a NULL lc_agg struct, and the SQL macro agrees."""
+    row / a NULL lc_agg struct that merges to a NULL lc_merge_agg struct
+    (as sketch_merge_agg does for HLL), and the SQL macro agrees."""
     import hive_udf_spark as hus
     from hive_udf_spark.functions.lc import lc_agg, lc_cardinality, lc_table
 
@@ -239,9 +252,11 @@ def test_lc_null_skipping_semantics(spark):
         for r in df.groupBy("g").agg(lc_cardinality("x", 1024).alias("e")).collect()
     }
     assert est == {"g1": 1, "g2": None}
-    rows = {r.g: r.approx_distinct for r in
-            df.groupBy("g").agg(lc_agg("x", 1024).alias("approx_distinct")).collect()}
+    sketches = df.groupBy("g").agg(lc_agg("x", 1024).alias("approx_distinct"))
+    rows = {r.g: r.approx_distinct for r in sketches.collect()}
     assert rows["g1"].cardinality == 1 and rows["g2"] is None
+    merged = sketches.groupBy("g").agg(lc_merge_agg("approx_distinct.binary").alias("m"))
+    assert {r.g: r.m for r in merged.collect()} == {"g1": rows["g1"], "g2": None}
     t = lc_table(df, ["g"], "x", size_bytes=1024)
     got = {r.g: r.approx_distinct.cardinality for r in t.collect()}
     assert got == {"g1": 1}  # all-NULL group emits no row

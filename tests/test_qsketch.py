@@ -2,9 +2,12 @@
 
 from __future__ import annotations
 
+from collections import defaultdict
+
 import pytest
 from pyspark.sql import functions as F
 
+from hive_udf_spark.functions.hashing import fast_hash64
 from hive_udf_spark.functions.qsketch import (
     qsketch_merge_table,
     qsketch_quantile,
@@ -82,6 +85,10 @@ def test_null_skip_and_validation(spark):
         .collect()[0]
     )
     assert row2.n_rows == 0 and row2.q is None
+    # merging the (empty) table of per-group sketches gives the same row
+    stored = quantile_sketch_table(empty, ["v"], "v", "v", k=8)
+    row3 = qsketch_merge_table(stored, [], "qs", "n_rows", 8).collect()
+    assert len(row3) == 1 and list(row3[0].qs) == [] and row3[0].n_rows == 0
 
 
 def test_qsketch_plan_partial_before_exchange_no_python(spark, sf_dir):
@@ -137,53 +144,61 @@ def test_qsketch_sql_scalars_parity(spark, sf_dir):
     assert [ (p.h, p.v) for p in two ] == [ (p.h, p.v) for p in direct ]
 
 
-def test_bounded_buffer_mode_identical_and_windowgrouplimit(spark, sf_dir):
-    """bounded_buffer=True (r4 verdict finding 3) must produce the
-    bit-identical sketch via a map-side Partial WindowGroupLimit plan —
-    strict O(k) per-cell state instead of the default's O(partition-rows)
-    collect_list buffer — including over an artificially fat single
-    partition and on empty global input."""
-    orders = _orders_cents(spark, sf_dir)
-    a = quantile_sketch_table(orders, ["o_orderpriority"], "cents", "o_orderkey", k=64)
-    b = quantile_sketch_table(
-        orders, ["o_orderpriority"], "cents", "o_orderkey", k=64, bounded_buffer=True
+def _reference_sketches(df, group_cols, value_col, key_col, k):
+    """Per group: the k smallest (h, v) pairs and the non-NULL row count,
+    computed in Python from the collected (group, fast_hash64(key, 5), v)
+    rows. A global input always has its one group, even when empty."""
+    rows = (
+        df.filter(F.col(value_col).isNotNull())
+        .select(*group_cols, fast_hash64(key_col, 5).alias("h"), F.col(value_col).cast("bigint").alias("v"))
+        .collect()
     )
-    key = lambda df: {
-        r.o_orderpriority: ([(p.h, p.v) for p in r.qs], r.n_rows) for r in df.collect()
-    }
-    assert key(a) == key(b)
-    plan = b._jdf.queryExecution().executedPlan().toString()
+    pairs = defaultdict(list)
+    if not group_cols:
+        pairs[()] = []
+    for r in rows:
+        pairs[tuple(r[g] for g in group_cols)].append((r.h, r.v))
+    return {g: (sorted(p)[:k], len(p)) for g, p in pairs.items()}
+
+
+def _sketches(df, group_cols):
+    rows = df.collect()
+    got = {tuple(r[g] for g in group_cols): ([(p.h, p.v) for p in r.qs], r.n_rows) for r in rows}
+    assert len(got) == len(rows)  # one row per group
+    return got
+
+
+def test_sketch_is_bottom_k_of_its_rows(spark, sf_dir):
+    """The build equals an independent bottom-k over the raw rows, grouped
+    over several input partitions, globally over one fat partition and
+    over an empty input, and it plans the map-side Partial
+    WindowGroupLimit that holds at most k rows per (group, partition)."""
+    orders = _orders_cents(spark, sf_dir)
+    spread = orders.repartition(3)
+    grouped = quantile_sketch_table(spread, ["o_orderpriority"], "cents", "o_orderkey", k=64)
+    want = _reference_sketches(spread, ["o_orderpriority"], "cents", "o_orderkey", 64)
+    assert len(want) == 5 and all(n > 64 for _, n in want.values())
+    assert _sketches(grouped, ["o_orderpriority"]) == want
+    plan = grouped._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan and "Partial" in plan
 
     fat = orders.repartition(1)
-    fa = quantile_sketch_table(fat, [], "cents", "o_orderkey", k=32).collect()[0]
-    fb = quantile_sketch_table(
-        fat, [], "cents", "o_orderkey", k=32, bounded_buffer=True
-    ).collect()[0]
-    assert [(p.h, p.v) for p in fa.qs] == [(p.h, p.v) for p in fb.qs]
-    assert fa.n_rows == fb.n_rows > 0
+    got = quantile_sketch_table(fat, [], "cents", "o_orderkey", k=32)
+    assert _sketches(got, []) == _reference_sketches(fat, [], "cents", "o_orderkey", 32)
 
     empty = orders.filter(F.lit(False))
-    row = quantile_sketch_table(
-        empty, [], "cents", "o_orderkey", k=8, bounded_buffer=True
-    ).collect()
-    assert len(row) == 1 and list(row[0].qs) == [] and row[0].n_rows == 0
+    got = quantile_sketch_table(empty, [], "cents", "o_orderkey", k=8)
+    assert _sketches(got, []) == {(): ([], 0)}
 
 
-def test_bounded_buffer_keeps_null_group(spark):
-    """A NULL group-key value is a real group in BOTH modes (the
-    bounded mode's sample-counts join must be null-safe)."""
-    from pyspark.sql import functions as F
-
-    from hive_udf_spark.functions.qsketch import quantile_sketch_table
-
+def test_null_group_key_is_a_group(spark):
+    """A NULL group-key value is a real group: the join of the sample with
+    the row counts is null-safe."""
     df = spark.createDataFrame(
-        [(None, 1, 10), (None, 2, 20), ("a", 3, 30), ("a", 4, 40)],
+        [(None, 1, 10), (None, 2, 20), (None, 3, 30), ("a", 4, 40), ("a", 5, 50), ("a", 6, None)],
         "g string, id bigint, v bigint",
     )
-    out_default = quantile_sketch_table(df, ["g"], "v", "id", k=8)
-    out_bounded = quantile_sketch_table(df, ["g"], "v", "id", k=8, bounded_buffer=True)
-    d = {r.g: (tuple((p.h, p.v) for p in r.qs), r.n_rows) for r in out_default.collect()}
-    b = {r.g: (tuple((p.h, p.v) for p in r.qs), r.n_rows) for r in out_bounded.collect()}
-    assert set(d) == set(b) == {None, "a"}
-    assert d == b
+    got = _sketches(quantile_sketch_table(df, ["g"], "v", "id", k=2), ["g"])
+    assert set(got) == {(None,), ("a",)}
+    assert got == _reference_sketches(df, ["g"], "v", "id", 2)
+

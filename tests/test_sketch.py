@@ -7,6 +7,7 @@ from pyspark.sql import functions as F
 
 from hive_udf_spark.functions import (
     approx_distinct,
+    approx_distinct_table,
     register_sql,
     sketch_estimate,
     sketch_intersect_estimate,
@@ -110,7 +111,7 @@ def test_reaggregation_roundtrip_through_storage(spark, sf_dir, tmp_path):
     assert abs(rolled.cardinality - exact) / exact < 0.02
 
 
-def test_invalid_kind_and_b_rejected():
+def test_invalid_kind_and_b_rejected(spark):
     import pytest as _pytest
 
     with _pytest.raises(ValueError):
@@ -119,6 +120,13 @@ def test_invalid_kind_and_b_rejected():
         approx_distinct("x", kind="hll", b=3)
     with _pytest.raises(ValueError):
         approx_distinct("x", kind="hll", b=22)
+    # an LC size of 0 is rejected like a negative one, not read as "default"
+    df = spark.createDataFrame([("g", 1)], "g string, x bigint")
+    for b in (0, -8):
+        with _pytest.raises(ValueError, match="size_bytes must be positive"):
+            approx_distinct("x", kind="lc", b=b)
+        with _pytest.raises(ValueError, match="size_bytes must be positive"):
+            approx_distinct_table(df, ["g"], "x", kind="lc", b=b)
 
 
 def test_incompatible_precision_merge_raises(spark, sf_dir):
