@@ -272,6 +272,11 @@ def _exact_verify(
     two joins. Each side carries its set size (``size_col``, else computed
     from the tokens) once per document rather than once per pair.
 
+    The pair stream is scattered here (:func:`util.scatter_pairs`), once
+    for every caller, before the token sets attach: a deduplicated
+    ``(id, id)`` stream is byte-tiny, so AQE would otherwise coalesce it
+    into one partition and run every ``array_intersect`` in one task.
+
     ``sig_prefilter_margin``: the sides also carry their ``sig`` and,
     between the joins' output and the verify, pairs whose unbiased
     MinHash estimate (agreeing components / ``num_hashes``) is below
@@ -282,6 +287,7 @@ def _exact_verify(
     integer cross-multiplication in 64 bits, so the comparison is exact
     and engine-portable."""
     key_a, key_b = cands.columns
+    cands = scatter_pairs(cands)
     prefilter = sig_prefilter_margin is not None
 
     def side(df: DataFrame, key: str, tag: str) -> DataFrame:
@@ -1039,7 +1045,7 @@ def prefix_filter_pairs(
     # rank join and both verify sides.
     ws = _materialized(_token_sets(ensure_min_parallelism(docs), id_col, text_col), caches)
     ranked = _ranked_by_freq(ws)
-    cands = scatter_pairs(_prefix_candidates_from_ranked(ranked, threshold))
+    cands = _prefix_candidates_from_ranked(ranked, threshold)
     keys = _ranked_keys(ranked)
     return _exact_verify(cands, keys, keys, threshold, size_col="__n").select(
         "id_a",
@@ -1377,7 +1383,6 @@ def containment_pairs(
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .distinct()
     )
-    cands = scatter_pairs(cands)
     keys = _ranked_keys(ranked)
     out = _exact_verify(
         cands, keys, keys, threshold, size_col="__n", denominator="size_a"

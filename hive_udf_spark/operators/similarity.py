@@ -62,16 +62,21 @@ def dot_int(a: Column, b: Column) -> Column:
 
 def dot_int_unrolled(a: Column, b: Column, dim: int) -> Column:
     """Exact integer dot product over FIXED-dim arrays, unrolled into
-    ``dim`` codegen'd element_at multiply-adds. Higher-order functions
+    ``dim`` codegen'd multiply-adds. Higher-order functions
     are CodegenFallback — ``dot_int`` pays ~2·dim interpreted lambda
     evaluations plus a zip-array allocation per call, which at one call
     PER CANDIDATE PAIR is the hottest expression in the verify stages.
     Value-identical to ``dot_int`` for arrays of exactly ``dim``
     elements (integer addition is associative); use only where the
-    fixed-dim contract already holds (quantized embeddings)."""
-    acc = F.element_at(a, 1) * F.element_at(b, 1)
-    for i in range(2, dim + 1):
-        acc = acc + F.element_at(a, i) * F.element_at(b, i)
+    fixed-dim contract already holds (quantized embeddings).
+
+    Elements are read with ``get`` (0-based, NULL past the end), not
+    ANSI ``element_at``, whose every call carries its own out-of-bounds
+    error path into the generated code; the fixed-dim check guarantees
+    every index is in range."""
+    acc = F.get(a, 0) * F.get(b, 0)
+    for i in range(1, dim):
+        acc = acc + F.get(a, i) * F.get(b, i)
     return acc
 
 
@@ -460,13 +465,18 @@ def embedding_near_pairs_lsh(
         F.col("__id").alias("id_b"), F.col("__qv").alias("__qb"), nrm.alias("__nb")
     )
     # per-PAIR dot: unrolled codegen (value-identical at the operator's
-    # fixed dim)
+    # fixed dim), produced by a one-element explode so that it is generated
+    # once: Catalyst inlines a filter on a projected column into the join
+    # condition once per reference, and three references plus the output's
+    # copy outgrow the JVM's 64 KB method limit, which silently turns off
+    # whole-stage codegen for the stage. No filter is pushed below the
+    # Generate that produces its column.
     dq = dot_int_unrolled(F.col("__qa"), F.col("__qb"), dim)
     t2 = float(min_cosine) ** 2
     return (
         cands.join(side_a, "id_a")
         .join(side_b, "id_b")
-        .select("id_a", "id_b", dq.alias("__dq"), F.col("__na"), F.col("__nb"))
+        .select("id_a", "id_b", F.explode(F.array(dq)).alias("__dq"), F.col("__na"), F.col("__nb"))
         .filter(
             (F.col("__dq") > 0)
             & (
@@ -622,6 +632,9 @@ def ann_hyperplane_lsh(
         .select("query_id", "neighbor_id")
         .distinct()
     )
+    # byte-tiny pair stream + per-pair cosine: round-robin before the
+    # vectors attach, as in embedding_near_pairs_lsh
+    cands = scatter_pairs(cands)
     qv = _cosine_side(queries, id_col, F.col(vec_col), "query_id", "q")
     nv = _cosine_side(corpus, id_col, F.col(vec_col), "neighbor_id", "n")
     return _cosine_topk(cands.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id"), k)
@@ -736,9 +749,16 @@ def kmeans_centroids(
 def _ivf_cell_expr(centroids: np.ndarray, vec_sql: str) -> Column:
     """INT nearest-centroid id of the vector ``vec_sql``, all JVM.
     Centroids are unit rows (spherical k-means), so argmax of the raw dot
-    product equals argmax of cosine — no per-row normalization needed."""
+    product equals argmax of cosine — no per-row normalization needed.
+
+    The key is NON-nullable. The fold already returns -1 for a NULL
+    vector (its ``IF(NULL > acc.d, ...)`` keeps the initial index), so the
+    ``coalesce`` changes no value, only the type: Catalyst infers an
+    ``isnotnull`` filter on a nullable join key and pushes it through the
+    ``Repartition`` of ``ensure_min_parallelism`` into the single-task
+    scan stage, where the K·dim fold would run a second time."""
     dots = _dots_sql(vec_sql, _dmat_sql(centroids))
-    return F.expr(f"CAST({_argbest_sql(dots, len(centroids))} AS INT)")
+    return F.expr(f"coalesce(CAST({_argbest_sql(dots, len(centroids))} AS INT), -1)")
 
 
 def _ivf_probe_expr(centroids: np.ndarray, vec_sql: str, nprobe: int) -> Column:

@@ -23,7 +23,16 @@ def null_safe_cond(left: DataFrame, right: DataFrame, cols: list[str]) -> Column
 
 def scatter_pairs(df: DataFrame) -> DataFrame:
     """Round-robin repartition of a skinny candidate/pair stream ahead of
-    a CPU-heavy per-row stage (the exact set-intersect verify).
+    a CPU-heavy per-row stage.
+
+    Where it applies: once inside ``dedup._exact_verify``, so every
+    set-similarity verify (near-dup pairs, both cluster modes, the index
+    probe, prefix-filter and containment joins) scatters its candidate
+    pairs before the token sets attach; before the vector attach of both
+    hyperplane-LSH re-ranks (``embedding_near_pairs_lsh``,
+    ``ann_hyperplane_lsh``); before the fuzzy-match verify; and on the
+    two prefix-position streams of the prefix-filter and containment
+    candidate joins.
 
     Two AQE blind spots make this explicit exchange worth one extra
     shuffle of ~16-byte rows (r15, measured):

@@ -718,3 +718,129 @@ def test_iceberg_field_id_scan_is_plain_scan(spark, tmp_path):
     assert "Join" not in plan
     assert "EvalPython" not in plan  # no Batch/ArrowEvalPython
     assert "Scan parquet" in plan
+
+
+_PLAN_WRAPPERS = ("ShuffleQueryStage", "BroadcastQueryStage", "AQEShuffleRead", "InputAdapter")
+
+
+def _final_plan_nodes(df) -> list[tuple[str, int | None]]:
+    """The AQE-final physical plan of ``df`` (run it first), one
+    ``(node text, parent index)`` per node in tree order. The node text
+    drops the ``*(n) `` codegen marker."""
+    plan = df._jdf.queryExecution().executedPlan()
+    text = plan.executedPlan().treeString()
+    nodes: list[tuple[str, int | None]] = []
+    stack: list[tuple[int, int]] = []  # (depth, node index) of the open ancestors
+    for line in text.splitlines():
+        body = line.lstrip(" :+-")
+        if not body:
+            continue
+        depth = (len(line) - len(body)) // 3
+        while stack and stack[-1][0] >= depth:
+            stack.pop()
+        body = body.split(") ", 1)[1] if body.startswith("*(") else body
+        nodes.append((body, stack[-1][1] if stack else None))
+        stack.append((depth, len(nodes) - 1))
+    return nodes
+
+
+def _ancestors(nodes, i):
+    parent = nodes[i][1]
+    while parent is not None:
+        yield nodes[parent][0]
+        parent = nodes[parent][1]
+
+
+def _is_rr_exchange(text: str) -> bool:
+    return text.startswith("Exchange RoundRobinPartitioning")
+
+
+def _pairs_scattered_before_attach(df) -> bool:
+    """A round-robin Exchange whose input is the candidate ``HashAggregate``
+    and whose consumer is a join, looking through query-stage wrappers."""
+    nodes = _final_plan_nodes(df)
+
+    def unwrapped_child(i):
+        kids = [j for j, (_, p) in enumerate(nodes) if p == i]
+        while len(kids) == 1 and nodes[kids[0]][0].startswith(_PLAN_WRAPPERS):
+            kids = [j for j, (_, p) in enumerate(nodes) if p == kids[0]]
+        return nodes[kids[0]][0] if len(kids) == 1 else ""
+
+    for i, (text, _) in enumerate(nodes):
+        if not _is_rr_exchange(text) or not unwrapped_child(i).startswith("HashAggregate"):
+            continue
+        consumer = next(a for a in _ancestors(nodes, i) if not a.startswith(_PLAN_WRAPPERS))
+        if "Join" in consumer.split(" ", 1)[0]:
+            return True
+    return False
+
+
+def test_ivf_cell_assigned_once_above_the_scatter(spark, sf_dir_med):
+    """ann_ivf's K·dim cell fold runs once, in the corpus-side Project
+    above ensure_min_parallelism's round-robin scatter. A nullable cell
+    key would make Catalyst infer an isnotnull filter on it and push that
+    filter, fold and all, into the single-task scan stage below the
+    scatter, where the fold ran a second time."""
+    from hive_udf_spark.operators.similarity import ann_ivf, kmeans_centroids
+
+    emb = load_table(spark, sf_dir_med, "embeddings")
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    out = ann_ivf(emb, queries, k=5, centroids=kmeans_centroids(emb, n_centroids=8))
+    assert out.collect()
+    nodes = _final_plan_nodes(out)
+    fold = [i for i, (text, _) in enumerate(nodes) if "aggregate(zip_with(transform(" in text]
+    assert [nodes[i][0].split(" ", 1)[0] for i in fold] == ["Project"]
+    for i in fold:
+        assert not any(_is_rr_exchange(a) for a in _ancestors(nodes, i)), nodes[i][0][:200]
+
+
+def test_candidate_pairs_scattered_before_attach(spark, sf_dir_med):
+    """The deduplicated (id, id) candidate stream is byte-tiny, so AQE
+    coalesces it into one partition; the per-candidate cosine re-rank of
+    ann_hyperplane_lsh and the array_intersect verify of near_dup_pairs
+    keep full width only through a round-robin Exchange between the
+    candidate HashAggregate and the first attach join."""
+    from hive_udf_spark.operators.dedup import near_dup_pairs
+    from hive_udf_spark.operators.similarity import ann_hyperplane_lsh
+
+    emb = load_table(spark, sf_dir_med, "embeddings")
+    docs = load_table(spark, sf_dir_med, "documents")
+    for name, out in [
+        ("ann_hyperplane_lsh", ann_hyperplane_lsh(emb, emb.filter(F.col("vec_id") % 50 == 0), k=5)),
+        ("near_dup_pairs", near_dup_pairs(docs, "doc_id", "text")),
+    ]:
+        assert out.collect(), name
+        assert _pairs_scattered_before_attach(out), name
+
+
+def test_verify_stages_keep_whole_stage_codegen(spark, sf_dir_med):
+    """With codegen fallback off, a stage whose generated code does not
+    compile fails the query instead of silently running without
+    whole-stage codegen. The embedding_near_pairs_lsh verify stage
+    outgrew the JVM's 64 KB method limit when its unrolled per-pair dot
+    was generated once per filter reference."""
+    from hive_udf_spark.operators.dedup import dedup_clusters, near_dup_pairs
+    from hive_udf_spark.operators.similarity import (
+        ann_hyperplane_lsh,
+        ann_ivf,
+        embedding_near_pairs_lsh,
+        kmeans_centroids,
+    )
+
+    emb = load_table(spark, sf_dir_med, "embeddings")
+    docs = load_table(spark, sf_dir_med, "documents")
+    queries = emb.filter(F.col("vec_id") % 50 == 0)
+    C = kmeans_centroids(emb, n_centroids=8)
+    old = spark.conf.get("spark.sql.codegen.fallback")
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        for name, build in [
+            ("embedding_near_pairs_lsh", lambda: embedding_near_pairs_lsh(emb)),
+            ("ann_ivf", lambda: ann_ivf(emb, queries, k=5, centroids=C)),
+            ("ann_hyperplane_lsh", lambda: ann_hyperplane_lsh(emb, queries, k=5)),
+            ("near_dup_pairs", lambda: near_dup_pairs(docs, "doc_id", "text")),
+            ("dedup_clusters", lambda: dedup_clusters(docs, "doc_id", "text")),
+        ]:
+            assert build().collect(), name
+    finally:
+        spark.conf.set("spark.sql.codegen.fallback", old)
