@@ -26,7 +26,7 @@ from __future__ import annotations
 
 import logging
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_udf_spark.functions.hashing import fast_hash64, portable_hash60
@@ -251,6 +251,17 @@ def jaccard_pair_stats_hoisted(
     return inter, size_a + size_b - inter
 
 
+def _attach_can_broadcast(spark: SparkSession) -> bool:
+    """Whether the planner may broadcast an attach side by its size:
+    ``spark.sql.autoBroadcastJoinThreshold`` or the adaptive threshold
+    (which re-plans joins from runtime sizes and defaults to the static
+    one) is not negative. Both negative (broadcast disabled) leave only
+    sort-merge or shuffled-hash attaches."""
+    static = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    adaptive = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", None) or static
+    return not all(v.strip().startswith("-") for v in (static, adaptive))
+
+
 def _exact_verify(
     cands: DataFrame,
     left: DataFrame,
@@ -275,7 +286,11 @@ def _exact_verify(
     The pair stream is scattered here (:func:`util.scatter_pairs`), once
     for every caller, before the token sets attach: a deduplicated
     ``(id, id)`` stream is byte-tiny, so AQE would otherwise coalesce it
-    into one partition and run every ``array_intersect`` in one task.
+    into one partition and run every ``array_intersect`` in one
+    broadcast-join task. Only where the attach joins can broadcast
+    (:func:`_attach_can_broadcast`): a sort-merge attach re-hashes the
+    stream by its key at once, so there a round-robin would only add a
+    shuffle of the whole candidate stream.
 
     ``sig_prefilter_margin``: the sides also carry their ``sig`` and,
     between the joins' output and the verify, pairs whose unbiased
@@ -287,7 +302,8 @@ def _exact_verify(
     integer cross-multiplication in 64 bits, so the comparison is exact
     and engine-portable."""
     key_a, key_b = cands.columns
-    cands = scatter_pairs(cands)
+    if _attach_can_broadcast(cands.sparkSession):
+        cands = scatter_pairs(cands)
     prefilter = sig_prefilter_margin is not None
 
     def side(df: DataFrame, key: str, tag: str) -> DataFrame:

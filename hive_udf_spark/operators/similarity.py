@@ -62,21 +62,16 @@ def dot_int(a: Column, b: Column) -> Column:
 
 def dot_int_unrolled(a: Column, b: Column, dim: int) -> Column:
     """Exact integer dot product over FIXED-dim arrays, unrolled into
-    ``dim`` codegen'd multiply-adds. Higher-order functions
+    ``dim`` codegen'd element_at multiply-adds. Higher-order functions
     are CodegenFallback — ``dot_int`` pays ~2·dim interpreted lambda
     evaluations plus a zip-array allocation per call, which at one call
     PER CANDIDATE PAIR is the hottest expression in the verify stages.
     Value-identical to ``dot_int`` for arrays of exactly ``dim``
     elements (integer addition is associative); use only where the
-    fixed-dim contract already holds (quantized embeddings).
-
-    Elements are read with ``get`` (0-based, NULL past the end), not
-    ANSI ``element_at``, whose every call carries its own out-of-bounds
-    error path into the generated code; the fixed-dim check guarantees
-    every index is in range."""
-    acc = F.get(a, 0) * F.get(b, 0)
-    for i in range(1, dim):
-        acc = acc + F.get(a, i) * F.get(b, i)
+    fixed-dim contract already holds (quantized embeddings)."""
+    acc = F.element_at(a, 1) * F.element_at(b, 1)
+    for i in range(2, dim + 1):
+        acc = acc + F.element_at(a, i) * F.element_at(b, i)
     return acc
 
 

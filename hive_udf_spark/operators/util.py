@@ -28,7 +28,9 @@ def scatter_pairs(df: DataFrame) -> DataFrame:
     Where it applies: once inside ``dedup._exact_verify``, so every
     set-similarity verify (near-dup pairs, both cluster modes, the index
     probe, prefix-filter and containment joins) scatters its candidate
-    pairs before the token sets attach; before the vector attach of both
+    pairs before the token sets attach, unless broadcast joins are
+    disabled (a sort-merge attach would re-hash the scatter's output at
+    once); before the vector attach of both
     hyperplane-LSH re-ranks (``embedding_near_pairs_lsh``,
     ``ann_hyperplane_lsh``); before the fuzzy-match verify; and on the
     two prefix-position streams of the prefix-filter and containment

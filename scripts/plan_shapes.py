@@ -6,7 +6,9 @@ in ``functions/{sketch,lc,kmv,qsketch,hllp,pcsa}.py``.
 
 Each entry point runs on the ``documents`` (dedup), ``embeddings``
 (similarity) or ``events`` (sketches) table of ``--sf`` under its own job
-group with the event log on. The merge cases read sketch tables built and
+group with the event log on; the ``*_no_broadcast`` cases run with
+``spark.sql.autoBroadcastJoinThreshold=-1``, so their joins are
+sort-merge or shuffled-hash joins. The merge cases read sketch tables built and
 collected before the first case, so they record merge plans only. From
 the log it records, per entry point, the AQE-final plan of every SQL
 execution the call starts (plan build plus collect), read with
@@ -103,6 +105,8 @@ def record(repo: str, sf: str, out: str) -> None:
     docs = load_table(spark, sf, "documents")
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
     batch = docs.filter(F.col("doc_id") % 5 == 0)
+    half = docs.filter(F.col("doc_id") % 2 != 0)
+    other_half = docs.filter(F.col("doc_id") % 2 == 0)
     emb = load_table(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") % 10 == 0)
     # trained outside every job group: the cases that take them record
@@ -138,6 +142,13 @@ def record(repo: str, sf: str, out: str) -> None:
             D.build_minhash_index(corpus, "doc_id", "text", 16, hashed_tokens=True),
             batch, "doc_id", "text", hashed_tokens=True,
         ),
+        # the two probe regimes of bench.py's incremental_dedup entries;
+        # the *_no_broadcast cases run with broadcast joins disabled
+        "probe_minhash_index_no_broadcast": lambda: D.probe_minhash_index(
+            D.build_minhash_index(half, "doc_id", "text", 16, hashed_tokens=True),
+            other_half, "doc_id", "text", hashed_tokens=True,
+        ),
+        "near_dup_pairs_no_broadcast": lambda: D.near_dup_pairs(docs, "doc_id", "text"),
         "prefix_filter_pairs": lambda: D.prefix_filter_pairs(docs, "doc_id", "text", threshold=0.8),
         "containment_pairs": lambda: D.containment_pairs(
             docs, "doc_id", "text", threshold=0.8, shingle_n=3
@@ -170,8 +181,12 @@ def record(repo: str, sf: str, out: str) -> None:
     docs.count()  # one-off session work stays out of the first case
     emb.count()
     result = {}
+    threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     for name, build in cases.items():
         spark.sparkContext.setJobGroup(name, name)
+        spark.conf.set(
+            "spark.sql.autoBroadcastJoinThreshold", "-1" if name.endswith("_no_broadcast") else threshold
+        )
         df = build()
         rows = df.collect()
         result[name] = {

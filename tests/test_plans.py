@@ -720,35 +720,38 @@ def test_iceberg_field_id_scan_is_plain_scan(spark, tmp_path):
     assert "Scan parquet" in plan
 
 
-_PLAN_WRAPPERS = ("ShuffleQueryStage", "BroadcastQueryStage", "AQEShuffleRead", "InputAdapter")
+_PLAN_WRAPPERS = ("AQEShuffleRead", "InputAdapter", "WholeStageCodegen")
 
 
-def _final_plan_nodes(df) -> list[tuple[str, int | None]]:
-    """The AQE-final physical plan of ``df`` (run it first), one
-    ``(node text, parent index)`` per node in tree order. The node text
-    drops the ``*(n) `` codegen marker."""
-    plan = df._jdf.queryExecution().executedPlan()
-    text = plan.executedPlan().treeString()
-    nodes: list[tuple[str, int | None]] = []
-    stack: list[tuple[int, int]] = []  # (depth, node index) of the open ancestors
-    for line in text.splitlines():
-        body = line.lstrip(" :+-")
-        if not body:
-            continue
-        depth = (len(line) - len(body)) // 3
-        while stack and stack[-1][0] >= depth:
-            stack.pop()
-        body = body.split(") ", 1)[1] if body.startswith("*(") else body
-        nodes.append((body, stack[-1][1] if stack else None))
-        stack.append((depth, len(nodes) - 1))
-    return nodes
+def _final_plan(df) -> tuple:
+    """The AQE-final physical plan of ``df`` (run it first) as nested
+    ``(node name, node string, children)``, read from the JVM plan with
+    query stages, reused exchanges, shuffle reads and codegen wrappers
+    looked through."""
+
+    def walk(node) -> tuple:
+        while True:
+            name = node.nodeName()
+            if name.endswith("QueryStage"):
+                node = node.plan()
+            elif name == "ReusedExchange":
+                node = node.child()
+            elif name.startswith(_PLAN_WRAPPERS):
+                node = node.children().apply(0)
+            else:
+                break
+        kids = node.children()
+        return name, node.simpleString(25), [walk(kids.apply(i)) for i in range(kids.size())]
+
+    return walk(df._jdf.queryExecution().executedPlan().executedPlan())
 
 
-def _ancestors(nodes, i):
-    parent = nodes[i][1]
-    while parent is not None:
-        yield nodes[parent][0]
-        parent = nodes[parent][1]
+def _nodes(tree, above=()):
+    """``(name, string, child names, ancestor strings)`` per plan node."""
+    name, text, kids = tree
+    yield name, text, [k[0] for k in kids], above
+    for k in kids:
+        yield from _nodes(k, above + (text,))
 
 
 def _is_rr_exchange(text: str) -> bool:
@@ -757,22 +760,11 @@ def _is_rr_exchange(text: str) -> bool:
 
 def _pairs_scattered_before_attach(df) -> bool:
     """A round-robin Exchange whose input is the candidate ``HashAggregate``
-    and whose consumer is a join, looking through query-stage wrappers."""
-    nodes = _final_plan_nodes(df)
-
-    def unwrapped_child(i):
-        kids = [j for j, (_, p) in enumerate(nodes) if p == i]
-        while len(kids) == 1 and nodes[kids[0]][0].startswith(_PLAN_WRAPPERS):
-            kids = [j for j, (_, p) in enumerate(nodes) if p == kids[0]]
-        return nodes[kids[0]][0] if len(kids) == 1 else ""
-
-    for i, (text, _) in enumerate(nodes):
-        if not _is_rr_exchange(text) or not unwrapped_child(i).startswith("HashAggregate"):
-            continue
-        consumer = next(a for a in _ancestors(nodes, i) if not a.startswith(_PLAN_WRAPPERS))
-        if "Join" in consumer.split(" ", 1)[0]:
-            return True
-    return False
+    and whose consumer is a join."""
+    return any(
+        _is_rr_exchange(text) and kids == ["HashAggregate"] and "Join" in above[-1].split(" ", 1)[0]
+        for _, text, kids, above in _nodes(_final_plan(df))
+    )
 
 
 def test_ivf_cell_assigned_once_above_the_scatter(spark, sf_dir_med):
@@ -787,11 +779,9 @@ def test_ivf_cell_assigned_once_above_the_scatter(spark, sf_dir_med):
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     out = ann_ivf(emb, queries, k=5, centroids=kmeans_centroids(emb, n_centroids=8))
     assert out.collect()
-    nodes = _final_plan_nodes(out)
-    fold = [i for i, (text, _) in enumerate(nodes) if "aggregate(zip_with(transform(" in text]
-    assert [nodes[i][0].split(" ", 1)[0] for i in fold] == ["Project"]
-    for i in fold:
-        assert not any(_is_rr_exchange(a) for a in _ancestors(nodes, i)), nodes[i][0][:200]
+    fold = [(name, above) for name, text, _, above in _nodes(_final_plan(out)) if "aggregate(zip_with(transform(" in text]
+    assert [name for name, _ in fold] == ["Project"]
+    assert not any(_is_rr_exchange(a) for _, above in fold for a in above)
 
 
 def test_candidate_pairs_scattered_before_attach(spark, sf_dir_med):
@@ -799,8 +789,10 @@ def test_candidate_pairs_scattered_before_attach(spark, sf_dir_med):
     coalesces it into one partition; the per-candidate cosine re-rank of
     ann_hyperplane_lsh and the array_intersect verify of near_dup_pairs
     keep full width only through a round-robin Exchange between the
-    candidate HashAggregate and the first attach join."""
-    from hive_udf_spark.operators.dedup import near_dup_pairs
+    candidate HashAggregate and the first attach join. With broadcast
+    joins disabled the verify attaches are sort-merge joins, which
+    re-hash the stream at once, so there the verify does not scatter."""
+    from hive_udf_spark.operators.dedup import build_minhash_index, near_dup_pairs, probe_minhash_index
     from hive_udf_spark.operators.similarity import ann_hyperplane_lsh
 
     emb = load_table(spark, sf_dir_med, "embeddings")
@@ -811,6 +803,23 @@ def test_candidate_pairs_scattered_before_attach(spark, sf_dir_med):
     ]:
         assert out.collect(), name
         assert _pairs_scattered_before_attach(out), name
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        index = build_minhash_index(docs.filter(F.col("doc_id") % 2 != 0), "doc_id", "text", 16, hashed_tokens=True)
+        for name, out in [
+            ("probe_minhash_index", probe_minhash_index(
+                index, docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", hashed_tokens=True
+            )),
+            ("near_dup_pairs", near_dup_pairs(docs, "doc_id", "text")),
+        ]:
+            assert out.collect(), name
+            nodes = list(_nodes(_final_plan(out)))
+            assert any(n == "SortMergeJoin" for n, *_ in nodes), name
+            assert not any(_is_rr_exchange(text) for _, text, *_ in nodes), name
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_verify_stages_keep_whole_stage_codegen(spark, sf_dir_med):

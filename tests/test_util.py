@@ -6,6 +6,7 @@ from types import SimpleNamespace
 
 import pytest
 
+from hive_udf_spark.operators.dedup import _attach_can_broadcast
 from hive_udf_spark.operators.util import scatter_pairs
 
 
@@ -30,3 +31,19 @@ def test_scatter_pairs_partition_count(setting, want):
     non-integer one ("auto" on some managed platforms) falls back to the
     context's default parallelism instead of raising."""
     assert scatter_pairs(_StandInFrame(setting, default_parallelism=3)) == want
+
+
+@pytest.mark.parametrize(
+    "static, adaptive, want",
+    [("10485760b", None, True), ("-1", None, False), ("-1", "10MB", True), ("10485760b", "-1", True)],
+)
+def test_attach_can_broadcast(static, adaptive, want):
+    """The set-similarity verify scatters its pairs unless both broadcast
+    thresholds are negative; the adaptive one, when unset, is the static
+    one."""
+    conf = {
+        "spark.sql.autoBroadcastJoinThreshold": static,
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": adaptive,
+    }
+    spark = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default=None: conf[key]))
+    assert _attach_can_broadcast(spark) is want
