@@ -232,23 +232,12 @@ def jaccard_pair_stats(tokens_a: Column, tokens_b: Column) -> tuple[Column, Colu
     array_intersect per pair instead of intersect + union (array_union
     builds and materializes a merged array per candidate just to take
     its size — measured dead weight on the verify join, the heaviest
-    stream in the dedup pipeline). When the per-document sizes are
-    already hoisted onto the pair stream use
-    :func:`jaccard_pair_stats_hoisted` and skip the F.size calls too.
+    stream in the dedup pipeline). :func:`_exact_verify` takes the sizes
+    hoisted onto its attach sides instead of the F.size calls.
     """
     inter = F.size(F.array_intersect(tokens_a, tokens_b))
     union = F.size(tokens_a) + F.size(tokens_b) - inter
     return inter, union
-
-
-def jaccard_pair_stats_hoisted(
-    tokens_a: Column, tokens_b: Column, size_a: Column, size_b: Column
-) -> tuple[Column, Column]:
-    """(|A∩B|, |A∪B|) with the per-document set sizes precomputed BEFORE
-    the candidate join (they depend only on the document): per pair only
-    the intersect remains."""
-    inter = F.size(F.array_intersect(tokens_a, tokens_b))
-    return inter, size_a + size_b - inter
 
 
 def _attach_can_broadcast(spark: SparkSession) -> bool:
@@ -322,14 +311,20 @@ def _exact_verify(
         est_num = _sig_agreement_unrolled("__sa", "__sb", num_hashes)
         cut_ppm = int(round((float(threshold) - float(sig_prefilter_margin)) * 1_000_000))
         joined = joined.filter(est_num * F.lit(1_000_000) >= F.lit(cut_ppm * num_hashes))
-    inter, union = jaccard_pair_stats_hoisted(
-        F.col("__wa"), F.col("__wb"), F.col("size_a"), F.col("size_b")
-    )
+    # inter_size comes out of a one-element explode so that the intersect
+    # runs once per pair: Catalyst inlines the threshold filter on the
+    # projected sizes into the second attach join's condition (one copy of
+    # the intersect per size, two more in the output Project), and it
+    # pushes no filter below the Generate that produces its column.
+    inter = F.size(F.array_intersect("__wa", "__wb"))
+    union = F.col("size_a") + F.col("size_b") - F.col("inter_size")
     t_ppm = int(round(float(threshold) * 1_000_000))
     return joined.select(
+        key_a, key_b, F.explode(F.array(inter)).alias("inter_size"), "size_a", "size_b"
+    ).select(
         key_a,
         key_b,
-        inter.alias("inter_size"),
+        "inter_size",
         union.alias("union_size"),
         "size_a",
         "size_b",

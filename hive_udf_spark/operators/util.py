@@ -66,17 +66,23 @@ def scatter_pairs(df: DataFrame) -> DataFrame:
 
 
 def ensure_min_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:
-    """Scatter a SMALL input before an expensive per-row UDF stage.
+    """Scatter a SMALL input before an expensive per-row stage.
 
-    Python-heavy map stages (vendored codec encode/decode, media
-    probes) inherit their task count from the scan's split count.  At
+    Its consumers are JVM per-row stages as well as Python ones: the
+    token-set builds of the set-similarity joins and SimHash
+    (``dedup``), the corpus sides of the vector searches (``similarity``:
+    brute-force cosine pairs, the LSH, IVF and PQ searches, semdedup),
+    the fuzzy-match key streams (``fuzzy``), and the codec encode/decode
+    and media-probe stages of the registry queries, most of them through
+    the payload builder ``plans.text_queries._ascii_payload``.  These
+    stages inherit their task count from the scan's split count.  At
     corpus scale that is thousands of parquet splits and this helper is
     a NO-OP — the condition below is false and no Exchange is added, so
     the decode tier's blobs-never-shuffle property holds exactly where
     it matters.  But a small input (one file under
     ``maxPartitionBytes`` — every fixture table, or a user's single
     drop file) yields ONE task and idles the rest of the cluster under
-    a CPU-bound UDF; here a round-robin scatter of the cheap pre-blob
+    a CPU-bound stage; here a round-robin scatter of the cheap pre-blob
     rows buys full parallelism for the cost of shuffling kilobytes.
     Always scatter BEFORE blob construction: text rows are small; the
     encoded blobs are what must never cross an Exchange."""

@@ -31,6 +31,45 @@ def _html_chain_sql(expr: str) -> str:
     return html_to_text_sql(expr)
 
 
+def _ascii_payload(spark: SparkSession, sf_dir: str, width: int) -> DataFrame:
+    """``(doc_id, __s)``, the payload a blob-synthesizing query encodes:
+    each document's first ``width`` chars, space-padded to ``width``.
+
+    Only pure-ASCII payloads are kept.  The fixture encoders write one
+    byte per char, and that char↔byte equivalence holds only for ASCII
+    (a multi-byte char would shift every later pixel or sample in UTF-8,
+    and ``unicode(c)`` can exceed 255), so the oracles apply the same
+    filter (``_ascii_cps_sql``): a non-ASCII stratum in a future corpus
+    drops out identically on both sides instead of silently diverging.
+
+    The cheap text rows are scattered before blob construction: a
+    fixture table is one parquet row group, so the encode/decode UDF
+    stage would otherwise run as one task, while the encoded blobs must
+    never cross an Exchange.  ``multimodal_png_metadata_extract`` and
+    ``multimodal_audio_quality`` build the same payload inline because
+    their plans stay shuffle-free."""
+    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
+    payload = F.rpad(F.substring("text", 1, width), width, " ")
+    return docs.select("doc_id", payload.alias("__s")).filter(
+        F.col("__s").rlike("^[\\x00-\\x7F]*$")
+    )
+
+
+def _ascii_cps_sql(width: int) -> str:
+    """DuckDB ``t`` and ``b`` CTEs: ``t.s`` is each document's first
+    ``width`` chars, space-padded; ``b`` keeps the pure-ASCII rows with
+    their code points as ``cps``.  Written in SQL alone, sharing no code
+    with ``_ascii_payload``, so every oracle built on it re-derives the
+    payload independently of the Spark side."""
+    return f"""t AS (
+      SELECT doc_id, rpad(substr(text, 1, {width}), {width}, ' ') AS s FROM documents
+    ),
+    b AS (
+      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
+      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
+    )"""
+
+
 @register(
     "text_quality_scores",
     oracle=rf"""
@@ -396,7 +435,6 @@ def text_warc_content_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels — the compression layers are lossless wrappers whose
     invisibility is what the hash check proves."""
     from hive_udf_spark.functions.html import html_to_text
-    from hive_udf_spark.operators.util import ensure_min_parallelism
     from hive_udf_spark.operators.warc import (
         warc_coded_page_encoder_udf,
         warc_records_table,
@@ -449,43 +487,30 @@ def multimodal_blob_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("doc_id", "n_bytes", F.round(F.col("mean_byte"), 6).alias("mean_byte"))
 
 
-@register(
-    "multimodal_real_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+# Pixel statistics of the 8x8 payload image, shared by every lossless
+# image container (the format must not change the pixels).  mean_byte =
+# sum/64 divides by a power of two, so the float is bit-identical in both
+# engines.
+_PIXEL_STATS_ORACLE = f"""
+WITH {_ascii_cps_sql(64)}
+SELECT doc_id,
+       CAST(64 AS BIGINT) AS n_bytes,
+       list_sum(cps) / 64.0 AS mean_byte,
+       CAST(list_max(cps) AS INT) AS max_byte
+FROM b
+"""
+
+
+@register("multimodal_real_decode", oracle=_PIXEL_STATS_ORACLE)
 def multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode end-to-end (no fake stand-in): each document's
     first 64 chars become the pixel payload of a binary 8x8 PGM blob,
     decoded inside mapInPandas by the vendored dependency-free codec
     (operators/imagecodec.py) — exercising the production fake=False
-    path. The oracle recomputes the pixel stats from the same chars;
-    mean_byte = sum/64 divides by a power of two, so the float is
-    bit-identical in both engines. byte_entropy is intentionally not
-    selected: its float summation order is engine-dependent.
-
-    The char↔byte equivalence only holds for ASCII (a multi-byte char
-    would shift every later pixel in UTF-8, and unicode(c) can exceed
-    255), so BOTH engines filter the payload to ASCII explicitly — a
-    non-ASCII stratum in a future corpus drops out identically on both
-    sides instead of silently diverging (round-3 advisor finding)."""
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
-    blobs = docs.select("doc_id", payload.alias("__s")).filter(
-        F.col("__s").rlike("^[\\x00-\\x7F]*$")
-    ).select(
+    path. The oracle recomputes the pixel stats from the same chars.
+    byte_entropy is intentionally not selected: its float summation
+    order is engine-dependent."""
+    blobs = _ascii_payload(spark, sf_dir, 64).select(
         "doc_id",
         F.concat(F.lit(b"P5\n8 8\n255\n"), F.encode(F.col("__s"), "UTF-8")).alias("blob"),
     )
@@ -493,23 +518,7 @@ def multimodal_real_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
 
-@register(
-    "multimodal_png_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+@register("multimodal_png_decode", oracle=_PIXEL_STATS_ORACLE)
 def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPRESSED image decode end-to-end (r6, r5 verdict item 7): each
     document's first 64 chars become the pixels of a REAL 8-bit grayscale
@@ -519,41 +528,16 @@ def multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decoder (chunk walk + CRC check + inflate + Paeth defilter,
     imagecodec._decode_png). The oracle is IDENTICAL to
     multimodal_real_decode's: PNG is lossless, so the container format
-    must not change the pixel statistics — that identity is the point.
-    mean_byte = sum/64 divides by a power of two, so the float is
-    bit-identical across engines; the ASCII filter is symmetric with the
-    oracle (see multimodal_real_decode)."""
+    must not change the pixel statistics — that identity is the point."""
     from hive_udf_spark.operators.multimodal import png_encoder_udf
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = png_encoder_udf(8, 8, filter_type=4)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
 
-@register(
-    "multimodal_png_interlaced_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+@register("multimodal_png_interlaced_decode", oracle=_PIXEL_STATS_ORACLE)
 def multimodal_png_interlaced_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Adam7-interlaced PNG decode end-to-end (r8): the same 8x8
     grayscale fixture as multimodal_png_decode but emitted with
@@ -563,35 +547,13 @@ def multimodal_png_interlaced_decode(spark: SparkSession, sf_dir: str) -> DataFr
     non-interlaced variant's: the scan layout must not change pixels."""
     from hive_udf_spark.operators.multimodal import png_encoder_udf
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = png_encoder_udf(8, 8, filter_type=4, interlace=True)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
 
-@register(
-    "multimodal_webp_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+@register("multimodal_webp_decode", oracle=_PIXEL_STATS_ORACLE)
 def multimodal_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lossless-WebP decode end-to-end (r9, r8 verdict item 4): each
     document's first 64 chars become the pixels of a REAL VP8L WebP —
@@ -606,20 +568,11 @@ def multimodal_webp_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     unpacking, and the extended-container walk — not just the literal
     path.  VP8L is lossless, so the oracle is
     IDENTICAL to the PNG/netpbm tier's: container format must not
-    change pixel statistics.  mean_byte = sum/64 divides by a power of
-    two → bit-identical floats; the ASCII filter is symmetric with the
-    oracle (see multimodal_real_decode)."""
+    change pixel statistics."""
     from hive_udf_spark.operators.multimodal import webp_encoder_udf
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = webp_encoder_udf(8, 8)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
@@ -660,37 +613,14 @@ def multimodal_webp_lossy_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     are bit-identical across engines.  The char→luma mapping itself is
     pinned over all 256 gray levels in tests/test_native.py."""
     from hive_udf_spark.operators.multimodal import webp_lossy_encoder_udf
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 16), 16, " ")
     enc = webp_lossy_encoder_udf(4, 4)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 16).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
 
-@register(
-    "multimodal_avif_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+@register("multimodal_avif_decode", oracle=_PIXEL_STATS_ORACLE)
 def multimodal_avif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AVIF decode end-to-end (r10): each document's first 64 chars
     become the pixels of a REAL AVIF — monochrome AV1 encoded in
@@ -703,40 +633,16 @@ def multimodal_avif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     PNG/VP8L pixel-identity oracle applies unchanged: a real AV1
     entropy-coded round trip under a hash-exact gate — upgrading
     HEIF/AVIF coverage from the r9 structural probe to full pixel
-    decode.  mean_byte divides by a power of two → bit-identical
-    floats; the ASCII filter is symmetric with the oracle."""
+    decode."""
     from hive_udf_spark.operators.multimodal import avif_lossless_encoder_udf
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = avif_lossless_encoder_udf(8, 8)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
 
-@register(
-    "multimodal_heic_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+@register("multimodal_heic_decode", oracle=_PIXEL_STATS_ORACLE)
 def multimodal_heic_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HEIC decode end-to-end (r11): each document's first 64 chars
     become the pixels of a REAL HEIC — monochrome HEVC encoded in
@@ -749,20 +655,11 @@ def multimodal_heic_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction method 1) — so this query also gates the grid/idat
     item plumbing, not just the codec.  Lossless HEVC means the
     PNG/VP8L/AV1 pixel-identity oracle applies unchanged: a real CABAC
-    entropy-coded round trip under a hash-exact gate.  mean_byte
-    divides by a power of two → bit-identical floats; the ASCII filter
-    is symmetric with the oracle."""
+    entropy-coded round trip under a hash-exact gate."""
     from hive_udf_spark.operators.multimodal import heic_lossless_encoder_udf
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = heic_lossless_encoder_udf(8, 8)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
@@ -797,7 +694,6 @@ def multimodal_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         zstd_decode_text_udf,
         zstd_encoder_udf,
     )
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
     enc = zstd_encoder_udf()
@@ -853,7 +749,6 @@ def text_warc_zstd_content_encoding(spark: SparkSession, sf_dir: str) -> DataFra
     compression layers are lossless wrappers whose invisibility is what
     the hash check proves."""
     from hive_udf_spark.functions.html import html_to_text
-    from hive_udf_spark.operators.util import ensure_min_parallelism
     from hive_udf_spark.operators.warc import (
         warc_records_table,
         warc_zstd_page_encoder_udf,
@@ -912,7 +807,6 @@ def text_warc_br_content_encoding(spark: SparkSession, sf_dir: str) -> DataFrame
     lossless wrappers whose invisibility is what the hash check
     proves."""
     from hive_udf_spark.functions.html import html_to_text
-    from hive_udf_spark.operators.util import ensure_min_parallelism
     from hive_udf_spark.operators.warc import (
         warc_br_page_encoder_udf,
         warc_records_table,
@@ -977,7 +871,6 @@ def multimodal_ogg_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the triage pass a media corpus runs before any decode."""
     from hive_udf_spark.operators.mediaprobe import ogg_probe_table
     from hive_udf_spark.operators.multimodal import ogg_encoder_udf
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
     enc = ogg_encoder_udf()
@@ -1018,7 +911,6 @@ def multimodal_id3_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     held to a hash-exact oracle on both tags and numerics."""
     from hive_udf_spark.operators.mediaprobe import id3_probe_table
     from hive_udf_spark.operators.multimodal import mp3_encoder_udf
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
     enc = mp3_encoder_udf()
@@ -1065,7 +957,6 @@ def multimodal_webm_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle rebuilds both track rows per document with UNION ALL."""
     from hive_udf_spark.operators.mediaprobe import webm_probe_table
     from hive_udf_spark.operators.multimodal import webm_encoder_udf
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
     enc = webm_encoder_udf()
@@ -1102,7 +993,6 @@ def multimodal_heif_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     and 240×135 geometry classes."""
     from hive_udf_spark.operators.mp4codec import heif_probe_table
     from hive_udf_spark.operators.multimodal import heif_encoder_udf
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
     enc = heif_encoder_udf()
@@ -1110,23 +1000,21 @@ def multimodal_heif_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     return heif_probe_table(blobs)
 
 
-@register(
-    "multimodal_jpeg_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(4096 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+# Pixel statistics of the 64x64 flat-block JPEG: each payload char owns
+# one 8x8 block, so the mean over 4096 decoded pixels is the mean over the
+# 64 chars, and the max likewise; both divide by powers of two, so floats
+# are bit-identical across engines.
+_JPEG_PIXEL_STATS_ORACLE = f"""
+WITH {_ascii_cps_sql(64)}
+SELECT doc_id,
+       CAST(4096 AS BIGINT) AS n_bytes,
+       list_sum(cps) / 64.0 AS mean_byte,
+       CAST(list_max(cps) AS INT) AS max_byte
+FROM b
+"""
+
+
+@register("multimodal_jpeg_decode", oracle=_JPEG_PIXEL_STATS_ORACLE)
 def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LOSSY-format image decode end-to-end (r6): each document's first 64
     chars become the 8×8 CONSTANT BLOCKS of a 64×64 baseline JPEG at
@@ -1135,43 +1023,16 @@ def multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     decodes it back through the vendored JPEG decoder. A flat block at
     all-ones quantization carries only its DC coefficient, which survives
     quantize→dequantize→IDCT exactly — so even a lossy codec is held to a
-    HASH-EXACT oracle: mean over 4096 decoded pixels = mean over the 64
-    payload chars (each char owns 64 pixels), max likewise; both divide
-    by powers of two, so floats are bit-identical across engines. The
-    ASCII filter is symmetric with the oracle (see
-    multimodal_real_decode)."""
+    HASH-EXACT oracle."""
     from hive_udf_spark.operators.multimodal import jpeg_block_encoder_udf
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = jpeg_block_encoder_udf(8, quality=100)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
 
-@register(
-    "multimodal_progressive_jpeg_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(4096 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+@register("multimodal_progressive_jpeg_decode", oracle=_JPEG_PIXEL_STATS_ORACLE)
 def multimodal_progressive_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PROGRESSIVE (SOF2) JPEG decode end-to-end (r8, r7 verdict item 2:
     real crawled JPEGs are heavily progressive and used to quarantine as
@@ -1182,37 +1043,14 @@ def multimodal_progressive_jpeg_decode(spark: SparkSession, sf_dir: str) -> Data
     exercises all four scan decoders plus in-scan restarts, and the
     lossy multi-pass format is STILL held to a hash-exact oracle."""
     from hive_udf_spark.operators.multimodal import jpeg_block_encoder_udf
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = jpeg_block_encoder_udf(8, quality=100, progressive=True, restart_interval=5)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
 
-@register(
-    "multimodal_gif_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+@register("multimodal_gif_decode", oracle=_PIXEL_STATS_ORACLE)
 def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LZW-compressed image decode end-to-end (r6, third compression
     family after DEFLATE and Huffman+DCT): each document's first 64 chars
@@ -1225,41 +1063,38 @@ def multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     format must not change pixel statistics."""
     from hive_udf_spark.operators.multimodal import gif_encoder_udf
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = gif_encoder_udf(8, 8, interlace=True)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
 
-@register(
-    "multimodal_gif_frame_sample",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
-    ),
-    a AS (
-      SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    f AS (
-      SELECT doc_id, 0 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 1, 64), '')] AS cps
-      FROM a
-      UNION ALL
-      SELECT doc_id, 2 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 129, 64), '')] AS cps
-      FROM a
-    )
-    SELECT doc_id, frame_idx, 3 AS n_frames, CAST(64 AS BIGINT) AS n_pixels,
-           list_sum(cps) / 64.0 AS mean_px, CAST(list_max(cps) AS INT) AS max_px
-    FROM f
-    """,
+# Pixel stats of frames 0 and 2 of a 3-frame container built from the
+# first 192 payload chars, 64 per frame.  mean_px = sum/64 divides by a
+# power of two, so floats are bit-identical across engines.
+_FRAME_SAMPLE_8X8_ORACLE = """
+WITH t AS (
+  SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
+),
+a AS (
+  SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
+),
+f AS (
+  SELECT doc_id, 0 AS frame_idx,
+         [unicode(c) for c in string_split(substr(s, 1, 64), '')] AS cps
+  FROM a
+  UNION ALL
+  SELECT doc_id, 2 AS frame_idx,
+         [unicode(c) for c in string_split(substr(s, 129, 64), '')] AS cps
+  FROM a
 )
+SELECT doc_id, frame_idx, 3 AS n_frames, CAST(64 AS BIGINT) AS n_pixels,
+       list_sum(cps) / 64.0 AS mean_px, CAST(list_max(cps) AS INT) AS max_px
+FROM f
+"""
+
+
+@register("multimodal_gif_frame_sample", oracle=_FRAME_SAMPLE_8X8_ORACLE)
 def multimodal_gif_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANIMATED-GIF container walk end-to-end (r6): each document's first
     192 chars become a 3-frame animated GIF89a; ``split_container_frames``
@@ -1273,42 +1108,14 @@ def multimodal_gif_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_container_frames,
     )
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 192), 192, " ")
     enc = gif_encoder_udf(8, 8, n_frames=3)
-    framed = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    framed = _ascii_payload(spark, sf_dir, 192).select("doc_id", enc(F.col("__s")).alias("blob"))
     return sample_container_frames(framed, every_nth=2, fake=False).select(
         "doc_id", "frame_idx", "n_frames", "n_pixels", "mean_px", "max_px"
     )
 
 
-@register(
-    "multimodal_webp_anim_frame_sample",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
-    ),
-    a AS (
-      SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    f AS (
-      SELECT doc_id, 0 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 1, 64), '')] AS cps
-      FROM a
-      UNION ALL
-      SELECT doc_id, 2 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 129, 64), '')] AS cps
-      FROM a
-    )
-    SELECT doc_id, frame_idx, 3 AS n_frames, CAST(64 AS BIGINT) AS n_pixels,
-           list_sum(cps) / 64.0 AS mean_px, CAST(list_max(cps) AS INT) AS max_px
-    FROM f
-    """,
-)
+@register("multimodal_webp_anim_frame_sample", oracle=_FRAME_SAMPLE_8X8_ORACLE)
 def multimodal_webp_anim_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANIMATED-WebP container walk end-to-end (r10 — the last WebP
     slice that still quarantined): each document's first 192 chars
@@ -1325,38 +1132,15 @@ def multimodal_webp_anim_frame_sample(spark: SparkSession, sf_dir: str) -> DataF
         sample_container_frames,
         webp_anim_encoder_udf,
     )
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 192), 192, " ")
     enc = webp_anim_encoder_udf(8, 8, n_frames=3)
-    framed = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    framed = _ascii_payload(spark, sf_dir, 192).select("doc_id", enc(F.col("__s")).alias("blob"))
     return sample_container_frames(framed, every_nth=2, fake=False).select(
         "doc_id", "frame_idx", "n_frames", "n_pixels", "mean_px", "max_px"
     )
 
 
-@register(
-    "multimodal_tiff_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+@register("multimodal_tiff_decode", oracle=_PIXEL_STATS_ORACLE)
 def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Baseline TIFF decode end-to-end (r6): each document's first 64
     chars become an 8x8 BIG-ENDIAN (MM) PackBits multi-strip TIFF —
@@ -1367,35 +1151,13 @@ def multimodal_tiff_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the other lossless formats' pixel-stats SQL."""
     from hive_udf_spark.operators.multimodal import tiff_encoder_udf
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = tiff_encoder_udf(8, 8, big_endian=True, packbits=True, rows_per_strip=2)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
 
-@register(
-    "multimodal_tiff_lzw_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+@register("multimodal_tiff_lzw_decode", oracle=_PIXEL_STATS_ORACLE)
 def multimodal_tiff_lzw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LZW-compressed TIFF decode end-to-end (r8): same 8x8 big-endian
     multi-strip fixture as multimodal_tiff_decode but compression 5
@@ -1406,30 +1168,18 @@ def multimodal_tiff_lzw_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     container/compression must not change the pixel statistics."""
     from hive_udf_spark.operators.multimodal import tiff_encoder_udf
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = tiff_encoder_udf(
         8, 8, big_endian=True, rows_per_strip=2, lzw=True, predictor=2
     )
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
 
 @register(
     "multimodal_tiff_tiled_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 512), 512, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
+    oracle=f"""
+    WITH {_ascii_cps_sql(512)}
     SELECT doc_id,
            CAST(512 AS BIGINT) AS n_bytes,
            list_sum(cps) / 512.0 AS mean_byte,
@@ -1448,37 +1198,15 @@ def multimodal_tiff_tiled_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the payload — tiling must be invisible in the output."""
     from hive_udf_spark.operators.multimodal import tiff_encoder_udf
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 512), 512, " ")
     enc = tiff_encoder_udf(
         16, 32, big_endian=True, lzw=True, predictor=2, tiles=(16, 16)
     )
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 512).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
 
-@register(
-    "multimodal_tiff16_decode",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+@register("multimodal_tiff16_decode", oracle=_PIXEL_STATS_ORACLE)
 def multimodal_tiff16_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """16-BIT TIFF decode end-to-end (r8): the 8x8 fixture's samples
     widen to ``(c << 8) | (255 - c)`` uint16 in the file's byte order
@@ -1489,30 +1217,18 @@ def multimodal_tiff16_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     catches a decoder that reads the wrong half of each sample."""
     from hive_udf_spark.operators.multimodal import tiff_encoder_udf
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = tiff_encoder_udf(
         8, 8, big_endian=True, packbits=True, rows_per_strip=2, bits16=True
     )
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     feats = decode_image_features(blobs, fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
 
 
 @register(
     "multimodal_decode_quarantine",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
+    oracle=f"""
+    WITH {_ascii_cps_sql(64)}
     SELECT doc_id,
            (doc_id % 7 != 0) AS ok,
            CASE WHEN doc_id % 7 != 0 THEN CAST(64 AS BIGINT) END AS n_bytes,
@@ -1535,12 +1251,9 @@ def multimodal_decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract)."""
     from hive_udf_spark.operators.multimodal import png_encoder_udf
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = png_encoder_udf(8, 8, filter_type=4)
     blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
+        _ascii_payload(spark, sf_dir, 64)
         .select("doc_id", enc(F.col("__s")).alias("__b"))
         .select(
             "doc_id",
@@ -1556,46 +1269,18 @@ def multimodal_decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return feats.select("doc_id", "ok", "n_bytes", "mean_byte", "max_byte")
 
 
-@register(
-    "multimodal_frame_sample",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
-    ),
-    a AS (
-      SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    f AS (
-      SELECT doc_id, 0 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 1, 64), '')] AS cps
-      FROM a
-      UNION ALL
-      SELECT doc_id, 2 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 129, 64), '')] AS cps
-      FROM a
-    )
-    SELECT doc_id, frame_idx, 3 AS n_frames, CAST(64 AS BIGINT) AS n_pixels,
-           list_sum(cps) / 64.0 AS mean_px, CAST(list_max(cps) AS INT) AS max_px
-    FROM f
-    """,
-)
+@register("multimodal_frame_sample", oracle=_FRAME_SAMPLE_8X8_ORACLE)
 def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL within-container frame sampling (r4): each document's first
     192 chars become a 3-frame concatenated-PGM container (the raw-stream
     analogue of MJPEG); ``sample_container_frames`` parses the container
     frame-by-frame inside mapInPandas — each frame's extent computed from
     its own header — decodes every 2nd frame (indices 0 and 2), and
-    emits per-frame pixel stats. mean_px = sum/64 divides by a power of
-    two, so floats are bit-identical across engines; the ASCII filter is
-    symmetric with the oracle (see multimodal_real_decode)."""
+    emits per-frame pixel stats."""
     from hive_udf_spark.operators.multimodal import sample_container_frames
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 192), 192, " ")
     header = F.lit(b"P5\n8 8\n255\n")
-    framed = docs.select("doc_id", payload.alias("__s")).filter(
-        F.col("__s").rlike("^[\\x00-\\x7F]*$")
-    ).select(
+    framed = _ascii_payload(spark, sf_dir, 192).select(
         "doc_id",
         F.concat(
             *[
@@ -1610,29 +1295,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "multimodal_avi_frame_sample",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
-    ),
-    a AS (
-      SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    f AS (
-      SELECT doc_id, 0 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 1, 64), '')] AS cps
-      FROM a
-      UNION ALL
-      SELECT doc_id, 2 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 129, 64), '')] AS cps
-      FROM a
-    )
-    SELECT doc_id, frame_idx, 3 AS n_frames, CAST(64 AS BIGINT) AS n_pixels,
-           list_sum(cps) / 64.0 AS mean_px, CAST(list_max(cps) AS INT) AS max_px
-    FROM f
-    """,
-)
+@register("multimodal_avi_frame_sample", oracle=_FRAME_SAMPLE_8X8_ORACLE)
 def multimodal_avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RIFF-AVI container walk end-to-end (r5, r4 verdict item 8): each
     document's first 192 chars become three 8x8 PGM frames inside a REAL
@@ -1658,8 +1321,6 @@ def multimodal_avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         pos = j + len(d)
     pieces.append(template[pos:])
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 192), 192, " ")
     parts: list = []
     for i in range(3):
         parts += [
@@ -1668,39 +1329,38 @@ def multimodal_avi_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.encode(F.substring("__s", i * 64 + 1, 64), "UTF-8"),
         ]
     parts.append(F.lit(pieces[3]))
-    framed = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", F.concat(*parts).alias("blob"))
-    )
+    framed = _ascii_payload(spark, sf_dir, 192).select("doc_id", F.concat(*parts).alias("blob"))
     return sample_container_frames(framed, every_nth=2, fake=False).select(
         "doc_id", "frame_idx", "n_frames", "n_pixels", "mean_px", "max_px"
     )
 
 
-@register(
-    "multimodal_mjpeg_frame_sample",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
-    ),
-    a AS (
-      SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    f AS (
-      SELECT doc_id, 0 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 1, 64), '')] AS cps
-      FROM a
-      UNION ALL
-      SELECT doc_id, 2 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 129, 64), '')] AS cps
-      FROM a
-    )
-    SELECT doc_id, frame_idx, 3 AS n_frames, CAST(4096 AS BIGINT) AS n_pixels,
-           list_sum(cps) / 64.0 AS mean_px, CAST(list_max(cps) AS INT) AS max_px
-    FROM f
-    """,
+# _FRAME_SAMPLE_8X8_ORACLE for 64x64 flat-block frames: each of a frame's
+# 64 chars owns one 8x8 block, so the mean over its 4096 decoded pixels
+# is the mean over the chars.
+_FRAME_SAMPLE_64X64_ORACLE = """
+WITH t AS (
+  SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
+),
+a AS (
+  SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
+),
+f AS (
+  SELECT doc_id, 0 AS frame_idx,
+         [unicode(c) for c in string_split(substr(s, 1, 64), '')] AS cps
+  FROM a
+  UNION ALL
+  SELECT doc_id, 2 AS frame_idx,
+         [unicode(c) for c in string_split(substr(s, 129, 64), '')] AS cps
+  FROM a
 )
+SELECT doc_id, frame_idx, 3 AS n_frames, CAST(4096 AS BIGINT) AS n_pixels,
+       list_sum(cps) / 64.0 AS mean_px, CAST(list_max(cps) AS INT) AS max_px
+FROM f
+"""
+
+
+@register("multimodal_mjpeg_frame_sample", oracle=_FRAME_SAMPLE_64X64_ORACLE)
 def multimodal_mjpeg_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TRUE Motion-JPEG end-to-end (r6): each document's first 192 chars
     become three 64×64 constant-block baseline JPEGs inside a real
@@ -1709,51 +1369,20 @@ def multimodal_mjpeg_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame
     ``sample_container_frames`` walks the movi list, dispatches each
     frame by its SOI magic into the JPEG decoder, samples every 2nd
     frame, and emits per-frame pixel stats. The flat-block quality-100
-    construction holds the lossy codec to a hash-exact oracle
-    (mean over 4096 decoded pixels = mean over that frame's 64 chars;
-    see multimodal_jpeg_decode); the ASCII filter is symmetric with the
-    oracle (see multimodal_real_decode)."""
+    construction holds the lossy codec to a hash-exact oracle."""
     from hive_udf_spark.operators.multimodal import (
         mjpeg_avi_encoder_udf,
         sample_container_frames,
     )
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 192), 192, " ")
     enc = mjpeg_avi_encoder_udf(3, 8, quality=100)
-    framed = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    framed = _ascii_payload(spark, sf_dir, 192).select("doc_id", enc(F.col("__s")).alias("blob"))
     return sample_container_frames(framed, every_nth=2, fake=False).select(
         "doc_id", "frame_idx", "n_frames", "n_pixels", "mean_px", "max_px"
     )
 
 
-@register(
-    "multimodal_mp4_frame_sample",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
-    ),
-    a AS (
-      SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    f AS (
-      SELECT doc_id, 0 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 1, 64), '')] AS cps
-      FROM a
-      UNION ALL
-      SELECT doc_id, 2 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 129, 64), '')] AS cps
-      FROM a
-    )
-    SELECT doc_id, frame_idx, 3 AS n_frames, CAST(4096 AS BIGINT) AS n_pixels,
-           list_sum(cps) / 64.0 AS mean_px, CAST(list_max(cps) AS INT) AS max_px
-    FROM f
-    """,
-)
+@register("multimodal_mp4_frame_sample", oracle=_FRAME_SAMPLE_64X64_ORACLE)
 def multimodal_mp4_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ISO-BMFF/MP4 demux end-to-end (r6, closing the JPEG/PNG/MP4 trio):
     each document's first 192 chars become three constant-block JPEGs
@@ -1768,14 +1397,8 @@ def multimodal_mp4_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_container_frames,
     )
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 192), 192, " ")
     enc = mp4_mjpeg_encoder_udf(3, 8, quality=100)
-    framed = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    framed = _ascii_payload(spark, sf_dir, 192).select("doc_id", enc(F.col("__s")).alias("blob"))
     return sample_container_frames(framed, every_nth=2, fake=False).select(
         "doc_id", "frame_idx", "n_frames", "n_pixels", "mean_px", "max_px"
     )
@@ -1826,42 +1449,14 @@ def multimodal_fmp4_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         sample_container_frames,
     )
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 12), 12, " ")
     enc = fmp4_mjpeg_encoder_udf(3, 2, quality=100)
-    framed = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    framed = _ascii_payload(spark, sf_dir, 12).select("doc_id", enc(F.col("__s")).alias("blob"))
     return sample_container_frames(framed, every_nth=2, fake=False).select(
         "doc_id", "frame_idx", "n_frames", "n_pixels", "mean_px", "max_px"
     )
 
 
-@register(
-    "multimodal_mp4_av1_frame_sample",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
-    ),
-    a AS (
-      SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    f AS (
-      SELECT doc_id, 0 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 1, 64), '')] AS cps
-      FROM a
-      UNION ALL
-      SELECT doc_id, 2 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 129, 64), '')] AS cps
-      FROM a
-    )
-    SELECT doc_id, frame_idx, 3 AS n_frames, CAST(64 AS BIGINT) AS n_pixels,
-           list_sum(cps) / 64.0 AS mean_px, CAST(list_max(cps) AS INT) AS max_px
-    FROM f
-    """,
-)
+@register("multimodal_mp4_av1_frame_sample", oracle=_FRAME_SAMPLE_8X8_ORACLE)
 def multimodal_mp4_av1_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTER-CODED video decode end-to-end (r11, verdict item 1 —
     previously every real video codec quarantined at the sample entry):
@@ -1881,44 +1476,15 @@ def multimodal_mp4_av1_frame_sample(spark: SparkSession, sf_dir: str) -> DataFra
         sample_container_frames,
     )
 
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 192), 192, " ")
     enc = mp4_av1_encoder_udf(3, 8)
-    framed = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    framed = _ascii_payload(spark, sf_dir, 192).select("doc_id", enc(F.col("__s")).alias("blob"))
     return sample_container_frames(framed, every_nth=2, fake=False).select(
         "doc_id", "frame_idx", "n_frames", "n_pixels", "mean_px", "max_px"
     )
 
 
-@register(
-    "multimodal_mp4_hevc_frame_sample",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
-    ),
-    a AS (
-      SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    f AS (
-      SELECT doc_id, 0 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 1, 64), '')] AS cps
-      FROM a
-      UNION ALL
-      SELECT doc_id, 2 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 129, 64), '')] AS cps
-      FROM a
-    )
-    SELECT doc_id, frame_idx, 3 AS n_frames, CAST(4096 AS BIGINT) AS n_pixels,
-           list_sum(cps) / 64.0 AS mean_px, CAST(list_max(cps) AS INT) AS max_px
-    FROM f
-    """,
-)
+@register("multimodal_mp4_hevc_frame_sample", oracle=_FRAME_SAMPLE_64X64_ORACLE)
 def multimodal_mp4_hevc_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HEVC video decode end-to-end (r11 — the second half of verdict
     item 1; this container ships TWO real video decoders and now both
@@ -1941,44 +1507,15 @@ def multimodal_mp4_hevc_frame_sample(spark: SparkSession, sf_dir: str) -> DataFr
         sample_container_frames,
     )
 
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 192), 192, " ")
     enc = mp4_hevc_encoder_udf(3, 8)
-    framed = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    framed = _ascii_payload(spark, sf_dir, 192).select("doc_id", enc(F.col("__s")).alias("blob"))
     return sample_container_frames(framed, every_nth=2, fake=False).select(
         "doc_id", "frame_idx", "n_frames", "n_pixels", "mean_px", "max_px"
     )
 
 
-@register(
-    "multimodal_webm_av1_frame_sample",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
-    ),
-    a AS (
-      SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    f AS (
-      SELECT doc_id, 0 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 1, 64), '')] AS cps
-      FROM a
-      UNION ALL
-      SELECT doc_id, 2 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 129, 64), '')] AS cps
-      FROM a
-    )
-    SELECT doc_id, frame_idx, 3 AS n_frames, CAST(64 AS BIGINT) AS n_pixels,
-           list_sum(cps) / 64.0 AS mean_px, CAST(list_max(cps) AS INT) AS max_px
-    FROM f
-    """,
-)
+@register("multimodal_webm_av1_frame_sample", oracle=_FRAME_SAMPLE_8X8_ORACLE)
 def multimodal_webm_av1_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AV1-in-WebM decode end-to-end (r11): the same lossless AV1
     temporal units as the MP4 query, but delivered the way the real web
@@ -1995,44 +1532,15 @@ def multimodal_webm_av1_frame_sample(spark: SparkSession, sf_dir: str) -> DataFr
         webm_av1_encoder_udf,
     )
 
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 192), 192, " ")
     enc = webm_av1_encoder_udf(3, 8)
-    framed = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    framed = _ascii_payload(spark, sf_dir, 192).select("doc_id", enc(F.col("__s")).alias("blob"))
     return sample_container_frames(framed, every_nth=2, fake=False).select(
         "doc_id", "frame_idx", "n_frames", "n_pixels", "mean_px", "max_px"
     )
 
 
-@register(
-    "multimodal_webm_hevc_frame_sample",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
-    ),
-    a AS (
-      SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    f AS (
-      SELECT doc_id, 0 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 1, 64), '')] AS cps
-      FROM a
-      UNION ALL
-      SELECT doc_id, 2 AS frame_idx,
-             [unicode(c) for c in string_split(substr(s, 129, 64), '')] AS cps
-      FROM a
-    )
-    SELECT doc_id, frame_idx, 3 AS n_frames, CAST(4096 AS BIGINT) AS n_pixels,
-           list_sum(cps) / 64.0 AS mean_px, CAST(list_max(cps) AS INT) AS max_px
-    FROM f
-    """,
-)
+@register("multimodal_webm_hevc_frame_sample", oracle=_FRAME_SAMPLE_64X64_ORACLE)
 def multimodal_webm_hevc_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HEVC-in-Matroska decode end-to-end (r11): the same LOSSLESS
     libx265 frames as the MP4 query, delivered the way MKV muxers ship
@@ -2047,16 +1555,9 @@ def multimodal_webm_hevc_frame_sample(spark: SparkSession, sf_dir: str) -> DataF
         webm_hevc_encoder_udf,
     )
 
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 192), 192, " ")
     enc = webm_hevc_encoder_udf(3, 8)
-    framed = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    framed = _ascii_payload(spark, sf_dir, 192).select("doc_id", enc(F.col("__s")).alias("blob"))
     return sample_container_frames(framed, every_nth=2, fake=False).select(
         "doc_id", "frame_idx", "n_frames", "n_pixels", "mean_px", "max_px"
     )
@@ -2105,41 +1606,34 @@ def multimodal_mp4_avc_frame_sample(spark: SparkSession, sf_dir: str) -> DataFra
         sample_container_frames,
     )
 
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 192), 192, " ")
     enc = mp4_avc_encoder_udf(3, 8)
-    framed = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    framed = _ascii_payload(spark, sf_dir, 192).select("doc_id", enc(F.col("__s")).alias("blob"))
     return sample_container_frames(framed, every_nth=2, fake=False).select(
         "doc_id", "frame_idx", "n_frames", "n_pixels", "mean_px", "max_px"
     )
 
 
-@register(
-    "multimodal_webm_subtitles",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 60), 60, ' ') AS s FROM documents
-    ),
-    a AS (
-      SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    c AS (
-      SELECT doc_id, i AS cue_idx,
-             CAST(1500 * i AS BIGINT) AS start_ms,
-             CAST(1000 + 100 * i AS BIGINT) AS duration_ms,
-             substr(s, 1 + 20 * i, 20) AS text
-      FROM a, (SELECT unnest([0, 1, 2]) AS i)
-    )
-    SELECT doc_id, CAST(cue_idx AS INT) AS cue_idx, start_ms, duration_ms, text
-    FROM c
-    """,
+_SUBTITLE_CUES_ORACLE = """
+WITH t AS (
+  SELECT doc_id, rpad(substr(text, 1, 60), 60, ' ') AS s FROM documents
+),
+a AS (
+  SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
+),
+c AS (
+  SELECT doc_id, i AS cue_idx,
+         CAST(1500 * i AS BIGINT) AS start_ms,
+         CAST(1000 + 100 * i AS BIGINT) AS duration_ms,
+         substr(s, 1 + 20 * i, 20) AS text
+  FROM a, (SELECT unnest([0, 1, 2]) AS i)
 )
+SELECT doc_id, CAST(cue_idx AS INT) AS cue_idx, start_ms, duration_ms, text
+FROM c
+"""
+
+
+@register("multimodal_webm_subtitles", oracle=_SUBTITLE_CUES_ORACLE)
 def multimodal_webm_subtitles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Subtitle extraction from video containers (r11): embedded
     S_TEXT/UTF8 tracks are one of the larger ALIGNED-TEXT corpora
@@ -2156,37 +1650,12 @@ def multimodal_webm_subtitles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_udf_spark.operators.multimodal import webm_subtitle_encoder_udf
     from hive_udf_spark.operators.mediaprobe import webm_subtitles_table
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 60), 60, " ")
     enc = webm_subtitle_encoder_udf(3, 20)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 60).select("doc_id", enc(F.col("__s")).alias("blob"))
     return webm_subtitles_table(blobs)
 
 
-@register(
-    "multimodal_mp4_subtitles",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 60), 60, ' ') AS s FROM documents
-    ),
-    a AS (
-      SELECT doc_id, s FROM t WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    c AS (
-      SELECT doc_id, i AS cue_idx,
-             CAST(1500 * i AS BIGINT) AS start_ms,
-             CAST(1000 + 100 * i AS BIGINT) AS duration_ms,
-             substr(s, 1 + 20 * i, 20) AS text
-      FROM a, (SELECT unnest([0, 1, 2]) AS i)
-    )
-    SELECT doc_id, CAST(cue_idx AS INT) AS cue_idx, start_ms, duration_ms, text
-    FROM c
-    """,
-)
+@register("multimodal_mp4_subtitles", oracle=_SUBTITLE_CUES_ORACLE)
 def multimodal_mp4_subtitles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Timed-text extraction from MP4 (r11, the tx3g/3GPP sibling of
     the Matroska query): the same three cues per document mux as a real
@@ -2197,43 +1666,33 @@ def multimodal_mp4_subtitles(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_udf_spark.operators.mediaprobe import subtitles_table
     from hive_udf_spark.operators.multimodal import mp4_subtitle_encoder_udf
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 60), 60, " ")
     enc = mp4_subtitle_encoder_udf(3, 20)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc("doc_id", F.col("__s")).alias("blob"))
+    blobs = _ascii_payload(spark, sf_dir, 60).select(
+        "doc_id", enc("doc_id", F.col("__s")).alias("blob")
     )
     return subtitles_table(blobs)
 
 
-@register(
-    "multimodal_audio_features",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_samples,
-           1 AS n_channels,
-           8000 AS sample_rate,
-           (list_sum(cps) - 8192) / 64.0 AS mean_amp,
-           CAST(list_max([abs(c - 128) for c in cps]) AS INT) AS max_abs
-    FROM b
-    """,
-)
+# Amplitude stats of 64 centered samples (c - 128); mean_amp = sum/64
+# divides by a power of two, so floats are bit-identical across engines.
+_PCM_AUDIO_ORACLE = f"""
+WITH {_ascii_cps_sql(64)}
+SELECT doc_id,
+       CAST(64 AS BIGINT) AS n_samples,
+       1 AS n_channels,
+       8000 AS sample_rate,
+       (list_sum(cps) - 8192) / 64.0 AS mean_amp,
+       CAST(list_max([abs(c - 128) for c in cps]) AS INT) AS max_abs
+FROM b
+"""
+
+
+@register("multimodal_audio_features", oracle=_PCM_AUDIO_ORACLE)
 def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio decode end-to-end (r4): each document's first 64 chars
     become the 8-bit PCM payload of a mono 8 kHz WAV blob; the vendored
     RIFF parser (operators/audiocodec.py) walks the container chunks
-    inside mapInPandas and emits integer-exact amplitude stats. mean_amp
-    = (Σ samples)/64 divides by a power of two — bit-identical in both
-    engines; ASCII filter symmetric with the oracle."""
+    inside mapInPandas and emits integer-exact amplitude stats."""
     import numpy as np
 
     from hive_udf_spark.operators.audiocodec import encode_wav_pcm
@@ -2241,33 +1700,13 @@ def multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # fixed 44-byte canonical header for 64 bytes of 8-bit mono PCM @8kHz
     hdr = encode_wav_pcm(np.zeros(64, dtype=np.int32), sample_rate=8000, bits=8)[:-64]
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
-    blobs = docs.select("doc_id", payload.alias("__s")).filter(
-        F.col("__s").rlike("^[\\x00-\\x7F]*$")
-    ).select("doc_id", F.concat(F.lit(hdr), F.encode(F.col("__s"), "UTF-8")).alias("blob"))
+    blobs = _ascii_payload(spark, sf_dir, 64).select(
+        "doc_id", F.concat(F.lit(hdr), F.encode(F.col("__s"), "UTF-8")).alias("blob")
+    )
     return decode_audio_features(blobs, fake=False)
 
 
-@register(
-    "multimodal_flac_audio_features",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_samples,
-           1 AS n_channels,
-           8000 AS sample_rate,
-           (list_sum(cps) - 8192) / 64.0 AS mean_amp,
-           CAST(list_max([abs(c - 128) for c in cps]) AS INT) AS max_abs
-    FROM b
-    """,
-)
+@register("multimodal_flac_audio_features", oracle=_PCM_AUDIO_ORACLE)
 def multimodal_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """COMPRESSED audio decode end-to-end (r9, operators/flaccodec.py):
     each document's first 64 chars become the 16-bit samples (c - 128)
@@ -2277,34 +1716,21 @@ def multimodal_flac_audio_features(spark: SparkSession, sf_dir: str) -> DataFram
     path decodes it back with the vendored dependency-free decoder
     (magic-dispatched next to RIFF/WAV in audiocodec.decode_audio).
     FLAC is lossless, so the oracle is IDENTICAL to the 8-bit-WAV
-    query's: the codec layer must not change amplitude statistics.
-    mean_amp divides by a power of two → bit-identical floats; ASCII
-    filter symmetric with the oracle."""
+    query's: the codec layer must not change amplitude statistics."""
     from hive_udf_spark.operators.multimodal import (
         decode_audio_features,
         flac_encoder_udf,
     )
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = flac_encoder_udf(64, sample_rate=8000, bits=16)
-    blobs = docs.select("doc_id", payload.alias("__s")).filter(
-        F.col("__s").rlike("^[\\x00-\\x7F]*$")
-    ).select("doc_id", enc(F.col("__s")).alias("blob"))
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     return decode_audio_features(blobs, fake=False)
 
 
 @register(
     "multimodal_pcm24_audio_features",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
+    oracle=f"""
+    WITH {_ascii_cps_sql(64)}
     SELECT doc_id,
            CAST(64 AS BIGINT) AS n_samples,
            1 AS n_channels,
@@ -2339,96 +1765,53 @@ def multimodal_pcm24_audio_features(spark: SparkSession, sf_dir: str) -> DataFra
 
         return s.map(one)
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     return decode_audio_features(blobs, fake=False)
 
 
-@register(
-    "multimodal_ulaw_audio_features",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    m AS (
-      SELECT doc_id,
-             [(((255 - c) % 16) * 8 + 132) * (1 << ((255 - c - 128) // 16)) - 132
-              for c in cps] AS mags
-      FROM b
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_samples,
-           1 AS n_channels,
-           8000 AS sample_rate,
-           -list_sum(mags) / 64.0 AS mean_amp,
-           CAST(list_max(mags) AS INT) AS max_abs
-    FROM m
-    """,
+# G.711 mu-law expansion re-implemented in SQL (segment/mantissa integer
+# arithmetic per T-REC-G.711), so the codec is cross-checked between two
+# independent implementations.  ASCII chars 0..127 are all sign-bit-set
+# codes (mu-law stores the complement), so every decoded sample is <= 0
+# and mean_amp = -sum(mag)/64 divides by a power of two.
+_ULAW_AUDIO_ORACLE = f"""
+WITH {_ascii_cps_sql(64)},
+m AS (
+  SELECT doc_id,
+         [(((255 - c) % 16) * 8 + 132) * (1 << ((255 - c - 128) // 16)) - 132
+          for c in cps] AS mags
+  FROM b
 )
+SELECT doc_id,
+       CAST(64 AS BIGINT) AS n_samples,
+       1 AS n_channels,
+       8000 AS sample_rate,
+       -list_sum(mags) / 64.0 AS mean_amp,
+       CAST(list_max(mags) AS INT) AS max_abs
+FROM m
+"""
+
+
+@register("multimodal_ulaw_audio_features", oracle=_ULAW_AUDIO_ORACLE)
 def multimodal_ulaw_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G.711 µ-law (telephony) audio decode end-to-end (r6): each
     document's first 64 chars ARE the µ-law code bytes of a mono WAV
     format-7 stream (every byte is a valid code, so the payload needs no
     Python fixture encoder — the header is one constant literal); the
     vendored companding expansion (audiocodec.g711_decode, bit-exact vs
-    CPython's audioop over all 65536 inputs) runs inside mapInPandas.
-    The ORACLE re-implements G.711 expansion in SQL — segment/mantissa
-    integer arithmetic per T-REC-G.711 — so the codec itself is
-    cross-checked between two independent implementations. ASCII chars
-    0..127 are all sign-bit-set codes (µ-law stores the complement), so
-    every decoded sample is ≤ 0 and mean_amp = −Σmag/64 divides by a
-    power of two (bit-identical floats)."""
+    CPython's audioop over all 65536 inputs) runs inside mapInPandas."""
     from hive_udf_spark.operators.audiocodec import encode_wav_g711
     from hive_udf_spark.operators.multimodal import decode_audio_features
 
     hdr = encode_wav_g711(bytes(64), "ulaw", sample_rate=8000)[:-64]
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select(
-            "doc_id",
-            F.concat(F.lit(hdr), F.encode(F.col("__s"), "UTF-8")).alias("blob"),
-        )
+    blobs = _ascii_payload(spark, sf_dir, 64).select(
+        "doc_id",
+        F.concat(F.lit(hdr), F.encode(F.col("__s"), "UTF-8")).alias("blob"),
     )
     return decode_audio_features(blobs, fake=False)
 
 
-@register(
-    "multimodal_au_audio_features",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    ),
-    m AS (
-      SELECT doc_id,
-             [(((255 - c) % 16) * 8 + 132) * (1 << ((255 - c - 128) // 16)) - 132
-              for c in cps] AS mags
-      FROM b
-    )
-    SELECT doc_id,
-           CAST(64 AS BIGINT) AS n_samples,
-           1 AS n_channels,
-           8000 AS sample_rate,
-           -list_sum(mags) / 64.0 AS mean_amp,
-           CAST(list_max(mags) AS INT) AS max_abs
-    FROM m
-    """,
-)
+@register("multimodal_au_audio_features", oracle=_ULAW_AUDIO_ORACLE)
 def multimodal_au_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sun AU (.snd) decode end-to-end (r11): the legacy Unix/telephony
     container whose payload IS raw G.711 µ-law codes — each document's
@@ -2443,29 +1826,17 @@ def multimodal_au_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_udf_spark.operators.multimodal import decode_audio_features
 
     hdr = encode_au(bytes(64), 1, sample_rate=8000)[:-64]
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select(
-            "doc_id",
-            F.concat(F.lit(hdr), F.encode(F.col("__s"), "UTF-8")).alias("blob"),
-        )
+    blobs = _ascii_payload(spark, sf_dir, 64).select(
+        "doc_id",
+        F.concat(F.lit(hdr), F.encode(F.col("__s"), "UTF-8")).alias("blob"),
     )
     return decode_audio_features(blobs, fake=False)
 
 
 @register(
     "multimodal_aiff_audio_features",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
+    oracle=f"""
+    WITH {_ascii_cps_sql(64)}
     SELECT doc_id,
            CAST(64 AS BIGINT) AS n_samples,
            1 AS n_channels,
@@ -2492,15 +1863,9 @@ def multimodal_aiff_audio_features(spark: SparkSession, sf_dir: str) -> DataFram
     hdr = encode_aiff_pcm(np.zeros(64, dtype=np.int64), sample_rate=8000, bits=8)
     # data is the trailing 64 bytes (even length, no pad byte)
     hdr = hdr[:-64]
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select(
-            "doc_id",
-            F.concat(F.lit(hdr), F.encode(F.col("__s"), "UTF-8")).alias("blob"),
-        )
+    blobs = _ascii_payload(spark, sf_dir, 64).select(
+        "doc_id",
+        F.concat(F.lit(hdr), F.encode(F.col("__s"), "UTF-8")).alias("blob"),
     )
     return decode_audio_features(blobs, fake=False)
 
@@ -2553,14 +1918,8 @@ def multimodal_mp1_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame
         mpeg1_l1_encoder_udf,
     )
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 24), 24, " ")
     enc = mpeg1_l1_encoder_udf(24)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 24).select("doc_id", enc(F.col("__s")).alias("blob"))
     return decode_mpeg_audio_features(blobs)
 
 
@@ -2613,27 +1972,15 @@ def multimodal_mp3_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame
         mpeg1_l1_encoder_udf,
     )
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 24), 24, " ")
     enc = mpeg1_l1_encoder_udf(24)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 24).select("doc_id", enc(F.col("__s")).alias("blob"))
     return decode_mp3_native_features(blobs)
 
 
 @register(
     "multimodal_adpcm_audio_features",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
+    oracle=f"""
+    WITH {_ascii_cps_sql(64)}
     SELECT doc_id,
            CAST(576 AS BIGINT) AS n_samples,
            1 AS n_channels,
@@ -2658,14 +2005,8 @@ def multimodal_adpcm_audio_features(spark: SparkSession, sf_dir: str) -> DataFra
         decode_audio_features,
     )
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = adpcm_block_encoder_udf(scale=100, block_align=8)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc(F.col("__s")).alias("blob"))
-    )
+    blobs = _ascii_payload(spark, sf_dir, 64).select("doc_id", enc(F.col("__s")).alias("blob"))
     return decode_audio_features(blobs, fake=False)
 
 
@@ -2981,14 +2322,8 @@ def text_bpe_train_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_image_near_dup",
-    oracle=r"""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\x00-\x7f]*$')
-    ),
+    oracle=f"""
+    WITH {_ascii_cps_sql(64)},
     h AS (
       SELECT doc_id,
         CAST(list_sum(list_transform(generate_series(1, 60),
@@ -3016,11 +2351,7 @@ def multimodal_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_udf_spark.operators.dedup import hamming_block_pairs
     from hive_udf_spark.operators.multimodal import image_ahash_table
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
-    blobs = docs.select("doc_id", payload.alias("__s")).filter(
-        F.col("__s").rlike("^[\\x00-\\x7F]*$")
-    ).select(
+    blobs = _ascii_payload(spark, sf_dir, 64).select(
         "doc_id",
         F.concat(F.lit(b"P5\n8 8\n255\n"), F.encode(F.col("__s"), "UTF-8")).alias("blob"),
     )
@@ -3031,14 +2362,8 @@ def multimodal_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_color_features",
-    oracle=r"""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 48), 48, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\x00-\x7f]*$')
-    )
+    oracle=f"""
+    WITH {_ascii_cps_sql(48)}
     SELECT doc_id,
            CAST(16 AS BIGINT) AS n_pixels,
            CAST(list_sum(list_transform(generate_series(1, 16), i -> cps[3*i-2])) AS BIGINT) AS sum_r,
@@ -3071,11 +2396,7 @@ def multimodal_color_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         decode_color_features,
     )
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 48), 48, " ")
-    blobs = docs.select("doc_id", payload.alias("__s")).filter(
-        F.col("__s").rlike("^[\\x00-\\x7F]*$")
-    ).select(
+    blobs = _ascii_payload(spark, sf_dir, 48).select(
         "doc_id",
         color_fixture_encoder_udf(4, 4)("doc_id", "__s").alias("blob"),
     )
@@ -3084,14 +2405,8 @@ def multimodal_color_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_color_near_dup",
-    oracle=r"""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 192), 192, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\x00-\x7f]*$')
-    ),
+    oracle=f"""
+    WITH {_ascii_cps_sql(192)},
     h AS (
       SELECT doc_id,
         CAST(list_sum(list_transform(generate_series(1, 60),
@@ -3132,11 +2447,7 @@ def multimodal_color_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_udf_spark.operators.dedup import hamming_block_pairs
     from hive_udf_spark.operators.multimodal import color_ahash_table
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 192), 192, " ")
-    blobs = docs.select("doc_id", payload.alias("__s")).filter(
-        F.col("__s").rlike("^[\\x00-\\x7F]*$")
-    ).select(
+    blobs = _ascii_payload(spark, sf_dir, 192).select(
         "doc_id",
         F.concat(F.lit(b"P6\n8 8\n255\n"), F.encode(F.col("__s"), "UTF-8")).alias("blob"),
     )
@@ -3200,11 +2511,9 @@ def multimodal_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_udf_spark.operators.multimodal import audio_fingerprint_table
 
     hdr = encode_wav_pcm(np.zeros(64, dtype=np.int32), sample_rate=8000, bits=8)[:-64]
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
-    blobs = docs.select("doc_id", payload.alias("__s")).filter(
-        F.col("__s").rlike("^[\\x00-\\x7F]*$")
-    ).select("doc_id", F.concat(F.lit(hdr), F.encode(F.col("__s"), "UTF-8")).alias("blob"))
+    blobs = _ascii_payload(spark, sf_dir, 64).select(
+        "doc_id", F.concat(F.lit(hdr), F.encode(F.col("__s"), "UTF-8")).alias("blob")
+    )
     sigs = audio_fingerprint_table(blobs)
     pairs = hamming_block_pairs(sigs, "doc_id", "afp", max_hamming=14, bits=60)
     return pairs.select("id_a", "id_b", F.col("hamming").cast("long").alias("hamming"))
@@ -3212,14 +2521,8 @@ def multimodal_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "multimodal_dedup_clusters",
-    oracle=r"""
-    WITH RECURSIVE t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\x00-\x7f]*$')
-    ),
+    oracle=f"""
+    WITH RECURSIVE {_ascii_cps_sql(64)},
     h AS (
       SELECT doc_id,
         CAST(list_sum(list_transform(generate_series(1, 60),
@@ -3256,11 +2559,7 @@ def multimodal_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from hive_udf_spark.operators.dedup import connected_components, hamming_block_pairs
     from hive_udf_spark.operators.multimodal import image_ahash_table
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
-    blobs = docs.select("doc_id", payload.alias("__s")).filter(
-        F.col("__s").rlike("^[\\x00-\\x7F]*$")
-    ).select(
+    blobs = _ascii_payload(spark, sf_dir, 64).select(
         "doc_id",
         F.concat(F.lit(b"P5\n8 8\n255\n"), F.encode(F.col("__s"), "UTF-8")).alias("blob"),
     )
@@ -3598,24 +2897,24 @@ def multimodal_zip_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     return zip_entries_table(blobs)
 
 
-@register(
-    "multimodal_exif_extract",
-    oracle="""
-    SELECT doc_id,
-           TRUE AS has_exif,
-           'Cam' || (doc_id % 5) AS make,
-           'M' || (doc_id % 3) AS model,
-           CAST(1 + doc_id % 8 AS INT) AS orientation,
-           CASE WHEN doc_id % 7 = 0 THEN NULL
-                ELSE CAST((doc_id * 7919) % 180000001 - 90000000 AS BIGINT)
-           END AS lat_udeg,
-           CASE WHEN doc_id % 7 = 0 THEN NULL
-                ELSE CAST((doc_id * 104729) % 360000001 - 180000000 AS BIGINT)
-           END AS lon_udeg
-    FROM documents
-    WHERE regexp_matches(rpad(substr(text, 1, 64), 64, ' '), '^[\\x00-\\x7f]*$')
-    """,
-)
+_EXIF_ORACLE = """
+SELECT doc_id,
+       TRUE AS has_exif,
+       'Cam' || (doc_id % 5) AS make,
+       'M' || (doc_id % 3) AS model,
+       CAST(1 + doc_id % 8 AS INT) AS orientation,
+       CASE WHEN doc_id % 7 = 0 THEN NULL
+            ELSE CAST((doc_id * 7919) % 180000001 - 90000000 AS BIGINT)
+       END AS lat_udeg,
+       CASE WHEN doc_id % 7 = 0 THEN NULL
+            ELSE CAST((doc_id * 104729) % 360000001 - 180000000 AS BIGINT)
+       END AS lon_udeg
+FROM documents
+WHERE regexp_matches(rpad(substr(text, 1, 64), 64, ' '), '^[\\x00-\\x7f]*$')
+"""
+
+
+@register("multimodal_exif_extract", oracle=_EXIF_ORACLE)
 def multimodal_exif_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXIF metadata extraction end-to-end (r9, operators/exif.py):
     each document becomes a REAL baseline JPEG carrying a spec-valid
@@ -3628,37 +2927,15 @@ def multimodal_exif_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     GPS coordinates are the PII routing signal a publication pipeline
     filters on."""
     from hive_udf_spark.operators.exif import exif_fixture_udf, exif_table
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = exif_fixture_udf(8, quality=100)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc("doc_id", F.col("__s")).alias("blob"))
+    blobs = _ascii_payload(spark, sf_dir, 64).select(
+        "doc_id", enc("doc_id", F.col("__s")).alias("blob")
     )
     return exif_table(blobs)
 
 
-@register(
-    "multimodal_heic_exif_extract",
-    oracle="""
-    SELECT doc_id,
-           TRUE AS has_exif,
-           'Cam' || (doc_id % 5) AS make,
-           'M' || (doc_id % 3) AS model,
-           CAST(1 + doc_id % 8 AS INT) AS orientation,
-           CASE WHEN doc_id % 7 = 0 THEN NULL
-                ELSE CAST((doc_id * 7919) % 180000001 - 90000000 AS BIGINT)
-           END AS lat_udeg,
-           CASE WHEN doc_id % 7 = 0 THEN NULL
-                ELSE CAST((doc_id * 104729) % 360000001 - 180000000 AS BIGINT)
-           END AS lon_udeg
-    FROM documents
-    WHERE regexp_matches(rpad(substr(text, 1, 64), 64, ' '), '^[\\x00-\\x7f]*$')
-    """,
-)
+@register("multimodal_heic_exif_extract", oracle=_EXIF_ORACLE)
 def multimodal_heic_exif_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXIF from HEIC (r11): phone camera rolls carry EXIF as a LINKED
     ITEM inside the HEIF meta box, not a JPEG APP1 segment — each
@@ -3671,36 +2948,15 @@ def multimodal_heic_exif_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics must not.  GPS micro-degrees stay the PII routing
     signal."""
     from hive_udf_spark.operators.exif import exif_table, heic_exif_fixture_udf
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = heic_exif_fixture_udf(8)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc("doc_id", F.col("__s")).alias("blob"))
+    blobs = _ascii_payload(spark, sf_dir, 64).select(
+        "doc_id", enc("doc_id", F.col("__s")).alias("blob")
     )
     return exif_table(blobs)
 
 
-@register(
-    "multimodal_exif_strip",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, rpad(substr(text, 1, 64), 64, ' ') AS s FROM documents
-    ),
-    b AS (
-      SELECT doc_id, [unicode(c) for c in string_split(s, '')] AS cps FROM t
-      WHERE regexp_matches(s, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id,
-           CAST(4096 AS BIGINT) AS n_bytes,
-           list_sum(cps) / 64.0 AS mean_byte,
-           CAST(list_max(cps) AS INT) AS max_byte
-    FROM b
-    """,
-)
+@register("multimodal_exif_strip", oracle=_JPEG_PIXEL_STATS_ORACLE)
 def multimodal_exif_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXIF privacy scrub end-to-end (r9, operators/exif.py): the same
     GPS-bearing JPEG fixture as multimodal_exif_extract is run through
@@ -3710,16 +2966,11 @@ def multimodal_exif_strip(spark: SparkSession, sf_dir: str) -> DataFrame:
     scrub fails hash-exact; metadata REMOVAL is asserted by the
     has_exif=false pytest on the same operator (tests/test_exif.py)."""
     from hive_udf_spark.operators.exif import exif_fixture_udf, strip_exif_blobs
-    from hive_udf_spark.operators.util import ensure_min_parallelism
     from hive_udf_spark.operators.multimodal import decode_image_features
 
-    docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
-    payload = F.rpad(F.substring("text", 1, 64), 64, " ")
     enc = exif_fixture_udf(8, quality=100)
-    blobs = (
-        docs.select("doc_id", payload.alias("__s"))
-        .filter(F.col("__s").rlike("^[\\x00-\\x7F]*$"))
-        .select("doc_id", enc("doc_id", F.col("__s")).alias("blob"))
+    blobs = _ascii_payload(spark, sf_dir, 64).select(
+        "doc_id", enc("doc_id", F.col("__s")).alias("blob")
     )
     feats = decode_image_features(strip_exif_blobs(blobs), fake=False)
     return feats.select("doc_id", "n_bytes", "mean_byte", "max_byte")
@@ -3800,7 +3051,6 @@ def multimodal_tar_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-validated against CPython's tarfile in tests (both
     directions), so this oracle gates OUR walk, not a private dialect."""
     from hive_udf_spark.operators.tarcodec import tar_doc_encoder_udf, tar_entries_table
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
     enc = tar_doc_encoder_udf()
@@ -4030,24 +3280,24 @@ def text_unicode_cleanup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "multimodal_pdf_extract",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, text AS s FROM documents
-      WHERE regexp_matches(text, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id, 0 AS page_idx, 2 AS n_pages,
-           substr(s, 1, length(s) // 2) AS text,
-           CAST(length(s) // 2 AS BIGINT) AS n_chars
-    FROM t
-    UNION ALL
-    SELECT doc_id, 1, 2,
-           substr(s, length(s) // 2 + 1),
-           CAST(length(s) - length(s) // 2 AS BIGINT)
-    FROM t
-    """,
+_PDF_PAGES_ORACLE = """
+WITH t AS (
+  SELECT doc_id, text AS s FROM documents
+  WHERE regexp_matches(text, '^[\\x00-\\x7f]*$')
 )
+SELECT doc_id, 0 AS page_idx, 2 AS n_pages,
+       substr(s, 1, length(s) // 2) AS text,
+       CAST(length(s) // 2 AS BIGINT) AS n_chars
+FROM t
+UNION ALL
+SELECT doc_id, 1, 2,
+       substr(s, length(s) // 2 + 1),
+       CAST(length(s) - length(s) // 2 AS BIGINT)
+FROM t
+"""
+
+
+@register("multimodal_pdf_extract", oracle=_PDF_PAGES_ORACLE)
 def multimodal_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF text extraction end-to-end (r8, operators/pdfcodec.py): each
     document becomes a two-page FlateDecode PDF (page 1 shows its first
@@ -4116,7 +3366,6 @@ def multimodal_pdf_encrypted_extract(spark: SparkSession, sf_dir: str) -> DataFr
         pdf_encrypted_doc_encoder_udf,
         pdf_pages_table,
     )
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
     # the Algorithm-2.B KDF (AES-256 stratum) costs ~ms per DOC on both
     # the fixture and decode sides — scatter before the blob build or a
@@ -4143,24 +3392,7 @@ def multimodal_pdf_encrypted_extract(spark: SparkSession, sf_dir: str) -> DataFr
     )
 
 
-@register(
-    "multimodal_pdf_xrefstream_extract",
-    oracle="""
-    WITH t AS (
-      SELECT doc_id, text AS s FROM documents
-      WHERE regexp_matches(text, '^[\\x00-\\x7f]*$')
-    )
-    SELECT doc_id, 0 AS page_idx, 2 AS n_pages,
-           substr(s, 1, length(s) // 2) AS text,
-           CAST(length(s) // 2 AS BIGINT) AS n_chars
-    FROM t
-    UNION ALL
-    SELECT doc_id, 1, 2,
-           substr(s, length(s) // 2 + 1),
-           CAST(length(s) - length(s) // 2 AS BIGINT)
-    FROM t
-    """,
-)
+@register("multimodal_pdf_xrefstream_extract", oracle=_PDF_PAGES_ORACLE)
 def multimodal_pdf_xrefstream_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PDF 1.5 text extraction end-to-end (r8 verdict item 3,
     operators/pdfcodec.py): each document becomes a two-page PDF built
@@ -4176,7 +3408,6 @@ def multimodal_pdf_xrefstream_extract(spark: SparkSession, sf_dir: str) -> DataF
         pdf15_doc_encoder_udf,
         pdf_pages_table,
     )
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
     enc = pdf15_doc_encoder_udf()
@@ -4222,7 +3453,6 @@ def multimodal_pdf_type0_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         pdf_pages_table,
         pdf_type0_doc_encoder_udf,
     )
-    from hive_udf_spark.operators.util import ensure_min_parallelism
 
     docs = ensure_min_parallelism(load_table(spark, sf_dir, "documents"))
     enc = pdf_type0_doc_encoder_udf()

@@ -563,7 +563,8 @@ def test_r9_codec_queries_are_map_side(spark, sf_dir):
 
 def test_udf_heavy_codec_queries_scatter_small_inputs_only(spark, sf_dir):
     """The Python-heavy codec/probe queries (zstd roundtrip, zstd WARC,
-    Ogg/ID3/WebM probes) use ensure_min_parallelism: at fixture scale
+    Ogg/ID3/WebM probes, the fixture-blob decodes, frame samples and
+    audio features) use ensure_min_parallelism: at fixture scale
     (one parquet split) exactly ONE round-robin Exchange of the cheap
     PRE-BLOB text rows restores full parallelism for the CPU-bound UDF
     stage; at corpus scale (splits >= cores) the helper is a no-op and
@@ -595,6 +596,41 @@ def test_udf_heavy_codec_queries_scatter_small_inputs_only(spark, sf_dir):
         "multimodal_heic_decode",
         # r11: the AES-256 KDF stratum made the scatter load-bearing
         "multimodal_pdf_encrypted_extract",
+        # the other fixture-blob queries whose payload comes from
+        # text_queries._ascii_payload and that shuffle nothing else
+        "multimodal_real_decode",
+        "multimodal_png_decode",
+        "multimodal_png_interlaced_decode",
+        "multimodal_gif_decode",
+        "multimodal_tiff_decode",
+        "multimodal_tiff_lzw_decode",
+        "multimodal_tiff_tiled_decode",
+        "multimodal_tiff16_decode",
+        "multimodal_decode_quarantine",
+        "multimodal_color_features",
+        "multimodal_heic_exif_extract",
+        "multimodal_frame_sample",
+        "multimodal_gif_frame_sample",
+        "multimodal_webp_anim_frame_sample",
+        "multimodal_avi_frame_sample",
+        "multimodal_mjpeg_frame_sample",
+        "multimodal_mp4_frame_sample",
+        "multimodal_fmp4_frame_sample",
+        "multimodal_mp4_av1_frame_sample",
+        "multimodal_mp4_hevc_frame_sample",
+        "multimodal_mp4_avc_frame_sample",
+        "multimodal_webm_av1_frame_sample",
+        "multimodal_webm_hevc_frame_sample",
+        "multimodal_webm_subtitles",
+        "multimodal_mp4_subtitles",
+        "multimodal_audio_features",
+        "multimodal_pcm24_audio_features",
+        "multimodal_ulaw_audio_features",
+        "multimodal_au_audio_features",
+        "multimodal_aiff_audio_features",
+        "multimodal_adpcm_audio_features",
+        "multimodal_mp1_audio_features",
+        "multimodal_mp3_audio_features",
     ]:
         plan = plan_of(QUERIES[name].fn(spark, sf_dir))
         # formatted plans print each node twice (tree + details)
@@ -853,3 +889,18 @@ def test_verify_stages_keep_whole_stage_codegen(spark, sf_dir_med):
             assert build().collect(), name
     finally:
         spark.conf.set("spark.sql.codegen.fallback", old)
+
+
+def test_verify_computes_intersection_once(spark, sf_dir_med):
+    """The set-similarity verify's array_intersect, its whole per-pair
+    cost, appears once in the AQE-final plan. A threshold filter on
+    projected intersect and union sizes is inlined into the second attach
+    join's condition, one copy per size, next to the output Project's two
+    (four in all); inter_size is therefore produced by a one-element
+    explode."""
+    from hive_udf_spark.operators.dedup import near_dup_pairs
+
+    out = near_dup_pairs(load_table(spark, sf_dir_med, "documents"), "doc_id", "text")
+    assert out.collect()
+    texts = [text for _, text, _, _ in _nodes(_final_plan(out))]
+    assert sum(t.count("array_intersect(") for t in texts) == 1
