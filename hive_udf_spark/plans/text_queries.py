@@ -4416,10 +4416,9 @@ def streaming_incremental_boilerplate(spark: SparkSession, sf_dir: str) -> DataF
     would double-count).  The final above-threshold set must equal the
     batch-mode computation regardless of batching — the same boilerplate
     relation text_boilerplate_line_removal broadcasts."""
-    import json
-    import os
     import tempfile
 
+    from hive_udf_spark.sources.sinks import read_state_version
     from hive_udf_spark.streaming.boilerplate_sink import (
         incremental_line_df_sink,
     )
@@ -4445,10 +4444,7 @@ def streaming_incremental_boilerplate(spark: SparkSession, sf_dir: str) -> DataF
         finally:
             q.stop()
         state = spark.read.parquet(f"{tmp}/state/linedf")
-        meta = json.load(
-            open(os.path.join(os.path.realpath(f"{tmp}/state"), "meta.json"))
-        )
-        n_docs = meta["n_docs"]
+        n_docs = read_state_version(f"{tmp}/state")[1]["n_docs"]
         out = (
             state.filter(F.col("df") > n_docs * BOILERPLATE_DOC_FRAC)
             .select("line", "df")

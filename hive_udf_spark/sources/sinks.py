@@ -17,6 +17,11 @@ that matter at 100 TB:
 
 from __future__ import annotations
 
+import json
+import os
+import shutil
+import uuid
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,6 +36,9 @@ __all__ = [
     "atomic_swap_parquet",
     "swap_dir",
     "append_parquet_state",
+    "read_state_version",
+    "hwm_skip",
+    "commit_state_version",
     "expire_rows",
     "forget_rows",
     "propagate_deletes",
@@ -198,7 +206,6 @@ def compact_parquet(
     write-then-rename swap: readers see the old or the new directory,
     never a mix. Returns (files_before, files_after)."""
     import math
-    import os
 
     names = [n for n in os.listdir(path) if n.endswith(".parquet")]
     bytes_total = sum(os.path.getsize(os.path.join(path, n)) for n in names)
@@ -230,8 +237,6 @@ def atomic_swap_parquet(df: DataFrame, table_path: str) -> None:
     table format (MERGE INTO / snapshot commit); this keeps the same
     update contract dependency-free.
     """
-    import uuid
-
     new_dir = f"{table_path}.v-{uuid.uuid4().hex[:8]}"
     df.write.mode("overwrite").parquet(new_dir)
     swap_dir(table_path, new_dir)
@@ -241,14 +246,12 @@ def swap_dir(table_path: str, new_dir: str) -> None:
     """Point ``table_path`` at the fully-written directory ``new_dir``
     (a ``<table_path>.v-XXXX`` sibling) atomically via link-over-link
     rename, migrating a legacy plain directory and removing the
-    previous version. The swap half of :func:`atomic_swap_parquet`,
-    shared by every sink that commits multi-file state in one step
-    (streaming dedup state commits ``index/`` + ``pairs/`` + meta as a
-    whole through this)."""
-    import os
-    import shutil
-    import uuid
-
+    previous version. The swap half of :func:`atomic_swap_parquet`
+    (compaction, retention and forget passes) and of
+    :func:`commit_state_version` (the foreachBatch state of the dedup,
+    WARC, shard, SCD2, token-budget and boilerplate sinks in
+    ``streaming/``, each committing its sub-tables + ``meta.json`` as a
+    whole)."""
     parent = os.path.dirname(os.path.abspath(table_path))
     if os.name == "nt":  # pragma: no cover - POSIX container
         # Windows: symlinks need elevation and rename cannot overwrite —
@@ -287,13 +290,11 @@ def append_parquet_state(delta: DataFrame, prev_dir: str | None, out_dir: str) -
     accumulated state instead of batch size (r15, guide §5/§6: batch N
     re-read and re-wrote batches 1..N−1 for nothing).
 
-    Only valid for append-only sub-tables (docs, pairs, quarantine
-    logs); merged aggregates (stats, line-df) must keep the rewrite.
+    Only valid for append-only sub-tables (dedup ``index``/``pairs``,
+    WARC/shard ``docs``, shard ``quarantine``, token-budget
+    ``admitted``); merged aggregates (hosts, stats, dim, line-df) must
+    keep the rewrite.
     """
-    import os
-    import shutil
-    import uuid
-
     delta.write.parquet(out_dir)
     if prev_dir is None or not os.path.isdir(prev_dir):
         return
@@ -312,6 +313,86 @@ def append_parquet_state(delta: DataFrame, prev_dir: str | None, out_dir: str) -
             os.link(src, dst)
         except OSError:
             shutil.copy2(src, dst)
+
+
+# Versioned state directories (the foreachBatch sinks in streaming/):
+# ``<state>`` is a symlink to ``<state>.v-XXXXXXXX/``, which holds the
+# sink's parquet sub-tables plus ``meta.json`` = {"last_batch": id, ...}.
+# One version is one batch: everything a batch changes is written into a
+# fresh version directory and published by one swap_dir, so readers and
+# a restarted stream see all of a batch or none of it.
+
+
+def _version_dir(state_path: str) -> str | None:
+    if os.path.islink(state_path):
+        return os.path.join(
+            os.path.dirname(os.path.abspath(state_path)), os.readlink(state_path)
+        )
+    return state_path if os.path.isdir(state_path) else None
+
+
+def read_state_version(state_path: str) -> tuple[str | None, dict]:
+    """The current version of a versioned state directory: (directory,
+    parsed ``meta.json``). The directory is the symlink target, a legacy
+    plain directory at ``state_path`` itself, or None when nothing has
+    been committed; the dict is ``{}`` when ``meta.json`` is absent."""
+    cur = _version_dir(state_path)
+    meta = os.path.join(cur, "meta.json") if cur else None
+    if meta is None or not os.path.exists(meta):
+        return cur, {}
+    with open(meta) as f:
+        return cur, json.load(f)
+
+
+def hwm_skip(hwm: int, batch_id: int, state_path: str) -> bool:
+    """True iff this batch is a foreachBatch RETRY of the committed last
+    batch (state ahead of checkpoint) and must be skipped whole.
+
+    foreachBatch only ever retries the LAST batch, so an id strictly
+    below the high-water mark means the checkpoint lineage does not
+    match this state (e.g. a fresh checkpoint_dir pointed at an
+    existing state path — batch ids restart at 0). Silently skipping
+    would drop every incoming batch; fail loudly instead."""
+    if hwm == batch_id:
+        return True
+    if hwm > batch_id:
+        raise ValueError(
+            f"state at {state_path} has last_batch={hwm} but the stream "
+            f"delivered batch_id={batch_id}: checkpoint lineage mismatch. "
+            "Resume with the original checkpoint_dir, or start a new "
+            "state path for a new checkpoint."
+        )
+    return False
+
+
+def commit_state_version(
+    state_path: str,
+    batch_id: int,
+    append: dict[str, DataFrame] | None = None,
+    rewrite: dict[str, DataFrame] | None = None,
+    extra: dict | None = None,
+) -> None:
+    """Commit one batch as a new version of ``state_path``: ``append``
+    sub-tables advance by :func:`append_parquet_state` (batch rows +
+    hard links to the current version's files, O(batch)), ``rewrite``
+    sub-tables are written whole, ``meta.json`` becomes
+    ``{"last_batch": batch_id, **extra}``, then :func:`swap_dir`
+    publishes the directory. Every write reads the current version,
+    which stays in place until the swap, so no pre-write checkpoint is
+    needed."""
+    cur = _version_dir(state_path)
+    new_dir = f"{state_path}.v-{uuid.uuid4().hex[:8]}"
+    for name, df in (append or {}).items():
+        append_parquet_state(
+            df,
+            os.path.join(cur, name) if cur else None,
+            os.path.join(new_dir, name),
+        )
+    for name, df in (rewrite or {}).items():
+        df.write.parquet(os.path.join(new_dir, name))
+    with open(os.path.join(new_dir, "meta.json"), "w") as f:
+        json.dump({"last_batch": int(batch_id), **(extra or {})}, f)
+    swap_dir(state_path, new_dir)
 
 
 def expire_rows(

@@ -12,8 +12,8 @@ oracle pins.
 
 State and exactly-once: one parquet sub-table (``linedf/``) plus the
 total document count and batch high-water mark in ``meta.json``,
-committed through the whole-directory symlink swap (dedup-sink
-pattern).  The hwm guard is load-bearing: counts are ADDITIVE, so a
+committed as one version of the shared state directory
+(``sources.sinks.commit_state_version``).  The hwm guard is load-bearing: counts are ADDITIVE, so a
 replayed foreachBatch would double-count.
 
 Scale: per batch, one explode + one (line) hash-aggregation with
@@ -26,18 +26,17 @@ exactly as in batch mode.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hive_udf_spark.functions.lines import split_lines_sql
-from hive_udf_spark.sources.sinks import swap_dir
-from hive_udf_spark.streaming.dedup_sink import _hwm_skip, _resolve
-
-LINEDF_SCHEMA = "line string, df long"
+from hive_udf_spark.sources.sinks import (
+    commit_state_version,
+    hwm_skip,
+    read_state_version,
+)
 
 
 def incremental_line_df_sink(
@@ -50,23 +49,12 @@ def incremental_line_df_sink(
     """Maintain the per-line document-frequency table over a stream of
     (doc_id, page) rows.  Returns the started StreamingQuery; read the
     state with ``spark.read.parquet(f"{state_path}/linedf")`` and the
-    document total from ``meta.json``."""
+    document total as ``read_state_version(state_path)[1]["n_docs"]``."""
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        cur = _resolve(state_path)
-        state = None
-        hwm, n_docs = -1, 0
-        if cur is not None:
-            meta = os.path.join(cur, "meta.json")
-            if os.path.exists(meta):
-                m = json.load(open(meta))
-                hwm = m.get("last_batch", -1)
-                n_docs = m.get("n_docs", 0)
-            d = os.path.join(cur, "linedf")
-            if os.path.exists(d):
-                state = spark.read.parquet(d)
-        if _hwm_skip(hwm, batch_id, state_path):
+        cur, meta = read_state_version(state_path)
+        if hwm_skip(meta.get("last_batch", -1), batch_id, state_path):
             return
         batch_docs = batch_df.select(id_col).distinct().count()
         lines = batch_df.select(
@@ -76,17 +64,17 @@ def incremental_line_df_sink(
         delta = lines.groupBy("line").agg(
             F.countDistinct("__doc").cast("long").alias("df")
         )
-        merged = (
-            state.unionByName(delta) if state is not None else delta
-        ).groupBy("line").agg(F.sum("df").cast("long").alias("df"))
-        new_dir = f"{state_path}.v-{uuid.uuid4().hex[:8]}"
-        merged.write.parquet(os.path.join(new_dir, "linedf"))
-        with open(os.path.join(new_dir, "meta.json"), "w") as f:
-            json.dump(
-                {"last_batch": int(batch_id), "n_docs": int(n_docs + batch_docs)},
-                f,
+        if cur is not None:
+            delta = spark.read.parquet(os.path.join(cur, "linedf")).unionByName(
+                delta
             )
-        swap_dir(state_path, new_dir)
+        merged = delta.groupBy("line").agg(F.sum("df").cast("long").alias("df"))
+        commit_state_version(
+            state_path,
+            batch_id,
+            rewrite={"linedf": merged},
+            extra={"n_docs": int(meta.get("n_docs", 0) + batch_docs)},
+        )
 
     return (
         pages.writeStream.foreachBatch(_merge)

@@ -21,31 +21,30 @@ order is biased toward early arrivals, and that bias is part of the
 contract, not an accident.
 
 State and exactly-once: one parquet sub-table (``admitted/``) plus the
-batch high-water mark, committed through the same whole-directory
-symlink swap as the dedup sink — a foreachBatch retry skips the whole
-batch (admission re-runs would double-count weights, unlike idempotent
-sketch unions, so the hwm check is load-bearing here).
+batch high-water mark, committed as one version of the shared state
+directory (``sources.sinks.commit_state_version``) — a foreachBatch
+retry skips the whole batch (admission re-runs would double-count
+weights, unlike idempotent sketch unions, so the hwm check is
+load-bearing here).
 
 Scale: per batch, one partitioned window over the batch's rows and one
 broadcast join against the per-source totals relation (|sources| rows).
-The admitted table is append-only; totals derive from it with one
+The admitted table is append-only: a commit writes only the batch's rows
+and hard-links the previous files (O(batch)). Totals derive from it with one
 aggregation — no per-doc driver state anywhere.
 """
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from hive_udf_spark.sources.sinks import swap_dir
-from hive_udf_spark.streaming.dedup_sink import _hwm_skip, _resolve
-
-ADMITTED_SCHEMA = (
-    "doc_id long, source string, n_chars long, batch_id long, cum_weight long"
+from hive_udf_spark.sources.sinks import (
+    commit_state_version,
+    hwm_skip,
+    read_state_version,
 )
 
 
@@ -67,26 +66,19 @@ def token_budget_admission_sink(
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        cur = _resolve(state_path)
-        admitted = None
-        hwm = -1
-        if cur is not None:
-            meta = os.path.join(cur, "meta.json")
-            if os.path.exists(meta):
-                hwm = json.load(open(meta)).get("last_batch", -1)
-            adm_dir = os.path.join(cur, "admitted")
-            if os.path.exists(adm_dir):
-                admitted = spark.read.parquet(adm_dir)
-        if _hwm_skip(hwm, batch_id, state_path):
+        cur, meta = read_state_version(state_path)
+        if hwm_skip(meta.get("last_batch", -1), batch_id, state_path):
             return
         b = batch_df.select(
             F.col(id_col).alias("doc_id"),
             F.col(part_col).alias("source"),
             F.col(weight_col).cast("long").alias("n_chars"),
         )
-        if admitted is not None:
-            base = admitted.groupBy("source").agg(
-                F.sum("n_chars").alias("__base")
+        if cur is not None:
+            base = (
+                spark.read.parquet(os.path.join(cur, "admitted"))
+                .groupBy("source")
+                .agg(F.sum("n_chars").alias("__base"))
             )
         else:
             base = spark.createDataFrame([], "source string, __base long")
@@ -111,14 +103,7 @@ def token_budget_admission_sink(
                 "cum_weight",
             )
         )
-        out = (
-            admitted.unionByName(new_rows) if admitted is not None else new_rows
-        )
-        new_dir = f"{state_path}.v-{uuid.uuid4().hex[:8]}"
-        out.write.parquet(os.path.join(new_dir, "admitted"))
-        with open(os.path.join(new_dir, "meta.json"), "w") as f:
-            json.dump({"last_batch": int(batch_id)}, f)
-        swap_dir(state_path, new_dir)
+        commit_state_version(state_path, batch_id, append={"admitted": new_rows})
 
     return (
         docs.writeStream.foreachBatch(_merge)

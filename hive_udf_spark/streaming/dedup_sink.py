@@ -11,10 +11,12 @@ appended to the index.
 
 Exactly-once across TWO tables with ONE commit: the state directory
 holds ``index/`` and ``pairs/`` sub-tables plus the batch high-water
-mark, and is replaced as a WHOLE through the symlink swap
-(sources/sinks.atomic_swap_parquet's mechanism, applied to the parent
-dir) — a crash can never leave the pairs table ahead of the index or
-vice versa, and a foreachBatch retry (hwm check) skips the whole batch.
+mark, and is replaced as a WHOLE (``sources.sinks.read_state_version`` /
+``hwm_skip`` / ``commit_state_version``, the versioned state directory
+every foreachBatch sink shares) — a crash can never leave the pairs
+table ahead of the index or vice versa, and a foreachBatch retry (hwm
+check) skips the whole batch. Both sub-tables are append-only, so each
+commit writes only the batch's rows and hard-links the previous files.
 
 Determinism: with a deterministic batch order (e.g. one file per batch,
 FileStreamSource order), the final pairs table equals the batch-mode
@@ -24,94 +26,20 @@ is what the registry oracle computes in SQL.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hive_udf_spark.sources.sinks import append_parquet_state, swap_dir
+from hive_udf_spark.sources.sinks import (
+    commit_state_version,
+    hwm_skip,
+    read_state_version,
+)
 
 PAIRS_SCHEMA = (
     "batch_id bigint, corpus_id bigint, inter_size bigint, union_size bigint"
 )
-
-
-def _resolve(state_path: str) -> str | None:
-    if os.path.islink(state_path):
-        return os.path.join(
-            os.path.dirname(os.path.abspath(state_path)), os.readlink(state_path)
-        )
-    if os.path.isdir(state_path):
-        return state_path
-    return None
-
-
-def _read_state(
-    spark: SparkSession, state_path: str
-) -> tuple[DataFrame | None, DataFrame | None, int]:
-    cur = _resolve(state_path)
-    if cur is None:
-        return None, None, -1
-    hwm = -1
-    meta = os.path.join(cur, "meta.json")
-    if os.path.exists(meta):
-        hwm = json.load(open(meta)).get("last_batch", -1)
-    index = spark.read.parquet(os.path.join(cur, "index"))
-    pairs_dir = os.path.join(cur, "pairs")
-    pairs = spark.read.parquet(pairs_dir) if os.path.exists(pairs_dir) else None
-    return index, pairs, hwm
-
-
-def _hwm_skip(hwm: int, batch_id: int, state_path: str) -> bool:
-    """True iff this batch is a foreachBatch RETRY of the committed last
-    batch (state ahead of checkpoint) and must be skipped whole.
-
-    foreachBatch only ever retries the LAST batch, so an id strictly
-    below the high-water mark means the checkpoint lineage does not
-    match this state dir (e.g. a fresh checkpoint_dir pointed at an
-    existing state_path — batch ids restart at 0). Silently skipping
-    would drop every incoming batch; fail loudly instead."""
-    if hwm == batch_id:
-        return True
-    if hwm > batch_id:
-        raise ValueError(
-            f"state at {state_path} has last_batch={hwm} but the stream "
-            f"delivered batch_id={batch_id}: checkpoint lineage mismatch. "
-            "Resume with the original checkpoint_dir, or start a new "
-            "state_path for a new checkpoint."
-        )
-    return False
-
-
-def _commit_state(
-    state_path: str,
-    batch_index: DataFrame,
-    batch_pairs: DataFrame | None,
-    batch_id: int,
-) -> None:
-    """Advance both APPEND-ONLY sub-tables by one batch: write the
-    batch's delta rows, hard-link the previous version's files in
-    (sources.sinks.append_parquet_state — O(batch) per commit, r15),
-    stamp the hwm, swap atomically. The one-commit contract is
-    unchanged: nothing is visible until swap_dir."""
-    cur = _resolve(state_path)
-    new_dir = f"{state_path}.v-{uuid.uuid4().hex[:8]}"
-    append_parquet_state(
-        batch_index,
-        os.path.join(cur, "index") if cur else None,
-        os.path.join(new_dir, "index"),
-    )
-    if batch_pairs is not None:
-        append_parquet_state(
-            batch_pairs,
-            os.path.join(cur, "pairs") if cur else None,
-            os.path.join(new_dir, "pairs"),
-        )
-    with open(os.path.join(new_dir, "meta.json"), "w") as f:
-        json.dump({"last_batch": int(batch_id)}, f)
-    swap_dir(state_path, new_dir)  # atomic: whole state commits at once
 
 
 def incremental_dedup_sink(
@@ -136,13 +64,13 @@ def incremental_dedup_sink(
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        index, pairs, hwm = _read_state(spark, state_path)
-        if _hwm_skip(hwm, batch_id, state_path):
+        cur, meta = read_state_version(state_path)
+        if hwm_skip(meta.get("last_batch", -1), batch_id, state_path):
             return  # retry of a committed batch (state ahead of checkpoint)
         batch_df = batch_df.localCheckpoint(eager=True)
-        if index is not None:
-            new_pairs = probe_minhash_index(
-                index,
+        if cur is not None:
+            batch_pairs = probe_minhash_index(
+                spark.read.parquet(os.path.join(cur, "index")),
                 batch_df,
                 id_col,
                 text_col,
@@ -156,20 +84,20 @@ def incremental_dedup_sink(
                 F.col("inter_size").cast("long"),
                 F.col("union_size").cast("long"),
             )
-            batch_pairs = new_pairs
         else:
             batch_pairs = spark.createDataFrame([], PAIRS_SCHEMA)
         batch_index = build_minhash_index(
             batch_df, id_col, text_col, num_hashes, portable=portable
         )
-        # no pre-write checkpoint: _commit_state's parquet writes ARE the
+        # no pre-write checkpoint: the commit's parquet writes ARE the
         # materialization, and they complete while the old state dir still
-        # exists (swap_dir runs after both writes) — an eager checkpoint
-        # here would copy the O(state) index through the block store once
-        # more per batch for nothing (r14; the shard_sink trim, guide §5).
-        # Only the BATCH deltas are written: index/ and pairs/ are
-        # append-only, the previous files ride along as hard links (r15)
-        _commit_state(state_path, batch_index, batch_pairs, batch_id)
+        # exists — an eager checkpoint here would copy the O(state) index
+        # through the block store once more per batch for nothing (r14)
+        commit_state_version(
+            state_path,
+            batch_id,
+            append={"index": batch_index, "pairs": batch_pairs},
+        )
 
     return (
         docs.writeStream.foreachBatch(_merge)

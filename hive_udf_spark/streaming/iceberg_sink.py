@@ -65,6 +65,68 @@ def _iceberg_fields(batch_df: DataFrame) -> list[dict]:
     return fields
 
 
+def _already_committed(
+    table_path: str, version: int, app_id: str, batch_id: int
+) -> bool:
+    """The retry check of a sink that pins metadata version
+    ``v{version}`` to ``batch_id``: False when that version does not
+    exist yet, True when it does and holds this app's commit of this
+    batch (a retried batch: the publish already happened), and a
+    ValueError otherwise.  A fresh checkpoint pointed at an existing
+    table resets batch ids to 0; silently no-opping would DROP data and
+    re-publishing would duplicate snapshot ids (r12 ADVICE)."""
+    meta_path = os.path.join(
+        table_path, "metadata", f"v{version}.metadata.json"
+    )
+    if not os.path.exists(meta_path):
+        return False
+    try:
+        with open(meta_path) as fh:
+            existing = json.load(fh)
+        summaries = [s.get("summary") or {}
+                     for s in existing.get("snapshots") or []]
+    except (OSError, json.JSONDecodeError):
+        summaries = []
+    if any(s.get("app-id") == app_id
+           and s.get("batch-id") == str(batch_id) for s in summaries):
+        return True
+    raise ValueError(
+        f"iceberg sink: metadata version v{version} exists but was "
+        f"not committed by app {app_id!r} batch {batch_id} — "
+        "restarting a stream with a fresh checkpoint against an "
+        "existing table would drop or duplicate batches; point the "
+        "sink at a new table or reuse the original checkpoint"
+    )
+
+
+def _write_data_files(
+    df: DataFrame, table_path: str, scratch_name: str, file_prefix: str,
+    batch_id: int,
+) -> list[tuple[str, int]]:
+    """Distributed write of ``df`` into ``<table>/<scratch_name>``, then
+    move each NON-empty part (empty shuffle parts don't belong in
+    manifests) to ``data/<file_prefix>-<batch>-<i>.parquet``.  Names
+    are deterministic per batch, so a retry overwrites its own orphans
+    instead of stacking new ones.  Returns [(relative path, rows)]."""
+    import pyarrow.parquet as _pq
+
+    os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
+    scratch = os.path.join(table_path, scratch_name)
+    df.write.mode("overwrite").parquet(scratch)
+    out = []
+    for i, part in enumerate(sorted(
+        p for p in os.listdir(scratch) if p.endswith(".parquet")
+    )):
+        n = _pq.ParquetFile(os.path.join(scratch, part)).metadata.num_rows
+        if n == 0:
+            continue
+        rel = f"data/{file_prefix}-{batch_id:010d}-{i:05d}.parquet"
+        os.replace(os.path.join(scratch, part), os.path.join(table_path, rel))
+        out.append((rel, n))
+    shutil.rmtree(scratch)
+    return out
+
+
 def commit_batch_to_iceberg(
     batch_df: DataFrame, batch_id: int, table_path: str,
     app_id: str = "iceberg-ingest",
@@ -86,12 +148,7 @@ def commit_batch_to_iceberg(
     the snapshot summary's app-id/batch-id is the idempotency key,
     versions/snapshot-ids/sequence-numbers continue from whatever the
     log is at, and batch ids must stay contiguous per app."""
-    from hive_udf_spark.operators.avrocodec import encode_ocf
-    from hive_udf_spark.sources.iceberg import (
-        _MANIFEST_ENTRY_SCHEMA,
-        _MANIFEST_FILE_SCHEMA,
-        _load_metadata,
-    )
+    from hive_udf_spark.sources.iceberg import _load_metadata
 
     mdir = os.path.join(table_path, "metadata")
     if maintain_every:
@@ -138,30 +195,8 @@ def commit_batch_to_iceberg(
             maintain_every, maintain_target_files, retention_keep_last,
         )
     version = batch_id + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    if os.path.exists(meta_path):
-        # retried batch: the publish already happened — but ONLY if that
-        # version really is this stream's own commit.  A fresh
-        # checkpoint pointed at an existing table resets batch ids to 0;
-        # silently no-opping would DROP data and re-publishing would
-        # duplicate snapshot ids (r12 ADVICE) — refuse loudly instead.
-        try:
-            with open(meta_path) as fh:
-                existing = json.load(fh)
-            summaries = [s.get("summary") or {}
-                         for s in existing.get("snapshots") or []]
-        except (OSError, json.JSONDecodeError):
-            summaries = []
-        if any(s.get("app-id") == app_id
-               and s.get("batch-id") == str(batch_id) for s in summaries):
-            return False
-        raise ValueError(
-            f"iceberg sink: metadata version v{version} exists but was "
-            f"not committed by app {app_id!r} batch {batch_id} — "
-            "restarting a stream with a fresh checkpoint against an "
-            "existing table would drop or duplicate batches; point the "
-            "sink at a new table or reuse the original checkpoint"
-        )
+    if _already_committed(table_path, version, app_id, batch_id):
+        return False
     return _publish_snapshot(batch_df, batch_id, table_path, app_id,
                              version, 0, 0, 0)
 
@@ -181,27 +216,9 @@ def _publish_snapshot(
     mdir = os.path.join(table_path, "metadata")
     meta_path = os.path.join(mdir, f"v{version}.metadata.json")
     os.makedirs(mdir, exist_ok=True)
-    ddir = os.path.join(table_path, "data")
-    os.makedirs(ddir, exist_ok=True)
-    # distributed data write, deterministic per-batch file names so a
-    # retry overwrites its own orphans instead of stacking new ones
-    scratch = os.path.join(table_path, f"_scratch-{batch_id}")
-    batch_df.write.mode("overwrite").parquet(scratch)
-    import pyarrow.parquet as _pq
-
-    rels = []
-    rows_of: dict[str, int] = {}
-    for i, part in enumerate(sorted(
-        p for p in os.listdir(scratch) if p.endswith(".parquet")
-    )):
-        n = _pq.ParquetFile(os.path.join(scratch, part)).metadata.num_rows
-        if n == 0:
-            continue  # empty shuffle parts don't belong in manifests
-        rel = f"data/batch-{batch_id:010d}-{i:05d}.parquet"
-        os.replace(os.path.join(scratch, part), os.path.join(table_path, rel))
-        rels.append(rel)
-        rows_of[rel] = n
-    shutil.rmtree(scratch)
+    rels = _write_data_files(
+        batch_df, table_path, f"_scratch-{batch_id}", "batch", batch_id
+    )
     if version == 1:
         prev = None
         prev_manifests: list[dict] = []
@@ -247,12 +264,12 @@ def _publish_snapshot(
             "content": 0, "file_path": rel, "file_format": "PARQUET",
             # the spec REQUIRES true per-file row counts — external
             # engines plan metadata-only count(*) from them (r12 verdict)
-            "record_count": rows_of[rel],
+            "record_count": n,
             "file_size_in_bytes": os.path.getsize(
                 os.path.join(table_path, rel)),
             "column_sizes": None, "equality_ids": None, "partition": None,
         },
-    } for rel in rels]
+    } for rel, n in rels]
     mpath = os.path.join(mdir, f"stream-manifest-{sid}.avro")
     with open(mpath, "wb") as fh:
         fh.write(encode_ocf(_MANIFEST_ENTRY_SCHEMA, entries))

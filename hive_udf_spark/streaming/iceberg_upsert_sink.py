@@ -33,7 +33,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -54,39 +53,26 @@ def upsert_batch_to_iceberg(
     gating).  Returns
     False (no-op) on the already-committed retry; refuses foreign
     metadata versions like the append sink."""
-    import pyarrow.parquet as _pq
-
     from hive_udf_spark.operators.avrocodec import decode_ocf, encode_ocf
     from hive_udf_spark.sources.iceberg import (
         _MANIFEST_ENTRY_SCHEMA,
         _MANIFEST_FILE_SCHEMA,
         _load_metadata,
     )
-    from hive_udf_spark.streaming.iceberg_sink import _iceberg_fields
+    from hive_udf_spark.streaming.iceberg_sink import (
+        _already_committed,
+        _iceberg_fields,
+        _write_data_files,
+    )
 
     if key not in batch_df.columns:
         raise ValueError(f"iceberg upsert: batch has no {key!r} column")
     version = batch_id + 1
     mdir = os.path.join(table_path, "metadata")
     meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    if os.path.exists(meta_path):
-        try:
-            with open(meta_path) as fh:
-                existing = json.load(fh)
-            summaries = [s.get("summary") or {}
-                         for s in existing.get("snapshots") or []]
-        except (OSError, json.JSONDecodeError):
-            summaries = []
-        if any(s.get("app-id") == app_id
-               and s.get("batch-id") == str(batch_id) for s in summaries):
-            return False
-        raise ValueError(
-            f"iceberg upsert: metadata version v{version} exists but was "
-            f"not committed by app {app_id!r} batch {batch_id} — point "
-            "the sink at a new table or reuse the original checkpoint"
-        )
+    if _already_committed(table_path, version, app_id, batch_id):
+        return False
     os.makedirs(mdir, exist_ok=True)
-    os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
     has_del = DELETED_COL in batch_df.columns
     data_df = batch_df.drop(DELETED_COL) if has_del else batch_df
     if has_del:
@@ -99,20 +85,9 @@ def upsert_batch_to_iceberg(
     keys_df = batch_df.select(key)
     fields = _iceberg_fields(data_df)
     key_id = next(f["id"] for f in fields if f["name"] == key)
-    scratch = os.path.join(table_path, f"_upsert-{batch_id}")
-    live.write.mode("overwrite").parquet(scratch)
-    rels: list[tuple[str, int]] = []  # (rel path, rows)
-    for i, part in enumerate(sorted(
-        p for p in os.listdir(scratch) if p.endswith(".parquet")
-    )):
-        n = _pq.ParquetFile(os.path.join(scratch, part)).metadata.num_rows
-        if n == 0:
-            continue
-        rel = f"data/upsert-{batch_id:010d}-{i:05d}.parquet"
-        os.replace(os.path.join(scratch, part),
-                   os.path.join(table_path, rel))
-        rels.append((rel, n))
-    shutil.rmtree(scratch)
+    rels = _write_data_files(
+        live, table_path, f"_upsert-{batch_id}", "upsert", batch_id
+    )
     sid = 7000 + batch_id
     seq = version
     del_rels: list[tuple[str, int]] = []  # (rel path, rows)
@@ -124,20 +99,10 @@ def upsert_batch_to_iceberg(
         # contradicting the O(batch) executor-parallel claim) and each
         # non-empty part registers as its own equality-delete file —
         # the spec allows any number per snapshot.
-        del_scratch = os.path.join(table_path, f"_upsertdel-{batch_id}")
-        keys_df.write.mode("overwrite").parquet(del_scratch)
-        for i, part in enumerate(sorted(
-            p for p in os.listdir(del_scratch) if p.endswith(".parquet")
-        )):
-            n = _pq.ParquetFile(
-                os.path.join(del_scratch, part)).metadata.num_rows
-            if n == 0:
-                continue
-            rel = f"data/upsert-eqdel-{batch_id:010d}-{i:05d}.parquet"
-            os.replace(os.path.join(del_scratch, part),
-                       os.path.join(table_path, rel))
-            del_rels.append((rel, n))
-        shutil.rmtree(del_scratch)
+        del_rels = _write_data_files(
+            keys_df, table_path, f"_upsertdel-{batch_id}", "upsert-eqdel",
+            batch_id,
+        )
     prev = _load_metadata(table_path) if version > 1 else None
     if prev is None:
         snapshots: list[dict] = []

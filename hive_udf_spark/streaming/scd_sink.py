@@ -2,9 +2,11 @@
 
 Change batches arrive as a stream; each micro-batch merges into the
 stored type-2 dimension via ``operators/scd.scd2_apply`` and commits
-with the one-swap state contract shared with the dedup sink (dimension
-parquet + high-water-mark meta swapped atomically — readers see a
-complete dimension at every instant; a foreachBatch retry re-applies
+as one version of the shared state directory
+(``sources.sinks.read_state_version`` / ``hwm_skip`` /
+``commit_state_version``: the ``dim/`` parquet + high-water-mark meta
+swapped atomically — readers see a complete dimension at every
+instant; a foreachBatch retry re-applies
 the same batch, which scd2_apply makes a no-op, but the mark still
 skips it to avoid the rewrite; a strictly-lower batch id raises the
 lineage-mismatch error — replaying OLD batches over evolved state is
@@ -18,37 +20,17 @@ change stream.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from hive_udf_spark.operators.scd import scd2_apply
-from hive_udf_spark.sources.sinks import swap_dir
-from hive_udf_spark.streaming.dedup_sink import _hwm_skip, _resolve
-
-
-def _read_dim(
-    spark: SparkSession, state_path: str
-) -> tuple[DataFrame | None, int]:
-    cur = _resolve(state_path)
-    if cur is None:
-        return None, -1
-    hwm = -1
-    meta = os.path.join(cur, "meta.json")
-    if os.path.exists(meta):
-        hwm = json.load(open(meta)).get("last_batch", -1)
-    return spark.read.parquet(os.path.join(cur, "dim")), hwm
-
-
-def _commit_dim(state_path: str, dim: DataFrame, batch_id: int) -> None:
-    new_dir = f"{state_path}.v-{uuid.uuid4().hex[:8]}"
-    dim.write.parquet(os.path.join(new_dir, "dim"))
-    with open(os.path.join(new_dir, "meta.json"), "w") as f:
-        json.dump({"last_batch": int(batch_id)}, f)
-    swap_dir(state_path, new_dir)
+from hive_udf_spark.sources.sinks import (
+    commit_state_version,
+    hwm_skip,
+    read_state_version,
+)
 
 
 def scd2_dimension_sink(
@@ -68,8 +50,8 @@ def scd2_dimension_sink(
         if batch_df.isEmpty():
             return
         spark = batch_df.sparkSession
-        dim, hwm = _read_dim(spark, state_path)
-        if _hwm_skip(hwm, batch_id, state_path):
+        cur, meta = read_state_version(state_path)
+        if hwm_skip(meta.get("last_batch", -1), batch_id, state_path):
             return
         # latest change per key within the batch (deterministic)
         picked = (
@@ -88,7 +70,9 @@ def scd2_dimension_sink(
                 F.col("__m.__e").alias(effective_col),
             )
         )
-        if dim is None:
+        if cur is not None:
+            dim = spark.read.parquet(os.path.join(cur, "dim"))
+        else:
             dim = batch_df.select(
                 *key_cols,
                 *attr_cols,
@@ -96,10 +80,9 @@ def scd2_dimension_sink(
                 F.col(effective_col).alias("valid_to"),
             ).limit(0)
         new_dim = scd2_apply(dim, picked, key_cols, attr_cols, effective_col)
-        # materialize before the swap: the plan reads the CURRENT state
-        # dir, which the swap is about to replace
-        new_dim = new_dim.localCheckpoint(eager=True)
-        _commit_dim(state_path, new_dim, batch_id)
+        # no pre-write checkpoint: the write reads the current version,
+        # which stays in place until the commit's swap
+        commit_state_version(state_path, batch_id, rewrite={"dim": new_dim})
 
     return (
         changes.writeStream.foreachBatch(_apply)

@@ -33,19 +33,17 @@ of N shards decodes as N map tasks and only parsed rows ever shuffle.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hive_udf_spark.sources.sinks import append_parquet_state, swap_dir
-
-SHARD_DOCS_SCHEMA = (
-    "doc_id bigint, codec string, lang string, n_chars bigint, parsed_chars bigint"
+from hive_udf_spark.sources.sinks import (
+    commit_state_version,
+    hwm_skip,
+    read_state_version,
 )
-SHARD_STATS_SCHEMA = "codec string, lang string, n_docs bigint, total_chars bigint"
+
 SHARD_LINES_SCHEMA = "shard int, codec string, line string, decode_error string"
 
 # Per-shard decode cap: compressed shard formats carry no trustworthy
@@ -166,33 +164,6 @@ def decode_shard_lines(
     return shards.mapInPandas(run, SHARD_LINES_SCHEMA)
 
 
-def _resolve(state_path: str) -> str | None:
-    if os.path.islink(state_path):
-        return os.path.join(
-            os.path.dirname(os.path.abspath(state_path)), os.readlink(state_path)
-        )
-    if os.path.isdir(state_path):
-        return state_path
-    return None
-
-
-def _read_state(
-    spark: SparkSession, state_path: str
-) -> tuple[DataFrame | None, DataFrame | None, DataFrame | None, int]:
-    cur = _resolve(state_path)
-    if cur is None:
-        return None, None, None, -1
-    hwm = -1
-    meta = os.path.join(cur, "meta.json")
-    if os.path.exists(meta):
-        hwm = json.load(open(meta)).get("last_batch", -1)
-    docs = spark.read.parquet(os.path.join(cur, "docs"))
-    stats = spark.read.parquet(os.path.join(cur, "stats"))
-    qdir = os.path.join(cur, "quarantine")
-    quarantine = spark.read.parquet(qdir) if os.path.isdir(qdir) else None
-    return docs, stats, quarantine, hwm
-
-
 def incremental_shard_ingest_sink(
     shards: DataFrame,
     state_path: str,
@@ -206,23 +177,9 @@ def incremental_shard_ingest_sink(
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # only the merged stats table is re-READ per batch; docs/ and
-        # quarantine/ advance by hard-linked append below, so their
-        # (ever-growing) file sets are never re-opened
-        cur0 = _resolve(state_path)
-        hwm, stats = -1, None
-        if cur0 is not None:
-            meta = os.path.join(cur0, "meta.json")
-            if os.path.exists(meta):
-                hwm = json.load(open(meta)).get("last_batch", -1)
-            stats = spark.read.parquet(os.path.join(cur0, "stats"))
-        if hwm == batch_id:
+        cur, meta = read_state_version(state_path)
+        if hwm_skip(meta.get("last_batch", -1), batch_id, state_path):
             return  # retry of the committed batch: additive state, skip
-        if hwm > batch_id:
-            raise ValueError(
-                f"state at {state_path} has last_batch={hwm} but the stream "
-                f"delivered batch_id={batch_id}: checkpoint lineage mismatch."
-            )
         # one materialization: the decoded line stream feeds both the
         # quarantine branch and the parse branch (the Python shard
         # decode must not run twice); the raw batch itself is consumed
@@ -244,47 +201,34 @@ def incremental_shard_ingest_sink(
             F.col("r.n_chars").alias("n_chars"),
             F.length("r.text").cast("long").alias("parsed_chars"),
         )
-        batch_stats = batch_docs.groupBy("codec", "lang").agg(
+        stats = batch_docs.groupBy("codec", "lang").agg(
             F.count("*").cast("long").alias("n_docs"),
             F.sum("parsed_chars").cast("long").alias("total_chars"),
         )
-        if stats is not None:  # merge-on-write: additive fold
-            new_stats = (
-                stats.unionByName(batch_stats)
+        if cur is not None:  # merge-on-write: additive fold
+            stats = (
+                spark.read.parquet(os.path.join(cur, "stats"))
+                .unionByName(stats)
                 .groupBy("codec", "lang")
                 .agg(
                     F.sum("n_docs").cast("long").alias("n_docs"),
                     F.sum("total_chars").cast("long").alias("total_chars"),
                 )
             )
-        else:
-            new_stats = batch_stats
-        # the parquet writes below are the materialization — each plan
-        # reads the OLD state dir plus the checkpointed line stream and
-        # lands in new_dir, which only becomes visible via the swap
-        # after all three writes and the meta stamp succeed, so no
-        # intermediate eager checkpoint is needed (r14: dropping the
-        # three pre-write checkpoints removed three full extra passes
-        # per micro-batch). docs/ and quarantine/ are APPEND-ONLY:
-        # write the batch rows and hard-link the previous version's
-        # files (r15, O(batch) per commit — the union-rewrite re-read
-        # and re-wrote the whole accumulated state every batch); only
-        # the merged stats/ aggregate rewrites.
-        new_dir = f"{state_path}.v-{uuid.uuid4().hex[:8]}"
-        append_parquet_state(
-            batch_docs,
-            os.path.join(cur0, "docs") if cur0 else None,
-            os.path.join(new_dir, "docs"),
+        # the commit's parquet writes are the materialization — each plan
+        # reads the OLD state dir plus the checkpointed line stream, and
+        # nothing is visible until all three writes and the meta stamp
+        # succeed (r14: dropping the three pre-write checkpoints removed
+        # three full extra passes per micro-batch). docs/ and quarantine/
+        # are APPEND-ONLY, so only their batch rows are written (r15,
+        # O(batch) per commit); only the merged stats/ aggregate rewrites,
+        # and it is the only sub-table re-read per batch.
+        commit_state_version(
+            state_path,
+            batch_id,
+            append={"docs": batch_docs, "quarantine": batch_quar},
+            rewrite={"stats": stats},
         )
-        new_stats.write.parquet(os.path.join(new_dir, "stats"))
-        append_parquet_state(
-            batch_quar,
-            os.path.join(cur0, "quarantine") if cur0 else None,
-            os.path.join(new_dir, "quarantine"),
-        )
-        with open(os.path.join(new_dir, "meta.json"), "w") as f:
-            json.dump({"last_batch": int(batch_id)}, f)
-        swap_dir(state_path, new_dir)
 
     return (
         shards.writeStream.foreachBatch(_merge)

@@ -34,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hive_udf_spark.functions import approx_distinct, sketch_merge_agg
-from hive_udf_spark.sources.sinks import atomic_swap_parquet
+from hive_udf_spark.sources.sinks import atomic_swap_parquet, hwm_skip
 
 
 # The swap is the symlink-indirection one shared with sources.sinks —
@@ -54,27 +54,16 @@ def _merge_with_hwm(
 ) -> None:
     """Shared merge-on-write skeleton for NON-idempotent merge algebras
     (exact counters): read the stored table, skip the batch entirely if
-    its batch_id is at or below the stored ``__last_batch`` high-water
-    mark (a foreachBatch retry), union, re-aggregate via ``merge_fn``,
-    stamp the new mark in the same swap."""
+    its batch_id equals the stored ``__last_batch`` high-water mark (a
+    foreachBatch retry) and refuse a lower one (``sources.sinks.hwm_skip``,
+    the check every foreachBatch sink shares), union, re-aggregate via
+    ``merge_fn``, stamp the new mark in the same swap."""
     if os.path.exists(table_path):
         existing = spark.read.parquet(table_path)
         if batch_id is not None:
             hwm = existing.agg(F.max("__last_batch")).collect()[0][0]
-            if hwm is not None and hwm == batch_id:
+            if hwm is not None and hwm_skip(hwm, batch_id, table_path):
                 return  # retry of an already-merged batch
-            if hwm is not None and hwm > batch_id:
-                # foreachBatch only retries the LAST batch; a strictly
-                # lower id means this stream's checkpoint lineage does
-                # not match the stored table (fresh checkpoint_dir over
-                # an existing table_path restarts ids at 0). Skipping
-                # would silently drop every batch — fail loudly.
-                raise ValueError(
-                    f"table at {table_path} has __last_batch={hwm} but the "
-                    f"stream delivered batch_id={batch_id}: checkpoint "
-                    "lineage mismatch. Resume with the original "
-                    "checkpoint_dir, or start a new table_path."
-                )
         all_rows = existing.select(*cols).unionByName(batch_rows.select(*cols))
     else:
         all_rows = batch_rows.select(*cols)

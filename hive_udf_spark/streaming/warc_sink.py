@@ -7,7 +7,8 @@ pipeline as STREAMING STATE.
 Two tables, one commit: the state directory holds ``docs/`` (append-only
 extracted documents) and ``hosts/`` (merge-on-write per-host aggregates:
 doc count + total extracted chars) plus the batch high-water mark, all
-replaced as a whole through the symlink swap (``sources.sinks.swap_dir``)
+replaced as a whole as one version of the shared state directory
+(``sources.sinks.commit_state_version``)
 — a crash can never leave host counts ahead of the docs table, and a
 foreachBatch retry (hwm check) skips the whole batch, keeping the
 additive aggregates exactly-once.
@@ -20,42 +21,16 @@ oracle computes in SQL from the text layer alone.
 
 from __future__ import annotations
 
-import json
 import os
-import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from hive_udf_spark.sources.sinks import append_parquet_state, swap_dir
-
-HOSTS_SCHEMA = "host string, n_docs bigint, total_chars bigint"
-
-
-def _resolve(state_path: str) -> str | None:
-    if os.path.islink(state_path):
-        return os.path.join(
-            os.path.dirname(os.path.abspath(state_path)), os.readlink(state_path)
-        )
-    if os.path.isdir(state_path):
-        return state_path
-    return None
-
-
-def _read_state(
-    spark: SparkSession, state_path: str
-) -> tuple[DataFrame | None, DataFrame | None, int]:
-    cur = _resolve(state_path)
-    if cur is None:
-        return None, None, -1
-    hwm = -1
-    meta = os.path.join(cur, "meta.json")
-    if os.path.exists(meta):
-        hwm = json.load(open(meta)).get("last_batch", -1)
-    docs = spark.read.parquet(os.path.join(cur, "docs"))
-    hosts = spark.read.parquet(os.path.join(cur, "hosts"))
-    return docs, hosts, hwm
-
+from hive_udf_spark.sources.sinks import (
+    commit_state_version,
+    hwm_skip,
+    read_state_version,
+)
 
 def incremental_warc_ingest_sink(
     blobs: DataFrame,
@@ -72,29 +47,16 @@ def incremental_warc_ingest_sink(
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # docs/ advances by hard-linked append (r15): only the merged
-        # hosts aggregate is re-read per batch
-        cur0 = _resolve(state_path)
-        hwm, hosts = -1, None
-        if cur0 is not None:
-            meta = os.path.join(cur0, "meta.json")
-            if os.path.exists(meta):
-                hwm = json.load(open(meta)).get("last_batch", -1)
-            hosts = spark.read.parquet(os.path.join(cur0, "hosts"))
-        if hwm == batch_id:
+        cur, meta = read_state_version(state_path)
+        if hwm_skip(meta.get("last_batch", -1), batch_id, state_path):
             return  # retry of the committed batch: additive state, skip whole
-        if hwm > batch_id:
-            raise ValueError(
-                f"state at {state_path} has last_batch={hwm} but the stream "
-                f"delivered batch_id={batch_id}: checkpoint lineage mismatch."
-            )
         extracted_col = html_to_text(F.decode("body", "UTF-8"))
         # checkpoint the PARSED batch (gunzip → WARC walk → de-chunk →
         # markup strip), the expensive shared intermediate: both the docs
         # and the hosts writes consume it, so materializing here runs the
         # parse once per batch instead of once per output (r14, guide §5);
         # the downstream writes then materialize themselves — no further
-        # checkpoint needed, the old state dir survives until swap_dir
+        # checkpoint needed, the old state dir survives until the commit
         batch_docs = (
             warc_records_table(batch_df)
             .filter(F.col("warc_type") == "response")
@@ -108,33 +70,29 @@ def incremental_warc_ingest_sink(
             )
             .localCheckpoint(eager=True)
         )
-        batch_hosts = batch_docs.groupBy("host").agg(
+        hosts = batch_docs.groupBy("host").agg(
             F.count("*").cast("long").alias("n_docs"),
             F.sum("n_chars").cast("long").alias("total_chars"),
         )
-        if hosts is not None:  # merge-on-write: additive fold into state
-            new_hosts = (
-                hosts.unionByName(batch_hosts)
+        if cur is not None:  # merge-on-write: additive fold into state
+            hosts = (
+                spark.read.parquet(os.path.join(cur, "hosts"))
+                .unionByName(hosts)
                 .groupBy("host")
                 .agg(
                     F.sum("n_docs").cast("long").alias("n_docs"),
                     F.sum("total_chars").cast("long").alias("total_chars"),
                 )
             )
-        else:
-            new_hosts = batch_hosts
-        new_dir = f"{state_path}.v-{uuid.uuid4().hex[:8]}"
-        # append-only docs: batch rows + hard links to the previous
-        # version's files — O(batch) per commit (r15, guide §5/§6)
-        append_parquet_state(
-            batch_docs,
-            os.path.join(cur0, "docs") if cur0 else None,
-            os.path.join(new_dir, "docs"),
+        # docs/ is append-only: batch rows + hard links to the previous
+        # version's files, O(batch) per commit (r15); only the merged
+        # hosts/ aggregate is re-read and rewritten
+        commit_state_version(
+            state_path,
+            batch_id,
+            append={"docs": batch_docs},
+            rewrite={"hosts": hosts},
         )
-        new_hosts.write.parquet(os.path.join(new_dir, "hosts"))
-        with open(os.path.join(new_dir, "meta.json"), "w") as f:
-            json.dump({"last_batch": int(batch_id)}, f)
-        swap_dir(state_path, new_dir)
 
     return (
         blobs.writeStream.foreachBatch(_merge)

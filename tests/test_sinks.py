@@ -595,6 +595,23 @@ def test_point_in_time_join_renames_colliding_dim_attrs(spark):
     assert row.status == "fact-status" and row.status_r == "dim-status"
 
 
+def _admitted_by_window(rows, batch_of, budget):
+    """Batch-mode expectation of the admission sink: (doc_id, cum) for
+    every row whose running total over (source ORDER BY batch, id)
+    stays within ``budget``."""
+    want = set()
+    for srcname in {r[1] for r in rows}:
+        grp = sorted(
+            [r for r in rows if r[1] == srcname], key=lambda r: (batch_of(r[0]), r[0])
+        )
+        cum = 0
+        for i, _, w in grp:
+            cum += w
+            if cum <= budget:
+                want.add((i, cum))
+    return want
+
+
 def test_token_budget_admission_stream_matches_batch_window(spark, tmp_path):
     """Streamed arrival-order admission == batch window over
     (source ORDER BY batch, id); budgets exhausted in an early batch
@@ -628,22 +645,60 @@ def test_token_budget_admission_stream_matches_batch_window(spark, tmp_path):
         (r.doc_id, r.cum_weight)
         for r in spark.read.parquet(str(tmp_path / "state/admitted")).collect()
     }
-    # batch-mode expectation
-    want = set()
-    for srcname in ("a", "b"):
-        grp = sorted(
-            [r for r in rows if r[1] == srcname], key=lambda r: (r[0] % 3, r[0])
-        )
-        cum = 0
-        for i, _, w in grp:
-            cum += w
-            if cum <= 100:
-                want.add((i, cum))
-    assert got == want
+    assert got == _admitted_by_window(rows, lambda i: i % 3, 100)
     # source 'a' (40/doc) admits exactly 2 docs; both from batch 0
     a_rows = [r for r in spark.read.parquet(str(tmp_path / "state/admitted")).collect()
               if r.source == "a"]
     assert len(a_rows) == 2 and all(r.batch_id == 0 for r in a_rows)
+
+
+def test_token_budget_admission_commits_in_o_batch(spark, tmp_path):
+    """The admitted table is append-only, so a commit writes only the
+    batch's admitted rows: every part file of batch 0 is hard-linked
+    into batch 1's version (same inode), not rewritten, and the admitted
+    rows still equal the batch window."""
+    import os
+
+    from hive_udf_spark.streaming.budget_sink import token_budget_admission_sink
+
+    # batch = doc_id // 10; 'a' (40/doc) exhausts its budget in batch 0,
+    # 'b' (10/doc) admits in both batches
+    rows = [
+        (i, "a" if i % 2 == 0 else "b", 40 if i % 2 == 0 else 10) for i in range(20)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, source string, n_chars long")
+    src, state, ckpt = (str(tmp_path / n) for n in ("src", "state", "ckpt"))
+
+    def run_batch(b):
+        batch = docs.filter(F.col("doc_id").between(10 * b, 10 * b + 9))
+        batch.coalesce(1).write.parquet(f"{src}/b{b}")
+        stream = (
+            spark.readStream.schema("doc_id long, source string, n_chars long")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(f"{src}/*")
+        )
+        q = token_budget_admission_sink(stream, state, ckpt, budget=100)
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        adm = os.path.join(os.path.realpath(state), "admitted")
+        return {
+            n: os.stat(os.path.join(adm, n)).st_ino
+            for n in os.listdir(adm)
+            if n.endswith(".parquet")
+        }
+
+    parts0 = run_batch(0)
+    assert parts0
+    parts1 = run_batch(1)
+    assert {n: parts1.get(n) for n in parts0} == parts0
+    got = {
+        (r.doc_id, r.cum_weight)
+        for r in spark.read.parquet(f"{state}/admitted").collect()
+    }
+    want = _admitted_by_window(rows, lambda i: i // 10, 100)
+    assert got == want and any(i >= 10 for i, _ in want)
 
 
 def test_token_budget_admission_validation(spark, tmp_path):

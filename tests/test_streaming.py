@@ -461,10 +461,8 @@ def test_incremental_dedup_sink_stream_and_retry(spark, sf_dir, tmp_path):
         probe_minhash_index,
     )
     from hive_udf_spark.sources import load_table
-    from hive_udf_spark.streaming.dedup_sink import (
-        _read_state,
-        incremental_dedup_sink,
-    )
+    from hive_udf_spark.sources.sinks import read_state_version
+    from hive_udf_spark.streaming.dedup_sink import incremental_dedup_sink
 
     docs = load_table(spark, sf_dir, "documents")
     src = tmp_path / "src"
@@ -486,7 +484,10 @@ def test_incremental_dedup_sink_stream_and_retry(spark, sf_dir, tmp_path):
     finally:
         q.stop()
     assert os.path.islink(state)
-    index, pairs, hwm = _read_state(spark, state)
+    cur, meta = read_state_version(state)
+    index = spark.read.parquet(os.path.join(cur, "index"))
+    pairs = spark.read.parquet(os.path.join(cur, "pairs"))
+    hwm = meta["last_batch"]
     assert hwm == 2 and index.count() > 0
     got = sorted(
         (r.batch_id, r.corpus_id) for r in pairs.collect()
@@ -506,7 +507,7 @@ def test_incremental_dedup_sink_stream_and_retry(spark, sf_dir, tmp_path):
     assert got == sorted(want)
     # retry of the committed last batch: whole-batch skip, state unchanged
     before = sorted((r.batch_id, r.corpus_id) for r in pairs.collect())
-    _, _, hwm2 = _read_state(spark, state)
+    hwm2 = read_state_version(state)[1]["last_batch"]
     assert hwm2 == 2
     # hwm guard lives in the closure; exercise it by asserting a second
     # stream run over the SAME checkpoint does nothing
@@ -523,23 +524,75 @@ def test_incremental_dedup_sink_stream_and_retry(spark, sf_dir, tmp_path):
         q2.processAllAvailable()
     finally:
         q2.stop()
-    _, pairs3, hwm3 = _read_state(spark, state)
+    cur3, meta3 = read_state_version(state)
+    pairs3 = spark.read.parquet(os.path.join(cur3, "pairs"))
+    hwm3 = meta3["last_batch"]
     assert hwm3 == 2
     assert sorted((r.batch_id, r.corpus_id) for r in pairs3.collect()) == before
 
 
-def test_incremental_dedup_sink_lineage_mismatch_raises():
+def test_incremental_dedup_sink_lineage_mismatch_raises(spark, tmp_path):
     """batch_id strictly below the high-water mark = a fresh checkpoint
-    pointed at existing state; must raise, not silently drop batches."""
+    pointed at existing state; must raise, not silently drop batches.
+    Also: a legacy plain-directory state reads and resumes, and one
+    commit mixes append and rewrite sub-tables with an extra meta key."""
+    import json
+    import os
+    import re
+
     import pytest as _pytest
 
-    from hive_udf_spark.streaming.dedup_sink import _hwm_skip
+    from hive_udf_spark.sources.sinks import (
+        commit_state_version,
+        hwm_skip,
+        read_state_version,
+    )
 
-    assert _hwm_skip(-1, 0, "s") is False  # fresh state
-    assert _hwm_skip(3, 4, "s") is False  # next batch
-    assert _hwm_skip(4, 4, "s") is True  # retry of committed batch
+    assert hwm_skip(-1, 0, "s") is False  # fresh state
+    assert hwm_skip(3, 4, "s") is False  # next batch
+    assert hwm_skip(4, 4, "s") is True  # retry of committed batch
     with _pytest.raises(ValueError, match="lineage mismatch"):
-        _hwm_skip(4, 0, "s")
+        hwm_skip(4, 0, "s")
+
+    state = str(tmp_path / "state")
+    assert read_state_version(state) == (None, {})
+    # legacy layout: sub-tables and meta.json directly in <state>
+    spark.range(3).selectExpr("id AS k").write.parquet(f"{state}/log")
+    spark.range(2).selectExpr("id AS k").write.parquet(f"{state}/agg")
+    assert read_state_version(state) == (state, {})  # no meta.json yet
+    with open(f"{state}/meta.json", "w") as f:
+        json.dump({"last_batch": 0, "n": 3}, f)
+    assert read_state_version(state) == (state, {"last_batch": 0, "n": 3})
+    legacy_parts = {
+        n: os.stat(f"{state}/log/{n}").st_ino
+        for n in os.listdir(f"{state}/log")
+        if n.endswith(".parquet")
+    }
+    assert hwm_skip(0, 0, state) is True  # replay of the legacy batch
+    commit_state_version(
+        state,
+        1,
+        append={"log": spark.range(3, 5).selectExpr("id AS k")},
+        rewrite={"agg": spark.range(7).selectExpr("id AS k")},
+        extra={"n": 5},
+    )
+    assert os.path.islink(state)
+    cur, meta = read_state_version(state)
+    assert cur == os.path.join(str(tmp_path), os.readlink(state))
+    assert cur.startswith(f"{state}.v-")
+    assert meta == {"last_batch": 1, "n": 5}
+    assert sorted(r.k for r in spark.read.parquet(f"{state}/log").collect()) == [
+        0, 1, 2, 3, 4,
+    ]
+    assert spark.read.parquet(f"{state}/agg").count() == 7
+    # the legacy log files were hard-linked into the new version, not
+    # rewritten, and the legacy directory itself is gone
+    for n, ino in legacy_parts.items():
+        assert os.stat(f"{cur}/log/{n}").st_ino == ino
+    assert [p for p in os.listdir(tmp_path) if "legacy" in p] == []
+    assert hwm_skip(meta["last_batch"], 1, state) is True  # replay skipped
+    with _pytest.raises(ValueError, match=re.escape(f"state at {state} ")):
+        hwm_skip(meta["last_batch"], 0, state)
 
 
 def test_sketch_sink_lineage_mismatch_raises(spark, tmp_path):
@@ -664,8 +717,12 @@ def test_scd2_sink_sequential_batches_and_retry(spark, tmp_path):
     import pytest
     from pyspark.sql import functions as F
 
-    from hive_udf_spark.streaming.scd_sink import _commit_dim, _read_dim
     from hive_udf_spark.operators.scd import scd2_apply
+    from hive_udf_spark.sources.sinks import (
+        commit_state_version,
+        hwm_skip,
+        read_state_version,
+    )
 
     # drive the sink's _apply logic via its building blocks (the
     # registry query drives the real foreachBatch end-to-end)
@@ -681,16 +738,18 @@ def test_scd2_sink_sequential_batches_and_retry(spark, tmp_path):
         batch = spark.createDataFrame(
             rows, "k long, attr string, effective_ts timestamp"
         )
-        dim, hwm = _read_dim(spark, state)
-        assert hwm == b - 1
-        if dim is None:
+        cur, meta = read_state_version(state)
+        assert meta.get("last_batch", -1) == b - 1
+        if cur is not None:
+            dim = spark.read.parquet(f"{cur}/dim")
+        else:
             dim = batch.select(
                 "k", "attr",
                 F.col("effective_ts").alias("valid_from"),
                 F.col("effective_ts").alias("valid_to"),
             ).limit(0)
         new_dim = scd2_apply(dim, batch, ["k"], ["attr"]).localCheckpoint(eager=True)
-        _commit_dim(state, new_dim, b)
+        commit_state_version(state, b, rewrite={"dim": new_dim})
     got = sorted(
         (r.k, r.attr, r.valid_from, r.valid_to)
         for r in spark.read.parquet(f"{state}/dim").collect()
@@ -703,11 +762,9 @@ def test_scd2_sink_sequential_batches_and_retry(spark, tmp_path):
             (3, "q", t[1], None),
         ]
     )
-    from hive_udf_spark.streaming.dedup_sink import _hwm_skip
-
-    assert _hwm_skip(2, 2, state) is True  # retry skipped
+    assert hwm_skip(2, 2, state) is True  # retry skipped
     with pytest.raises(ValueError, match="lineage mismatch"):
-        _hwm_skip(2, 0, state)
+        hwm_skip(2, 0, state)
 
 
 def test_incremental_boilerplate_stream_equals_batch(spark, tmp_path):
@@ -780,10 +837,8 @@ def test_shard_ingest_sink_stream_and_retry(spark, sf_dir, tmp_path):
 
     from hive_udf_spark.plans.pipeline_queries import _build_shard_blobs
     from hive_udf_spark.sources import load_table
-    from hive_udf_spark.streaming.shard_sink import (
-        _read_state,
-        incremental_shard_ingest_sink,
-    )
+    from hive_udf_spark.sources.sinks import read_state_version
+    from hive_udf_spark.streaming.shard_sink import incremental_shard_ingest_sink
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
     shards = _build_shard_blobs(docs).localCheckpoint(eager=True)
@@ -818,7 +873,7 @@ def test_shard_ingest_sink_stream_and_retry(spark, sf_dir, tmp_path):
     assert got == {tuple(r) for r in want.collect()}
     # retry semantics: a second stream over the SAME checkpoint replays
     # nothing and the additive state must not move
-    _, _, _, hwm = _read_state(spark, state)
+    hwm = read_state_version(state)[1]["last_batch"]
     assert hwm >= 0
     docs_before = spark.read.parquet(f"{state}/docs").count()
     q2 = incremental_shard_ingest_sink(
@@ -832,7 +887,10 @@ def test_shard_ingest_sink_stream_and_retry(spark, sf_dir, tmp_path):
         q2.processAllAvailable()
     finally:
         q2.stop()
-    d2, s2, _, hwm2 = _read_state(spark, state)
+    cur2, meta2 = read_state_version(state)
+    d2 = spark.read.parquet(f"{cur2}/docs")
+    s2 = spark.read.parquet(f"{cur2}/stats")
+    hwm2 = meta2["last_batch"]
     assert hwm2 == hwm and d2.count() == docs_before
     assert {tuple(r) for r in s2.collect()} == got
 
