@@ -28,6 +28,7 @@ import logging
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.sql_formatter import SQLStringFormatter
 
 from hive_udf_spark.functions.hashing import fast_hash64, portable_hash60
 from hive_udf_spark.functions.text import ngrams, tokenize, word_set
@@ -73,18 +74,42 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _token_hash(token: Column, seed: int, portable: bool) -> Column:
-    return portable_hash60(token, seed) if portable else fast_hash64(token, seed)
+def _column_sql(col: Column | str) -> str:
+    """SQL text of a column reference, to splice into a parsed expression:
+    a name, or a Column that is a plain reference such as ``F.col(name)``
+    (the rule ``spark.sql`` applies to Column arguments)."""
+    if isinstance(col, str):
+        return "`" + col.replace("`", "``") + "`"
+    return SQLStringFormatter(SparkSession.active()).format("{0}", col)
+
+
+def _token_hash_sql(token: str, seed: int, portable: bool) -> str:
+    """SQL of ``functions.hashing.portable_hash60`` (``portable``) or
+    ``fast_hash64`` of ``token`` under ``seed``."""
+    if portable:
+        return f"CAST(conv(substring(md5(concat('{seed}:', {token})), 1, 15), 16, 10) AS BIGINT)"
+    return f"xxhash64({seed}, {token})"
 
 
 def minhash_signature(
-    tokens: Column, num_hashes: int = 16, portable: bool = False
+    tokens: Column | str, num_hashes: int = 16, portable: bool = False
 ) -> Column:
     """Array of per-seed min-hashes over a token array (the MinHash
     signature; Broder 1997). Computed entirely at scan time — one
-    ``array_min(transform(...))`` per seed, no shuffle, no Python."""
-    return F.array(
-        *[F.array_min(F.transform(tokens, lambda t: _token_hash(t, seed, portable))) for seed in range(num_hashes)]
+    ``array_min(transform(...))`` per seed, no shuffle, no Python.
+
+    ``tokens`` is a column name or a plain column reference. The whole
+    signature is one parsed SQL expression: built through the Python API
+    it took about 40 py4j round trips per seed (60 portable), 600-1000 per
+    signature, on every call of the operators that compute one."""
+    t = _column_sql(tokens)
+    return F.expr(
+        "array("
+        + ", ".join(
+            f"array_min(transform({t}, __t -> {_token_hash_sql('__t', seed, portable)}))"
+            for seed in range(num_hashes)
+        )
+        + ")"
     )
 
 
@@ -120,7 +145,7 @@ def _token_sets(
     )
     if num_hashes is None:
         return sets
-    return sets.withColumn("sig", minhash_signature(F.col("__w"), num_hashes, portable))
+    return sets.withColumn("sig", minhash_signature("__w", num_hashes, portable))
 
 
 def _materialized(df: DataFrame, caches: list[DataFrame] | None) -> DataFrame:
@@ -213,15 +238,16 @@ def _sig_agreement_unrolled(sig_a: str, sig_b: str, num_hashes: int) -> Column:
     higher-order functions are CodegenFallback (interpreted lambda
     evaluation per element PER CANDIDATE PAIR — the hottest row count in
     the pipeline). Value-identical: signatures always have exactly
-    ``num_hashes`` components and integer addition is associative."""
-    terms = [
-        (F.element_at(F.col(sig_a), i) == F.element_at(F.col(sig_b), i)).cast("int")
-        for i in range(1, num_hashes + 1)
-    ]
-    est = terms[0]
-    for t in terms[1:]:
-        est = est + t
-    return est
+    ``num_hashes`` components and integer addition is associative. One
+    parsed SQL expression, as :func:`minhash_signature` (through the
+    Python API it took about 1,700 py4j round trips at 16 hashes)."""
+    a, b = _column_sql(sig_a), _column_sql(sig_b)
+    return F.expr(
+        " + ".join(
+            f"CAST(element_at({a}, {i}) = element_at({b}, {i}) AS INT)"
+            for i in range(1, num_hashes + 1)
+        )
+    )
 
 
 def jaccard_pair_stats(tokens_a: Column, tokens_b: Column) -> tuple[Column, Column]:

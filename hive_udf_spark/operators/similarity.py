@@ -32,6 +32,8 @@ sharding, partition the corpus by bucket prefix so probes prune partitions.
 
 from __future__ import annotations
 
+import json
+
 import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -278,20 +280,28 @@ def int_signature_expr(planes: list[list[int]], qv_col: str = "__qv") -> Column:
     objects: building the equivalent expression tree through the Python
     API costs thousands of py4j round trips (~3.5 s of pure plan
     CONSTRUCTION at nbits=32, dim=64); a single parsed expr is
-    milliseconds and yields the identical Catalyst plan.
+    milliseconds. Each plane enters the plan as one typed literal
+    (:func:`_literal_sql`).
+
+    One fold per plane, not one fold over the plane matrix: a single
+    reference to ``qv_col`` inside a matrix lambda lets Catalyst's
+    CollapseProject inline the quantization into the lambda, where it
+    would run once per plane; ``nbits`` references keep it in its own
+    projection.
 
     (r15 A/B, kept as the fold: unrolling every plane dot into
     element_at multiply-adds — 2048 codegen terms at 32×64 — REGRESSED
-    the LSH entries ~2.5x: the giant expression's parse/codegen compile
-    is paid per plan and dwarfs the interpreted-fold savings at one
-    signature per ROW. Per-PAIR dots are a different regime — see
-    ``dot_int_unrolled``.)
+    the LSH entries ~2.5x, because that expression's parse and its
+    codegen compile were paid per plan and dwarfed the interpreted-fold
+    savings at one signature per ROW. ``get_spark``'s generated-class
+    cache now pays the compile once per session, but each plan still
+    parses and analyzes the expression. Per-PAIR dots are a different
+    regime — see ``dot_int_unrolled``.)
     """
     terms = []
     for j, row in enumerate(planes):
-        vals = ", ".join(str(v) for v in row)
         dot = (
-            f"aggregate(zip_with({qv_col}, array({vals}), (x, y) -> x * y), "
+            f"aggregate(zip_with({qv_col}, {_literal_sql(row, 'bigint')}, (x, y) -> x * y), "
             f"CAST(0 AS BIGINT), (a, x) -> a + x)"
         )
         terms.append(f"IF({dot} > 0, CAST({2 ** j} AS BIGINT), CAST(0 AS BIGINT))")
@@ -336,19 +346,12 @@ def random_projection_quantized(
     chosen out_dim. The matrix never leaves the driver (it is
     O(out·in) ints embedded in the plan), so there is no broadcast and
     no Python worker anywhere."""
-    S = jl_sign_matrix(in_dim, out_dim, seed)
-    mat = "array(" + ", ".join(
-        "array(" + ", ".join(str(v) for v in row) + ")" for row in S
-    ) + ")"
+    mat = _literal_sql(jl_sign_matrix(in_dim, out_dim, seed), "bigint")
     q = (
         f"transform(`{vec_col}`, __e -> "
         f"CAST(round(CAST(__e AS DOUBLE) * {scale}) AS BIGINT))"
     )
-    proj = (
-        f"transform({mat}, __s -> aggregate(zip_with({q}, __s, "
-        f"(__x, __y) -> __x * __y), CAST(0 AS BIGINT), (__a, __x) -> __a + __x))"
-    )
-    return df.select(F.col(id_col), F.expr(proj).alias("proj"))
+    return df.select(F.col(id_col), F.expr(_dots_sql(q, mat, "BIGINT")).alias("proj"))
 
 
 def _band_bits(nbits: int, bands: int) -> int:
@@ -485,29 +488,39 @@ def embedding_near_pairs_lsh(
 
 # ---------------------------------------------------------------------------
 # Literal-matrix JVM expression builders (the single-parsed-SQL-expr trick):
-# constants (hyperplanes, centroids, codebooks) become ONE literal
-# array-of-arrays inside a transform/aggregate lambda, so per-row math runs
-# entirely in codegen'd JVM expressions — no Python worker in the plan, no
-# per-session Arrow/worker spin-up, and only O(1) parsed expressions
-# regardless of matrix size (vs thousands of py4j-built Column objects).
+# constants (hyperplanes, centroids, codebooks, the integer plane and JL
+# matrices) enter the plan as ONE typed literal inside a transform/aggregate
+# lambda, so per-row math runs entirely in JVM expressions — no Python
+# worker in the plan and one parsed expression regardless of matrix size
+# (vs thousands of py4j-built Column objects). The literal is
+# ``from_json('<matrix as JSON>', 'array<array<double>>')``: the parser
+# and analyzer see one string, not K·dim element literals, and
+# ConstantFolding turns it into a single array literal before planning.
 # ---------------------------------------------------------------------------
 
 
-def _dvec_sql(row) -> str:
-    # string→double cast: Double.parseDouble round-trips repr(float) exactly
-    return "array(" + ", ".join(f"CAST('{float(v)!r}' AS DOUBLE)" for v in row) + ")"
+def _literal_sql(values, elem: str = "double") -> str:
+    """SQL of the constant array ``values`` (any nesting depth) as one
+    typed literal of ``elem`` elements. JSON numbers carry Python's
+    shortest round-trip repr of each float64, which the JSON reader parses
+    back to the same bits. ``from_json`` is typed nullable; the
+    ``coalesce`` with an empty array makes the literal non-nullable, so
+    keys computed from it stay non-nullable (Catalyst infers an
+    ``isnotnull`` filter on a nullable join key). It folds away with the
+    ``from_json``."""
+    arr = np.asarray(values)
+    typ = elem
+    for _ in range(arr.ndim):
+        typ = f"array<{typ}>"
+    return f"coalesce(from_json('{json.dumps(arr.tolist())}', '{typ}'), array())"
 
 
-def _dmat_sql(M) -> str:
-    return "array(" + ", ".join(_dvec_sql(r) for r in M) + ")"
-
-
-def _dots_sql(vec_sql: str, mat_sql: str) -> str:
-    """array<double>: inner product of ``vec_sql`` with every row of the
-    literal matrix."""
+def _dots_sql(vec_sql: str, mat_sql: str, typ: str = "DOUBLE") -> str:
+    """array<``typ``>: inner product of ``vec_sql`` with every row of the
+    literal matrix, each a sequential left fold."""
     return (
         f"transform({mat_sql}, __p -> aggregate(zip_with({vec_sql}, __p, "
-        f"(__x, __y) -> __x * __y), CAST(0 AS DOUBLE), (__a, __x) -> __a + __x))"
+        f"(__x, __y) -> __x * __y), CAST(0 AS {typ}), (__a, __x) -> __a + __x))"
     )
 
 
@@ -542,7 +555,7 @@ def _topn_idx_sql(arr_sql: str, n: int, topn: int) -> str:
 def _signature_expr(planes: np.ndarray, vec_col: str) -> Column:
     """Hyperplane sign-bit signature packed into a BIGINT, all JVM."""
     nbits = planes.shape[0]
-    dots = _dots_sql(f"`{vec_col}`", _dmat_sql(planes))
+    dots = _dots_sql(f"`{vec_col}`", _literal_sql(planes))
     return F.expr(
         f"aggregate(zip_with({dots}, sequence(0, {nbits - 1}), "
         f"(__d, __j) -> IF(__d > 0, shiftleft(CAST(1 AS BIGINT), CAST(__j AS INT)), "
@@ -752,14 +765,14 @@ def _ivf_cell_expr(centroids: np.ndarray, vec_sql: str) -> Column:
     ``isnotnull`` filter on a nullable join key and pushes it through the
     ``Repartition`` of ``ensure_min_parallelism`` into the single-task
     scan stage, where the K·dim fold would run a second time."""
-    dots = _dots_sql(vec_sql, _dmat_sql(centroids))
+    dots = _dots_sql(vec_sql, _literal_sql(centroids))
     return F.expr(f"coalesce(CAST({_argbest_sql(dots, len(centroids))} AS INT), -1)")
 
 
 def _ivf_probe_expr(centroids: np.ndarray, vec_sql: str, nprobe: int) -> Column:
     """array<int> of the nprobe nearest centroid ids (cosine order, ties
     to lower id — np.argsort(-sims) order), all JVM."""
-    dots = _dots_sql(vec_sql, _dmat_sql(centroids))
+    dots = _dots_sql(vec_sql, _literal_sql(centroids))
     return F.expr(_topn_idx_sql(dots, len(centroids), nprobe))
 
 
@@ -869,7 +882,7 @@ def _pq_encode_expr(books: np.ndarray, vec_col: str) -> Column:
     for s in range(n_sub):
         sub_vec = f"slice(`{vec_col}`, {s * sub + 1}, {sub})"
         d2 = (
-            f"transform({_dmat_sql(books[s])}, __c -> aggregate("
+            f"transform({_literal_sql(books[s])}, __c -> aggregate("
             f"zip_with({sub_vec}, __c, (__x, __y) -> (CAST(__x AS DOUBLE) - __y) * "
             f"(CAST(__x AS DOUBLE) - __y)), CAST(0 AS DOUBLE), (__a, __x) -> __a + __x))"
         )
@@ -907,7 +920,7 @@ def _pq_lut_expr(books: np.ndarray, vec_col: str) -> Column:
     parts = []
     for s in range(n_sub):
         sub_vec = f"slice(`{vec_col}`, {s * sub + 1}, {sub})"
-        parts.append(_dots_sql(sub_vec, _dmat_sql(books[s])))
+        parts.append(_dots_sql(sub_vec, _literal_sql(books[s])))
     return F.expr("flatten(array(" + ", ".join(parts) + "))")
 
 

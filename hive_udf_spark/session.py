@@ -14,6 +14,10 @@ from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
+# Generated classes the JVM keeps compiled (Spark's default is 100); the
+# get_spark docstring gives the working set this is sized for.
+CODEGEN_CACHE_ENTRIES = 1000
+
 
 def get_spark(app_name: str = "hive_udf_spark", shuffle_partitions: str | int | None = None) -> SparkSession:
     """Build (or fetch) a SparkSession with engine defaults.
@@ -23,6 +27,16 @@ def get_spark(app_name: str = "hive_udf_spark", shuffle_partitions: str | int | 
     - UTC session timezone: parity with DuckDB's UTC-naive timestamps.
     - shuffle.partitions ~ cores in local mode; at cluster scale set to
       ~2-3x total executor cores via submit conf.
+    - Generated-class cache of ``CODEGEN_CACHE_ENTRIES`` (1000): a
+      repeated operator call compiles nothing. One pass of perfbench's
+      corpus_pipeline (exact dedup, near-dup pairs, clusters, IVF
+      training and search, hyperplane LSH) compiles about 135 classes,
+      so under Spark's default of 100 every warm pass evicted and
+      recompiled 99 of them, 39 in dedup_clusters alone. 1000 holds
+      several such working sets; a class averages 2.4 KB of bytecode.
+      The setting is static (read when the JVM first generates code),
+      so it only takes effect when this builder creates the session; a
+      session that already exists keeps the cache it started with.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # Spark 4's PYTHON DATA SOURCE planner workers (the streaming
@@ -68,6 +82,7 @@ def get_spark(app_name: str = "hive_udf_spark", shuffle_partitions: str | int | 
         # shuffle coalescing so reducers see ~64 MiB, not 32 slivers.
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "67108864")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

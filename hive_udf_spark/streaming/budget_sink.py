@@ -7,11 +7,12 @@ not arrived, so the streaming contract is ARRIVAL-ORDER greedy: each
 micro-batch's documents are considered in deterministic in-batch order
 (ascending id), each source's running total continues from the
 accumulated state, and a document is admitted iff its inclusive running
-total stays within the budget.  Because weights are non-negative the
-running total is monotone, so the admitted set is a prefix of arrival
-order per source — once a source's budget is exhausted it stays
-exhausted, and admission decisions never retract (append-only, the
-property that lets downstream consumers treat admitted rows as final).
+total stays within the budget.  The running total counts every document
+that arrived, rejected ones included, and weights are non-negative, so
+it is monotone and the admitted set is a prefix of arrival order per
+source — once a source's budget is exhausted it stays exhausted, and
+admission decisions never retract (append-only, the property that lets
+downstream consumers treat admitted rows as final).
 
 With a deterministic batch order the final admitted table equals the
 batch-mode window "cum over (source ORDER BY batch, id) ≤ budget" —
@@ -20,18 +21,20 @@ batch operator's hash order is the honest cost of streaming: arrival
 order is biased toward early arrivals, and that bias is part of the
 contract, not an accident.
 
-State and exactly-once: one parquet sub-table (``admitted/``) plus the
-batch high-water mark, committed as one version of the shared state
-directory (``sources.sinks.commit_state_version``) — a foreachBatch
-retry skips the whole batch (admission re-runs would double-count
-weights, unlike idempotent sketch unions, so the hwm check is
-load-bearing here).
+State and exactly-once: two parquet sub-tables, ``admitted/`` and the
+per-source running totals ``totals/`` (source, __base), plus the batch
+high-water mark, committed as one version of the shared state directory
+(``sources.sinks.commit_state_version``) — a foreachBatch retry skips
+the whole batch (admission re-runs would double-count weights, unlike
+idempotent sketch unions, so the hwm check is load-bearing here). The
+totals cannot be derived from ``admitted/``: a rejected document's
+weight still counts toward every later document of its source.
 
 Scale: per batch, one partitioned window over the batch's rows and one
-broadcast join against the per-source totals relation (|sources| rows).
-The admitted table is append-only: a commit writes only the batch's rows
-and hard-links the previous files (O(batch)). Totals derive from it with one
-aggregation — no per-doc driver state anywhere.
+broadcast join against the totals (|sources| rows). The admitted table
+is append-only: a commit writes only the batch's rows and hard-links the
+previous files (O(batch)); the totals are rewritten whole
+(O(|sources|)) — no per-doc driver state anywhere.
 """
 
 from __future__ import annotations
@@ -75,11 +78,7 @@ def token_budget_admission_sink(
             F.col(weight_col).cast("long").alias("n_chars"),
         )
         if cur is not None:
-            base = (
-                spark.read.parquet(os.path.join(cur, "admitted"))
-                .groupBy("source")
-                .agg(F.sum("n_chars").alias("__base"))
-            )
+            base = spark.read.parquet(os.path.join(cur, "totals"))
         else:
             base = spark.createDataFrame([], "source string, __base long")
         win = (
@@ -103,7 +102,13 @@ def token_budget_admission_sink(
                 "cum_weight",
             )
         )
-        commit_state_version(state_path, batch_id, append={"admitted": new_rows})
+        totals = (
+            base.join(b.groupBy("source").agg(F.sum("n_chars").alias("__batch")), "source", "full")
+            .select("source", (F.coalesce("__base", F.lit(0)) + F.coalesce("__batch", F.lit(0))).alias("__base"))
+        )
+        commit_state_version(
+            state_path, batch_id, append={"admitted": new_rows}, rewrite={"totals": totals}
+        )
 
     return (
         docs.writeStream.foreachBatch(_merge)

@@ -15,7 +15,12 @@ execution the call starts (plan build plus collect), read with
 ``perfbench.eventlog.final_plans``, as a tree of operator names with
 each Exchange's partitioning kind, and the number of Spark jobs; from the
 collected output, its schema, row count and an order-insensitive row
-digest.
+digest. After every entry point has run once, each runs a second time
+in the same session (outside its job group), which records what a
+repeated call pays: the seconds its plan build takes (the entry point's
+call, eager jobs included) and the number of classes the JVM compiles
+for that build and collect (0 when every generated class is still
+cached).
 
 Usage:
     python scripts/plan_shapes.py --repo CHECKOUT --sf DIR --out shapes.json
@@ -23,7 +28,9 @@ Usage:
 
 ``--repo`` is the checkout whose ``hive_udf_spark`` is imported (default:
 this one), so a second checkout of an older commit can be recorded with
-this script. ``--compare`` exits 1 when any entry point differs.
+this script. ``--compare`` exits 1 when any entry point differs; it
+prints the second run's classes and plan-build seconds beside the
+verdict, as information that does not enter it.
 """
 
 from __future__ import annotations
@@ -35,6 +42,7 @@ import os
 import re
 import shlex
 import sys
+import time
 from collections import Counter
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -180,13 +188,18 @@ def record(repo: str, sf: str, out: str) -> None:
     }
     docs.count()  # one-off session work stays out of the first case
     emb.count()
+    codegen = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
     result = {}
     threshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    for name, build in cases.items():
-        spark.sparkContext.setJobGroup(name, name)
+
+    def start(name: str, group: str) -> None:
+        spark.sparkContext.setJobGroup(group, group)
         spark.conf.set(
             "spark.sql.autoBroadcastJoinThreshold", "-1" if name.endswith("_no_broadcast") else threshold
         )
+
+    for name, build in cases.items():
+        start(name, name)
         df = build()
         rows = df.collect()
         result[name] = {
@@ -194,6 +207,16 @@ def record(repo: str, sf: str, out: str) -> None:
             "rows": len(rows),
             "digest": hashlib.sha1(repr(sorted(tuple(r) for r in rows)).encode()).hexdigest(),
         }
+    # every case again, after all of them ran once, in job groups that
+    # the plan record does not read: what a repeated call pays
+    for name, build in cases.items():
+        start(name, f"{name}#2")
+        compiled = codegen.METRIC_COMPILATION_TIME().getCount()
+        t0 = time.perf_counter()
+        df = build()
+        result[name]["warm_build_s"] = round(time.perf_counter() - t0, 3)
+        df.collect()
+        result[name]["warm_classes"] = codegen.METRIC_COMPILATION_TIME().getCount() - compiled
     spark.stop()  # flushes the event log
 
     events = read_events(log_dir)
@@ -239,6 +262,8 @@ def compare(old_path: str, new_path: str) -> bool:
             f"{name:32s} jobs {a['jobs']}/{b.get('jobs')} executions "
             f"{len(a['trees'])}/{len(b['trees'])} operators {n_ops} exchanges {n_ex} "
             f"rows {a['rows']}/{b.get('rows')} {verdict}"
+            f" | second call: classes {a.get('warm_classes')}/{b.get('warm_classes')}"
+            f" build_s {a.get('warm_build_s')}/{b.get('warm_build_s')}"
         )
         for i, (p, q) in enumerate(zip(shapes_a, shapes_b)):
             if p != q:

@@ -91,6 +91,40 @@ def test_minhash_ngram_shingles_order_sensitive(spark):
     assert (1, 3) in word_pairs           # word-set mode ignores order
 
 
+def test_minhash_signature_matches_per_seed_hashes(spark, sf_dir):
+    """The parsed MinHash signature equals the per-seed array_min of
+    ``functions.hashing``'s token hash, for a column name and for a plain
+    column reference, fast and portable; the agreement count equals the
+    number of equal components. A computed Column is refused."""
+    from hive_udf_spark.functions.hashing import fast_hash64, portable_hash60
+    from hive_udf_spark.operators.dedup import _sig_agreement_unrolled, minhash_signature
+
+    docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 10 == 0)
+    tokens = docs.select("doc_id", word_set("text").alias("__ws"))
+    for portable, h in ((False, fast_hash64), (True, portable_hash60)):
+
+        def seed_min(seed):
+            return F.array_min(F.transform("__ws", lambda t: h(t, seed)))
+
+        want = F.array(*[seed_min(seed) for seed in range(8)])
+        rows = tokens.select(
+            "doc_id",
+            want.alias("want"),
+            minhash_signature("__ws", 8, portable).alias("by_name"),
+            minhash_signature(F.col("__ws"), 8, portable).alias("by_column"),
+        ).collect()
+        assert rows
+        assert all(r.want == r.by_name == r.by_column for r in rows), portable
+    pairs = spark.createDataFrame(
+        [([1, 2, 3, 4], [1, 0, 3, 0]), ([5, 6, 7, 8], [5, 6, 7, 8]), ([1, 1, 1, 1], [2, 2, 2, 2])],
+        "a array<bigint>, b array<bigint>",
+    )
+    got = [r.n for r in pairs.select(_sig_agreement_unrolled("a", "b", 4).alias("n")).collect()]
+    assert got == [2, 4, 0]
+    with pytest.raises(Exception, match="VALUE_NOT_PLAIN_COLUMN_REFERENCE"):
+        minhash_signature(word_set("text"), 8)
+
+
 def test_ngrams_short_and_empty_docs_do_not_crash(spark):
     """Regression: token arrays shorter than n must yield an EMPTY n-gram
     array — the unguarded sequence(1, 0) materialized descending [1, 0]

@@ -904,3 +904,41 @@ def test_verify_computes_intersection_once(spark, sf_dir_med):
     assert out.collect()
     texts = [text for _, text, _, _ in _nodes(_final_plan(out))]
     assert sum(t.count("array_intersect(") for t in texts) == 1
+
+
+def _classes_compiled(spark) -> int:
+    """Generated classes the JVM has compiled so far (janino compiles
+    counted by Spark's codegen metrics; a hit in the generated-class
+    cache compiles nothing)."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
+def test_second_call_compiles_no_classes(spark, sf_dir):
+    """A repeated call of a corpus read operator reuses every generated
+    class of the first call. One round of these four operators generates
+    more classes than Spark's default 100-entry cache holds, so without
+    the session's larger cache each second call recompiles its classes."""
+    from hive_udf_spark.operators.dedup import dedup_clusters, near_dup_pairs
+    from hive_udf_spark.operators.similarity import ann_hyperplane_lsh, ann_ivf, kmeans_centroids
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    docs = load_table(spark, sf_dir, "documents")
+    queries = emb.filter(F.col("vec_id") % 10 == 0)
+    C = kmeans_centroids(emb, n_centroids=8)
+    calls = {
+        "near_dup_pairs": lambda: near_dup_pairs(docs, "doc_id", "text"),
+        "dedup_clusters": lambda: dedup_clusters(docs, "doc_id", "text"),
+        "ann_ivf": lambda: ann_ivf(emb, queries, k=5, centroids=C),
+        "ann_hyperplane_lsh": lambda: ann_hyperplane_lsh(emb, queries, k=5),
+    }
+    first = {}
+    for name, build in calls.items():
+        first[name] = build().collect()
+        assert first[name], name
+    compiled = {}
+    for name, build in calls.items():
+        before = _classes_compiled(spark)
+        assert sorted(build().collect()) == sorted(first[name]), name
+        compiled[name] = _classes_compiled(spark) - before
+    assert compiled == {name: 0 for name in calls}

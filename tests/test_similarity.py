@@ -476,6 +476,81 @@ def test_random_projection_exact_integers_and_jl_property(spark, sf_dir):
     assert c > 0.3, c
 
 
+def test_literal_sql_round_trips_float64_bits(spark):
+    """A constant matrix enters a plan as one typed literal whose doubles
+    are the driver's bits, edge values included; integer matrices keep
+    64-bit values."""
+    import struct
+
+    from hive_udf_spark.operators.similarity import _literal_sql
+
+    M = [[-0.0, 5e-324, 1.7976931348623157e308, 0.1], [0.0, -5e-324, -1.7976931348623157e308, 1 / 3]]
+    got = spark.range(1).select(F.expr(_literal_sql(M)).alias("m")).first().m
+
+    def bits(rows):
+        return [[struct.pack("<d", v) for v in row] for row in rows]
+
+    assert bits(got) == bits(M)
+    ints = [[2**63 - 1, -(2**63)], [0, -1]]
+    assert spark.range(1).select(F.expr(_literal_sql(ints, "bigint")).alias("m")).first().m == ints
+
+
+def _plan_expressions(plan) -> list[tuple[str, dict, dict | None]]:
+    """Every expression node of a Catalyst plan, from its JSON form, as
+    (class name, node, its first child or None). The JSON lists each
+    expression tree in pre-order, so a node's first child follows it."""
+    import json
+
+    out = []
+
+    def walk(o):
+        if isinstance(o, dict):
+            for v in o.values():
+                walk(v)
+        elif isinstance(o, list):
+            for i, v in enumerate(o):
+                if isinstance(v, dict) and v.get("class", "").startswith("org.apache.spark.sql.catalyst.expressions."):
+                    child = o[i + 1] if v.get("num-children") else None
+                    out.append((v["class"].rsplit(".", 1)[-1], v, child))
+                walk(v)
+
+    walk(json.loads(plan.toJSON()))
+    return out
+
+
+def test_ann_ivf_centroids_enter_the_plan_as_one_literal(spark, sf_dir):
+    """The centroid matrix is parsed as one ``from_json`` per use (cell
+    assignment and probe), not as one string cast per element, and the
+    optimizer folds each into a single array literal holding the
+    centroids' exact values."""
+    import json
+
+    from hive_udf_spark.operators.similarity import ann_ivf, kmeans_centroids
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    C = kmeans_centroids(emb, n_centroids=8)
+    qe = ann_ivf(emb, emb.filter(F.col("vec_id") % 10 == 0), k=5, centroids=C)._jdf.queryExecution()
+
+    analyzed = _plan_expressions(qe.analyzed())
+    assert sum(kind == "JsonToStructs" for kind, _, _ in analyzed) == 2
+    string_casts = [
+        child["value"]
+        for kind, node, child in analyzed
+        if kind == "Cast" and node["dataType"] == "double" and child.get("dataType") == "string"
+    ]
+    assert string_casts == ["-Infinity"]  # the argmax fold's start value
+    optimized = _plan_expressions(qe.optimizedPlan())
+    assert not any(kind == "JsonToStructs" for kind, _, _ in optimized)
+    matrix_type = {"type": "array", "elementType": "double", "containsNull": True}
+    matrices = [
+        json.loads(node["value"])
+        for kind, node, _ in optimized
+        if kind == "Literal" and isinstance(node["dataType"], dict)
+        and node["dataType"].get("elementType") == matrix_type
+    ]
+    assert matrices == [C.tolist(), C.tolist()]
+
+
 # ---------------------------------------------------------------------------
 # SemDeDup (r8)
 # ---------------------------------------------------------------------------

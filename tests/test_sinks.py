@@ -701,6 +701,38 @@ def test_token_budget_admission_commits_in_o_batch(spark, tmp_path):
     assert got == want and any(i >= 10 for i, _ in want)
 
 
+def test_token_budget_admission_counts_rejected_weights(spark, tmp_path):
+    """A document rejected in an earlier batch still counts toward its
+    source's running total: with budget 100, docs of weight 60 and 60 in
+    batch 0 and 30 in batch 1, only the first is admitted. The window
+    gives the last one cum 150; counting admitted weights only would
+    admit it at 90."""
+    rows = [(0, "a", 60), (1, "a", 60), (2, "a", 30)]
+    docs = spark.createDataFrame(rows, "doc_id long, source string, n_chars long")
+    src = str(tmp_path / "src")
+    for b in range(2):
+        docs.filter(F.col("doc_id").between(2 * b, 2 * b + 1)).coalesce(1).write.parquet(f"{src}/b{b}")
+    stream = (
+        spark.readStream.schema("doc_id long, source string, n_chars long")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(f"{src}/*")
+    )
+    from hive_udf_spark.streaming.budget_sink import token_budget_admission_sink
+
+    q = token_budget_admission_sink(
+        stream, str(tmp_path / "state"), str(tmp_path / "ckpt"), budget=100
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    got = {
+        (r.doc_id, r.cum_weight)
+        for r in spark.read.parquet(str(tmp_path / "state/admitted")).collect()
+    }
+    assert got == _admitted_by_window(rows, lambda i: i // 2, 100) == {(0, 60)}
+
+
 def test_token_budget_admission_validation(spark, tmp_path):
     import pytest as _pytest
     from hive_udf_spark.streaming.budget_sink import token_budget_admission_sink
