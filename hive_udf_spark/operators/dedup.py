@@ -32,7 +32,7 @@ from pyspark.sql.sql_formatter import SQLStringFormatter
 
 from hive_udf_spark.functions.hashing import fast_hash64, portable_hash60
 from hive_udf_spark.functions.text import ngrams, tokenize, word_set
-from hive_udf_spark.operators.util import ensure_min_parallelism, scatter_pairs
+from hive_udf_spark.operators.util import distinct_pairs, ensure_min_parallelism
 
 _LOG = logging.getLogger(__name__)
 
@@ -206,9 +206,10 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Self-join documents whose signatures collide in ≥1 LSH band.
 
-    Emits distinct (id_a, id_b) with id_a < id_b. The only shuffle is on
-    (band_index, band_signature); dedup of multi-band collisions happens
-    on (id_a, id_b) — both partial-aggregatable.
+    Emits distinct (id_a, id_b) with id_a < id_b, deduplicated by
+    :func:`util.distinct_pairs`. The band join shuffles (band_index,
+    band_signature); the dedup of multi-band collisions shuffles
+    (id_a, id_b) once, at full width.
 
     hashed_band_key=True joins on xxhash64(band, slice) — an 8-byte key
     instead of a multi-component string, shrinking the band shuffle and
@@ -219,15 +220,13 @@ def lsh_candidate_pairs(
     banded = _banded(df, id_col, sig_col, bands, rows_per_band, hashed_band_key)
     left = banded.alias("a")
     right = banded.alias("b")
-    return (
+    return distinct_pairs(
         left.join(
             right,
             (F.col("a.__band") == F.col("b.__band"))
             & (F.col("a.__bkey") == F.col("b.__bkey"))
             & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .distinct()
+        ).select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
     )
 
 
@@ -266,17 +265,6 @@ def jaccard_pair_stats(tokens_a: Column, tokens_b: Column) -> tuple[Column, Colu
     return inter, union
 
 
-def _attach_can_broadcast(spark: SparkSession) -> bool:
-    """Whether the planner may broadcast an attach side by its size:
-    ``spark.sql.autoBroadcastJoinThreshold`` or the adaptive threshold
-    (which re-plans joins from runtime sizes and defaults to the static
-    one) is not negative. Both negative (broadcast disabled) leave only
-    sort-merge or shuffled-hash attaches."""
-    static = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    adaptive = spark.conf.get("spark.sql.adaptive.autoBroadcastJoinThreshold", None) or static
-    return not all(v.strip().startswith("-") for v in (static, adaptive))
-
-
 def _exact_verify(
     cands: DataFrame,
     left: DataFrame,
@@ -298,14 +286,11 @@ def _exact_verify(
     two joins. Each side carries its set size (``size_col``, else computed
     from the tokens) once per document rather than once per pair.
 
-    The pair stream is scattered here (:func:`util.scatter_pairs`), once
-    for every caller, before the token sets attach: a deduplicated
-    ``(id, id)`` stream is byte-tiny, so AQE would otherwise coalesce it
-    into one partition and run every ``array_intersect`` in one
-    broadcast-join task. Only where the attach joins can broadcast
-    (:func:`_attach_can_broadcast`): a sort-merge attach re-hashes the
-    stream by its key at once, so there a round-robin would only add a
-    shuffle of the whole candidate stream.
+    Every caller deduplicates ``cands`` with :func:`util.distinct_pairs`,
+    so the stream arrives in full-width hash partitions that AQE does
+    not coalesce: the ``array_intersect`` per pair runs on every core,
+    and a sort-merge attach re-hashes the stream with no exchange added
+    here.
 
     ``sig_prefilter_margin``: the sides also carry their ``sig`` and,
     between the joins' output and the verify, pairs whose unbiased
@@ -317,8 +302,6 @@ def _exact_verify(
     integer cross-multiplication in 64 bits, so the comparison is exact
     and engine-portable."""
     key_a, key_b = cands.columns
-    if _attach_can_broadcast(cands.sparkSession):
-        cands = scatter_pairs(cands)
     prefilter = sig_prefilter_margin is not None
 
     def side(df: DataFrame, key: str, tag: str) -> DataFrame:
@@ -918,10 +901,10 @@ def dedup_clusters_star(
     # near_dup_pairs (r15; no-op at corpus scale). Matched A/B kept this:
     # WITH the scatter the cluster entries measured 3.4/2.6 s vs
     # 14.6/3.4 without in the same session (full-run comparisons were
-    # confounded by session-level drift on this box).
-    docs = ensure_min_parallelism(docs)
+    # confounded by session-level drift on this box). Only the token sets
+    # take it: the cluster step's node ids are hashed by a join at once.
     with_sig = _token_sets(
-        docs,
+        ensure_min_parallelism(docs),
         id_col,
         text_col,
         hashed_tokens=hashed_tokens,
@@ -933,11 +916,10 @@ def dedup_clusters_star(
     banded = _banded(with_sig, "__id", "sig", bands, rows_per_band, not portable)
     # star edges: every member -> bucket minimum (skip singleton buckets)
     bucket_min = banded.groupBy("__band", "__bkey").agg(F.min("__id").alias("__hub"))
-    star = (
+    star = distinct_pairs(
         banded.join(bucket_min, ["__band", "__bkey"])
         .filter(F.col("__id") != F.col("__hub"))
         .select(F.col("__hub").alias("id_a"), F.col("__id").alias("id_b"))
-        .distinct()
     )
     # exact-Jaccard verification of the (linear-sized) star edge set
     edges = _exact_verify(
@@ -1035,11 +1017,10 @@ def probe_minhash_index(
             "__id", f"{role}_id"
         )
 
-    cands = (
+    cands = distinct_pairs(
         banded(probe, "batch")
         .join(banded(index, "corpus"), ["__band", "__bkey"])
         .select("batch_id", "corpus_id")
-        .distinct()
     )
     return _exact_verify(
         cands, probe, index, threshold, id_col=id_col, tokens_col="tokens"
@@ -1211,18 +1192,15 @@ def _prefix_candidates_from_ranked(ranked: DataFrame, threshold: float) -> DataF
         )
         + F.lit(1)
     )
-    # the ranked aggregate's output is byte-small, so AQE coalesces it to
-    # ~1 partition and the self-join's fan-out + partial dedup run
-    # single-task (r15) — round-robin the skinny exploded prefix rows
-    probe = scatter_pairs(_ranked_positions(ranked, _probe_prefix_len(t_ppm)))
-    index = scatter_pairs(_ranked_positions(ranked, ilen))
+    probe = _ranked_positions(ranked, _probe_prefix_len(t_ppm))
+    index = _ranked_positions(ranked, ilen)
     a, b = index.alias("a"), probe.alias("b")
     # alpha = ceil(t/(1+t) * (na+nb)), exact integer rational
     alpha = F.expr(
         f"CAST(((CAST(a.__n AS BIGINT) + CAST(b.__n AS BIGINT)) * {t_ppm}"
         f" + {denom - 1}) div {denom} AS BIGINT)"
     )
-    return (
+    return distinct_pairs(
         a.join(
             b,
             (F.col("a.__r") == F.col("b.__r"))
@@ -1242,12 +1220,10 @@ def _prefix_candidates_from_ranked(ranked: DataFrame, threshold: float) -> DataF
                 )
                 >= alpha
             ),
-        )
-        .select(
+        ).select(
             F.least(F.col("a.__id"), F.col("b.__id")).alias("id_a"),
             F.greatest(F.col("a.__id"), F.col("b.__id")).alias("id_b"),
         )
-        .distinct()
     )
 
 
@@ -1392,8 +1368,8 @@ def containment_pairs(
     # ranked token list with positions — both from the one ranked
     # materialization, keys are the 8-byte hashed ids (string fallback on
     # the astronomically-unlikely vocab collision; see _ranked_by_freq)
-    a = scatter_pairs(_ranked_positions(ranked, _probe_prefix_len(t_ppm))).alias("a")
-    b = scatter_pairs(_ranked_positions(ranked)).alias("b")
+    a = _ranked_positions(ranked, _probe_prefix_len(t_ppm)).alias("a")
+    b = _ranked_positions(ranked).alias("b")
     # positional filter (PPJoin adapted to containment): a qualifying
     # (a ⊂~ b) pair needs overlap >= ceil(t*na), all of it at-or-after
     # the first common token in the canonical order — so
@@ -1402,7 +1378,7 @@ def containment_pairs(
     alpha = F.expr(
         f"CAST((CAST(a.__n AS BIGINT) * {t_ppm} + 999999) div 1000000 AS BIGINT)"
     )
-    cands = (
+    cands = distinct_pairs(
         a.join(
             b,
             (F.col("a.__r") == F.col("b.__r"))
@@ -1416,9 +1392,7 @@ def containment_pairs(
                 )
                 >= alpha
             ),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .distinct()
+        ).select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
     )
     keys = _ranked_keys(ranked)
     out = _exact_verify(

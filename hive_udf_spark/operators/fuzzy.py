@@ -60,6 +60,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from hive_udf_spark.operators.util import distinct_pairs, ensure_min_parallelism
+
 __all__ = ["edit_distance_join", "synth_title_sql"]
 
 
@@ -110,8 +112,6 @@ def edit_distance_join(
         raise ValueError("max_len must be at least max_dist + 1")
     d, k = max_dist, max_dist + 1
     s = F.col(s_col).cast("string")
-    from hive_udf_spark.operators.util import ensure_min_parallelism
-
     # single-split scan => the HOF key-stream explodes run in one task
     # (r15, the dedup-family finding); no-op at corpus scale
     base = ensure_min_parallelism(df).select(
@@ -201,21 +201,16 @@ def edit_distance_join(
     # pair is generated in both orientations. Keeping only id_a < id_b at
     # the join halves the candidate stream with zero recall loss (r14:
     # 4.3M -> 2.2M candidates on the bench corpus), and the distinct runs
-    # over bare id pairs; the strings re-attach afterwards with one join
-    # per side against the (small, deduplicated-pair-sized) stream — the
-    # near_dup_pairs verify discipline. Neither key stream carries the
-    # full string anymore, so the candidate shuffle is segments + ids.
-    cand = (
+    # over bare id pairs, in full-width partitions (util.distinct_pairs)
+    # ahead of the per-pair levenshtein; the strings re-attach afterwards
+    # with one join per side — the near_dup_pairs verify discipline.
+    # Neither key stream carries the full string anymore, so the
+    # candidate shuffle is segments + ids.
+    cand = distinct_pairs(
         probe.join(index, ["klen", "kseg", "ktxt"])
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
-        .distinct()
     )
-    # byte-tiny pair stream ahead of a per-pair levenshtein: round-robin
-    # before the verify attach (util.scatter_pairs; the r15 dedup fix)
-    from hive_udf_spark.operators.util import scatter_pairs
-
-    cand = scatter_pairs(cand)
     sa = base.select(F.col("__id").alias("id_a"), F.col("__s").alias("s_a"))
     sb = base.select(F.col("__id").alias("id_b"), F.col("__s").alias("s_b"))
     return (

@@ -38,8 +38,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from hive_udf_spark.operators.dedup import _clusters
-from hive_udf_spark.operators.util import ensure_min_parallelism, scatter_pairs
+from hive_udf_spark.operators.dedup import _clusters, _column_sql
+from hive_udf_spark.operators.util import distinct_pairs, ensure_min_parallelism
 
 DEFAULT_QUANT_SCALE = 1000
 # centroids and codebooks train on at most this many hash-sampled vectors
@@ -62,7 +62,7 @@ def dot_int(a: Column, b: Column) -> Column:
     )
 
 
-def dot_int_unrolled(a: Column, b: Column, dim: int) -> Column:
+def dot_int_unrolled(a: Column | str, b: Column | str, dim: int) -> Column:
     """Exact integer dot product over FIXED-dim arrays, unrolled into
     ``dim`` codegen'd element_at multiply-adds. Higher-order functions
     are CodegenFallback — ``dot_int`` pays ~2·dim interpreted lambda
@@ -70,11 +70,15 @@ def dot_int_unrolled(a: Column, b: Column, dim: int) -> Column:
     PER CANDIDATE PAIR is the hottest expression in the verify stages.
     Value-identical to ``dot_int`` for arrays of exactly ``dim``
     elements (integer addition is associative); use only where the
-    fixed-dim contract already holds (quantized embeddings)."""
-    acc = F.element_at(a, 1) * F.element_at(b, 1)
-    for i in range(2, dim + 1):
-        acc = acc + F.element_at(a, i) * F.element_at(b, i)
-    return acc
+    fixed-dim contract already holds (quantized embeddings).
+
+    ``a`` and ``b`` are column names or plain column references. One
+    parsed SQL expression, as ``dedup._sig_agreement_unrolled`` (through
+    the Python API it took about 2,200 py4j round trips at dim 64)."""
+    sa, sb = _column_sql(a), _column_sql(b)
+    return F.expr(
+        " + ".join(f"element_at({sa}, {i}) * element_at({sb}, {i})" for i in range(1, dim + 1))
+    )
 
 
 def dot_double(a: Column, b: Column) -> Column:
@@ -300,12 +304,17 @@ def int_signature_expr(planes: list[list[int]], qv_col: str = "__qv") -> Column:
     """
     terms = []
     for j, row in enumerate(planes):
-        dot = (
-            f"aggregate(zip_with({qv_col}, {_literal_sql(row, 'bigint')}, (x, y) -> x * y), "
-            f"CAST(0 AS BIGINT), (a, x) -> a + x)"
-        )
+        dot = _int_dot_sql(qv_col, row)
         terms.append(f"IF({dot} > 0, CAST({2 ** j} AS BIGINT), CAST(0 AS BIGINT))")
     return F.expr(" + ".join(terms))
+
+
+def _int_dot_sql(qv_col: str, row: list[int]) -> str:
+    """BIGINT fold of ``qv_col`` times the constant integer ``row``."""
+    return (
+        f"aggregate(zip_with({qv_col}, {_literal_sql(row, 'bigint')}, (x, y) -> x * y), "
+        f"CAST(0 AS BIGINT), (a, x) -> a + x)"
+    )
 
 
 def jl_sign_matrix(in_dim: int, out_dim: int, seed: int = 7) -> list[list[int]]:
@@ -335,10 +344,13 @@ def random_projection_quantized(
     sum, so any engine reproduces it bit-for-bit (unlike float matrix
     products, whose summation order is engine-defined).
 
-    Output: (id, proj array<bigint> of out_dim). All JVM: the matrix is
-    one literal expression inside a transform/aggregate lambda (the
-    single-parsed-SQL-expr trick above); per row the cost is
-    out_dim·in_dim integer multiply-adds in codegen.
+    Output: (id, proj array<bigint> of out_dim). All JVM: one parsed
+    SQL expression, one fold per matrix row (each row one literal); per
+    row the cost is out_dim·in_dim integer multiply-adds. The vector is
+    quantized once, in its own projection: as in
+    :func:`int_signature_expr`, a single reference to it inside a matrix
+    lambda would let CollapseProject inline the quantization into the
+    lambda, once per output coordinate.
 
     At 100 TB: map-only (no shuffle), output is out_dim/in_dim of the
     input width — project FIRST, then run ANN/near-dup on the short
@@ -346,12 +358,11 @@ def random_projection_quantized(
     chosen out_dim. The matrix never leaves the driver (it is
     O(out·in) ints embedded in the plan), so there is no broadcast and
     no Python worker anywhere."""
-    mat = _literal_sql(jl_sign_matrix(in_dim, out_dim, seed), "bigint")
-    q = (
-        f"transform(`{vec_col}`, __e -> "
-        f"CAST(round(CAST(__e AS DOUBLE) * {scale}) AS BIGINT))"
+    rows = jl_sign_matrix(in_dim, out_dim, seed)
+    proj = "array(" + ", ".join(_int_dot_sql("__qv", row) for row in rows) + ")"
+    return df.select(F.col(id_col), quantize_vec(vec_col, scale).alias("__qv")).select(
+        id_col, F.expr(proj).alias("proj")
     )
-    return df.select(F.col(id_col), F.expr(_dots_sql(q, mat, "BIGINT")).alias("proj"))
 
 
 def _band_bits(nbits: int, bands: int) -> int:
@@ -439,20 +450,15 @@ def embedding_near_pairs_lsh(
 
     banded = _sign_bands(sigs, "__id", bands, band_bits)
     a, b = banded.alias("a"), banded.alias("b")
-    cands = (
+    # full-width pair stream ahead of the per-pair dot (util.distinct_pairs)
+    cands = distinct_pairs(
         a.join(
             b,
             (F.col("a.__band") == F.col("b.__band"))
             & (F.col("a.__bkey") == F.col("b.__bkey"))
             & (F.col("a.__id") < F.col("b.__id")),
-        )
-        .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
-        .distinct()
+        ).select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
     )
-
-    # byte-tiny pair stream + per-pair dot: round-robin before the verify
-    # attach (AQE byte-coalescing + hot-id skew; the dedup-family r15 fix)
-    cands = scatter_pairs(cands)
     qv = sigs.select("__id", "__qv")
     # per-doc norm: the fold form is fine here (once per doc, not per pair)
     nrm = dot_int(F.col("__qv"), F.col("__qv"))
@@ -469,7 +475,7 @@ def embedding_near_pairs_lsh(
     # copy outgrow the JVM's 64 KB method limit, which silently turns off
     # whole-stage codegen for the stage. No filter is pushed below the
     # Generate that produces its column.
-    dq = dot_int_unrolled(F.col("__qa"), F.col("__qb"), dim)
+    dq = dot_int_unrolled("__qa", "__qb", dim)
     t2 = float(min_cosine) ** 2
     return (
         cands.join(side_a, "id_a")
@@ -515,12 +521,12 @@ def _literal_sql(values, elem: str = "double") -> str:
     return f"coalesce(from_json('{json.dumps(arr.tolist())}', '{typ}'), array())"
 
 
-def _dots_sql(vec_sql: str, mat_sql: str, typ: str = "DOUBLE") -> str:
-    """array<``typ``>: inner product of ``vec_sql`` with every row of the
+def _dots_sql(vec_sql: str, mat_sql: str) -> str:
+    """array<double>: inner product of ``vec_sql`` with every row of the
     literal matrix, each a sequential left fold."""
     return (
         f"transform({mat_sql}, __p -> aggregate(zip_with({vec_sql}, __p, "
-        f"(__x, __y) -> __x * __y), CAST(0 AS {typ}), (__a, __x) -> __a + __x))"
+        f"(__x, __y) -> __x * __y), CAST(0 AS DOUBLE), (__a, __x) -> __a + __x))"
     )
 
 
@@ -630,19 +636,16 @@ def ann_hyperplane_lsh(
         qk = qk.select(
             "query_id", "__band", F.explode(F.array(F.col("__bkey"), *flips)).alias("__bkey")
         )
-    cands = (
+    # full-width pair stream ahead of the per-pair cosine, as in
+    # embedding_near_pairs_lsh
+    cands = distinct_pairs(
         ck.join(
             F.broadcast(qk),
             (ck["__band"] == qk["__band"])
             & (ck["__bkey"] == qk["__bkey"])
             & (F.col("neighbor_id") != F.col("query_id")),
-        )
-        .select("query_id", "neighbor_id")
-        .distinct()
+        ).select("query_id", "neighbor_id")
     )
-    # byte-tiny pair stream + per-pair cosine: round-robin before the
-    # vectors attach, as in embedding_near_pairs_lsh
-    cands = scatter_pairs(cands)
     qv = _cosine_side(queries, id_col, F.col(vec_col), "query_id", "q")
     nv = _cosine_side(corpus, id_col, F.col(vec_col), "neighbor_id", "n")
     return _cosine_topk(cands.join(F.broadcast(qv), "query_id").join(nv, "neighbor_id"), k)

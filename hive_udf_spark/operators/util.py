@@ -21,48 +21,32 @@ def null_safe_cond(left: DataFrame, right: DataFrame, cols: list[str]) -> Column
     return cond
 
 
-def scatter_pairs(df: DataFrame) -> DataFrame:
-    """Round-robin repartition of a skinny candidate/pair stream ahead of
-    a CPU-heavy per-row stage.
+def distinct_pairs(df: DataFrame) -> DataFrame:
+    """Distinct rows of a skinny candidate/pair stream, in ``n`` hash
+    partitions on all its columns, ahead of a CPU-heavy per-row stage
+    (the set-similarity verify, the hyperplane-LSH re-ranks, the fuzzy
+    verify).
 
-    Where it applies: once inside ``dedup._exact_verify``, so every
-    set-similarity verify (near-dup pairs, both cluster modes, the index
-    probe, prefix-filter and containment joins) scatters its candidate
-    pairs before the token sets attach, unless broadcast joins are
-    disabled (a sort-merge attach would re-hash the scatter's output at
-    once); before the vector attach of both
-    hyperplane-LSH re-ranks (``embedding_near_pairs_lsh``,
-    ``ann_hyperplane_lsh``); before the fuzzy-match verify; and on the
-    two prefix-position streams of the prefix-filter and containment
-    candidate joins.
+    The repartition's exchange (``REPARTITION_BY_NUM``) already satisfies
+    the aggregate's distribution, so it is the only exchange; a plain
+    ``distinct()`` would get an ``ENSURE_REQUIREMENTS`` one instead,
+    which AQE coalesces by BYTE size, and a pair stream's bytes wildly
+    under-state its per-row cost (a 206k-pair containment verify ran in
+    ONE task: 4.7 s vs 0.5 s at full width). AQE does not coalesce a
+    ``REPARTITION_BY_NUM`` exchange. Hashing on the whole pair, not one
+    id, also spreads a hot document's pairs across tasks. The repartition
+    must come first: placed after ``distinct()`` it is removed as
+    redundant.
 
-    Two AQE blind spots make this explicit exchange worth one extra
-    shuffle of ~16-byte rows (r15, measured):
-
-    1. AQE coalesces post-shuffle partitions by BYTE size, and a pair
-       stream's bytes wildly under-state its downstream per-row cost —
-       a 206k-pair containment verify was coalesced to ONE task: 4.7 s
-       single-threaded vs 0.5 s scattered (9.6x). Raising the session's
-       ``minPartitionSize`` floor was measured strictly worse (1.2-1.9 s):
-       it preserves partition COUNT but keeps the id-hash layout.
-    2. Hash partitioning by pair ids concentrates a hot document's pairs
-       (and the token arrays the verify attaches to them) in one task —
-       the dup-heavy-corpus skew AQE's skew-join handling cannot split
-       because it sits in an aggregate's output, not a join. Round-robin
-       levels the CPU.
-
-    The explicit count follows the session's shuffle-partition setting
-    (deployment-scaled), and pinning it stops AQE from re-coalescing the
-    exchange. A non-integer setting (``"auto"`` on some managed
-    platforms) falls back to the context's default parallelism. At
-    100 TB the same skew argument holds and the added shuffle stays
-    proportional to the (id, id) pair count, never to payload bytes."""
+    ``n`` is the session's shuffle-partition setting; a non-integer one
+    (``"auto"`` on some managed platforms) falls back to the context's
+    default parallelism."""
     setting = df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     try:
         n = int(setting)
     except ValueError:
         n = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n)
+    return df.repartition(n, *df.columns).distinct()
 
 
 def ensure_min_parallelism(df: DataFrame, min_parts: int | None = None) -> DataFrame:

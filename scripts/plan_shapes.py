@@ -1,10 +1,12 @@
 #!/usr/bin/env python
 """Record, and compare between two checkouts, the executed plans of the
-set-similarity joins in ``operators/dedup.py``, the vector-search
-operators in ``operators/similarity.py`` and the sketch builds and merges
-in ``functions/{sketch,lc,kmv,qsketch,hllp,pcsa}.py``.
+set-similarity joins in ``operators/dedup.py``, the edit-distance join in
+``operators/fuzzy.py``, the vector-search operators in
+``operators/similarity.py`` and the sketch builds and merges in
+``functions/{sketch,lc,kmv,qsketch,hllp,pcsa}.py``.
 
-Each entry point runs on the ``documents`` (dedup), ``embeddings``
+Each entry point runs on the ``documents`` (dedup; fuzzy on titles
+synthesized from it, as the registry's ``fuzzy_edit_join``), ``embeddings``
 (similarity) or ``events`` (sketches) table of ``--sf`` under its own job
 group with the event log on; the ``*_no_broadcast`` cases run with
 ``spark.sql.autoBroadcastJoinThreshold=-1``, so their joins are
@@ -105,6 +107,7 @@ def record(repo: str, sf: str, out: str) -> None:
     from hive_udf_spark.functions import qsketch as Q
     from hive_udf_spark.functions import sketch as SK
     from hive_udf_spark.operators import dedup as D
+    from hive_udf_spark.operators import fuzzy as FZ
     from hive_udf_spark.operators import similarity as S
     from hive_udf_spark.session import get_spark
     from hive_udf_spark.sources import load_table
@@ -115,6 +118,8 @@ def record(repo: str, sf: str, out: str) -> None:
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     half = docs.filter(F.col("doc_id") % 2 != 0)
     other_half = docs.filter(F.col("doc_id") % 2 == 0)
+    # the registry's fuzzy_edit_join input: one typo'd title per document
+    titles = docs.select("doc_id", F.expr(FZ.synth_title_sql("spark")).alias("title"))
     emb = load_table(spark, sf, "embeddings")
     queries = emb.filter(F.col("vec_id") % 10 == 0)
     # trained outside every job group: the cases that take them record
@@ -161,6 +166,7 @@ def record(repo: str, sf: str, out: str) -> None:
         "containment_pairs": lambda: D.containment_pairs(
             docs, "doc_id", "text", threshold=0.8, shingle_n=3
         ),
+        "edit_distance_join": lambda: FZ.edit_distance_join(titles, "doc_id", "title", max_dist=2),
         "topk_cosine": lambda: S.topk_cosine(emb, queries, k=5),
         "ann_ivf": lambda: S.ann_ivf(emb, queries, k=5, nprobe=2, centroids=centroids),
         "ann_hyperplane_lsh": lambda: S.ann_hyperplane_lsh(emb, queries, k=5),

@@ -756,14 +756,15 @@ def test_iceberg_field_id_scan_is_plain_scan(spark, tmp_path):
     assert "Scan parquet" in plan
 
 
-_PLAN_WRAPPERS = ("AQEShuffleRead", "InputAdapter", "WholeStageCodegen")
+_PLAN_WRAPPERS = ("InputAdapter", "WholeStageCodegen")
 
 
-def _final_plan(df) -> tuple:
+def _final_plan(df, keep_reads: bool = False) -> tuple:
     """The AQE-final physical plan of ``df`` (run it first) as nested
     ``(node name, node string, children)``, read from the JVM plan with
-    query stages, reused exchanges, shuffle reads and codegen wrappers
-    looked through."""
+    query stages, reused exchanges, codegen wrappers and, unless
+    ``keep_reads``, shuffle reads looked through."""
+    wrappers = _PLAN_WRAPPERS if keep_reads else _PLAN_WRAPPERS + ("AQEShuffleRead",)
 
     def walk(node) -> tuple:
         while True:
@@ -772,7 +773,7 @@ def _final_plan(df) -> tuple:
                 node = node.plan()
             elif name == "ReusedExchange":
                 node = node.child()
-            elif name.startswith(_PLAN_WRAPPERS):
+            elif name.startswith(wrappers):
                 node = node.children().apply(0)
             else:
                 break
@@ -783,9 +784,9 @@ def _final_plan(df) -> tuple:
 
 
 def _nodes(tree, above=()):
-    """``(name, string, child names, ancestor strings)`` per plan node."""
+    """``(name, string, children, ancestor strings)`` per plan node."""
     name, text, kids = tree
-    yield name, text, [k[0] for k in kids], above
+    yield name, text, kids, above
     for k in kids:
         yield from _nodes(k, above + (text,))
 
@@ -794,13 +795,17 @@ def _is_rr_exchange(text: str) -> bool:
     return text.startswith("Exchange RoundRobinPartitioning")
 
 
-def _pairs_scattered_before_attach(df) -> bool:
-    """A round-robin Exchange whose input is the candidate ``HashAggregate``
-    and whose consumer is a join."""
-    return any(
-        _is_rr_exchange(text) and kids == ["HashAggregate"] and "Join" in above[-1].split(" ", 1)[0]
-        for _, text, kids, above in _nodes(_final_plan(df))
-    )
+def _candidate_aggregates(df, keys: tuple[str, str]) -> list[tuple[str, str, tuple]]:
+    """``(child name, child string, ancestor strings)`` of each
+    ``HashAggregate`` that deduplicates the ``keys`` pair stream, read
+    from the AQE-final plan of ``df`` with its shuffle reads kept as
+    nodes (a coalesced read is ``AQEShuffleRead coalesced``)."""
+    head = "HashAggregate(keys=[{}#".format(keys[0])
+    return [
+        (kids[0][0], kids[0][1], above)
+        for _, text, kids, above in _nodes(_final_plan(df, keep_reads=True))
+        if text.startswith(head) and ", {}#".format(keys[1]) in text and "functions=[]" in text
+    ]
 
 
 def test_ivf_cell_assigned_once_above_the_scatter(spark, sf_dir_med):
@@ -820,40 +825,47 @@ def test_ivf_cell_assigned_once_above_the_scatter(spark, sf_dir_med):
     assert not any(_is_rr_exchange(a) for _, above in fold for a in above)
 
 
-def test_candidate_pairs_scattered_before_attach(spark, sf_dir_med):
-    """The deduplicated (id, id) candidate stream is byte-tiny, so AQE
-    coalesces it into one partition; the per-candidate cosine re-rank of
-    ann_hyperplane_lsh and the array_intersect verify of near_dup_pairs
-    keep full width only through a round-robin Exchange between the
-    candidate HashAggregate and the first attach join. With broadcast
-    joins disabled the verify attaches are sort-merge joins, which
-    re-hash the stream at once, so there the verify does not scatter."""
+def test_candidate_pairs_full_width_before_attach(spark, sf_dir_med):
+    """The deduplicated candidate stream is byte-tiny, so AQE would
+    coalesce a plain ``distinct()``'s exchange into one partition and run
+    the per-candidate cosine re-rank or array_intersect verify in one
+    task. ``util.distinct_pairs`` makes the dedup's only exchange a
+    ``REPARTITION_BY_NUM`` hash exchange on the pair, which AQE does not
+    coalesce, so no round-robin scatter follows it; that holds with
+    broadcast joins on and off."""
     from hive_udf_spark.operators.dedup import build_minhash_index, near_dup_pairs, probe_minhash_index
     from hive_udf_spark.operators.similarity import ann_hyperplane_lsh
 
     emb = load_table(spark, sf_dir_med, "embeddings")
     docs = load_table(spark, sf_dir_med, "documents")
-    for name, out in [
-        ("ann_hyperplane_lsh", ann_hyperplane_lsh(emb, emb.filter(F.col("vec_id") % 50 == 0), k=5)),
-        ("near_dup_pairs", near_dup_pairs(docs, "doc_id", "text")),
-    ]:
-        assert out.collect(), name
-        assert _pairs_scattered_before_attach(out), name
-
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        index = build_minhash_index(docs.filter(F.col("doc_id") % 2 != 0), "doc_id", "text", 16, hashed_tokens=True)
-        for name, out in [
-            ("probe_minhash_index", probe_minhash_index(
-                index, docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", hashed_tokens=True
-            )),
-            ("near_dup_pairs", near_dup_pairs(docs, "doc_id", "text")),
-        ]:
-            assert out.collect(), name
-            nodes = list(_nodes(_final_plan(out)))
-            assert any(n == "SortMergeJoin" for n, *_ in nodes), name
-            assert not any(_is_rr_exchange(text) for _, text, *_ in nodes), name
+        for threshold in (old, "-1"):
+            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold)
+            index = build_minhash_index(
+                docs.filter(F.col("doc_id") % 2 != 0), "doc_id", "text", 16, hashed_tokens=True
+            )
+            for name, keys, out in [
+                ("ann_hyperplane_lsh", ("query_id", "neighbor_id"),
+                 ann_hyperplane_lsh(emb, emb.filter(F.col("vec_id") % 50 == 0), k=5)),
+                ("near_dup_pairs", ("id_a", "id_b"), near_dup_pairs(docs, "doc_id", "text")),
+                ("probe_minhash_index", ("batch_id", "corpus_id"), probe_minhash_index(
+                    index, docs.filter(F.col("doc_id") % 2 == 0), "doc_id", "text", hashed_tokens=True
+                )),
+            ]:
+                case = (name, threshold)
+                assert out.collect(), case
+                aggs = _candidate_aggregates(out, keys)
+                # the final aggregate reads the partial one, which reads the exchange
+                inputs = [(kid, text) for kid, text, _ in aggs if kid != "HashAggregate"]
+                assert len(inputs) == 1, (case, inputs)
+                kid, text = inputs[0]
+                assert kid == "Exchange" and text.startswith("Exchange hashpartitioning("), (case, text)
+                assert "REPARTITION_BY_NUM" in text, (case, text)
+                assert not any(_is_rr_exchange(a) for _, _, above in aggs for a in above), case
+                if threshold == "-1":
+                    names = {n for n, *_ in _nodes(_final_plan(out))}
+                    assert names & {"SortMergeJoin", "ShuffledHashJoin"}, case
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 

@@ -476,6 +476,43 @@ def test_random_projection_exact_integers_and_jl_property(spark, sf_dir):
     assert c > 0.3, c
 
 
+def test_random_projection_quantizes_once_per_vector(spark, sf_dir):
+    """The optimized plan quantizes each vector once, in its own
+    projection, not inside the lambda over the JL matrix rows (where it
+    would run once per output coordinate)."""
+    from hive_udf_spark.operators.similarity import random_projection_quantized
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    text = random_projection_quantized(emb, in_dim=64, out_dim=16)._jdf.queryExecution().optimizedPlan().toString()
+    assert text.count("round(") == 1, text
+    matrix = [line for line in text.splitlines() if "zip_with(" in line]
+    assert matrix and not any("round(" in line for line in matrix), matrix
+
+
+def test_dot_int_unrolled_matches_dot_int(spark):
+    """The unrolled per-pair dot equals the fold on fixed-dim arrays with
+    negative and large (beyond 32-bit) components, and a short array
+    still raises the ANSI out-of-bounds error of ``element_at``."""
+    from hive_udf_spark.operators.similarity import dot_int, dot_int_unrolled
+
+    big = [1_000_000_000, -999_999_999, 3, -(2**31), 0, 7, -1, 2**31 - 1]
+    rng = np.random.default_rng(5)
+    rows = [(big, big[::-1]), (big, [-v for v in big[:4]] + [11, 0, -1, 3])]
+    rows += [
+        (rng.integers(-(10**6), 10**6, 8).tolist(), rng.integers(-(10**6), 10**6, 8).tolist())
+        for _ in range(20)
+    ]
+    df = spark.createDataFrame(rows, "a array<bigint>, b array<bigint>")
+    got = df.select(
+        dot_int_unrolled("a", "b", 8).alias("u"), dot_int(F.col("a"), F.col("b")).alias("f")
+    ).collect()
+    want = [sum(x * y for x, y in zip(a, b)) for a, b in rows]
+    assert [r.u for r in got] == [r.f for r in got] == want
+    short = spark.createDataFrame([([1] * 7, [1] * 8)], "a array<bigint>, b array<bigint>")
+    with pytest.raises(Exception, match="INVALID_ARRAY_INDEX_IN_ELEMENT_AT"):
+        short.select(dot_int_unrolled(F.col("a"), F.col("b"), 8)).collect()
+
+
 def test_literal_sql_round_trips_float64_bits(spark):
     """A constant matrix enters a plan as one typed literal whose doubles
     are the driver's bits, edge values included; integer matrices keep

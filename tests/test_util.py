@@ -1,20 +1,20 @@
-"""Operator utility tests that need no Spark session."""
+"""Operator utility tests; all but the last need no Spark session."""
 
 from __future__ import annotations
 
+import re
 from types import SimpleNamespace
 
 import pytest
 
-from hive_udf_spark.operators.dedup import _attach_can_broadcast
-from hive_udf_spark.operators.util import ensure_min_parallelism, scatter_pairs
+from hive_udf_spark.operators.util import distinct_pairs, ensure_min_parallelism
 
 
 class _StandInFrame:
-    """Just enough of a DataFrame for scatter_pairs and
+    """Just enough of a DataFrame for distinct_pairs and
     ensure_min_parallelism: a session whose conf returns a fixed
     shuffle-partition setting, a partition count, and a repartition that
-    records its count."""
+    returns its count (with a ``distinct`` that keeps it)."""
 
     def __init__(self, shuffle_partitions: str, default_parallelism: int, num_partitions: int = 1):
         self.sparkSession = SimpleNamespace(
@@ -22,17 +22,23 @@ class _StandInFrame:
             sparkContext=SimpleNamespace(defaultParallelism=default_parallelism),
         )
         self.rdd = SimpleNamespace(getNumPartitions=lambda: num_partitions)
+        self.columns = ["id_a", "id_b"]
 
-    def repartition(self, n: int) -> int:
-        return n
+    def repartition(self, n: int, *cols: str) -> int:
+        return _Count(n)
+
+
+class _Count(int):
+    def distinct(self) -> int:
+        return int(self)
 
 
 @pytest.mark.parametrize("setting, want", [("12", 12), ("auto", 3)])
-def test_scatter_pairs_partition_count(setting, want):
+def test_distinct_pairs_partition_count(setting, want):
     """The session's integer shuffle-partition setting is used as is; a
     non-integer one ("auto" on some managed platforms) falls back to the
     context's default parallelism instead of raising."""
-    assert scatter_pairs(_StandInFrame(setting, default_parallelism=3)) == want
+    assert distinct_pairs(_StandInFrame(setting, default_parallelism=3)) == want
 
 
 @pytest.mark.parametrize(
@@ -48,17 +54,17 @@ def test_ensure_min_parallelism(num_partitions, min_parts, want):
     assert got is df if want == "same" else got == want
 
 
-@pytest.mark.parametrize(
-    "static, adaptive, want",
-    [("10485760b", None, True), ("-1", None, False), ("-1", "10MB", True), ("10485760b", "-1", True)],
-)
-def test_attach_can_broadcast(static, adaptive, want):
-    """The set-similarity verify scatters its pairs unless both broadcast
-    thresholds are negative; the adaptive one, when unset, is the static
-    one."""
-    conf = {
-        "spark.sql.autoBroadcastJoinThreshold": static,
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": adaptive,
-    }
-    spark = SimpleNamespace(conf=SimpleNamespace(get=lambda key, default=None: conf[key]))
-    assert _attach_can_broadcast(spark) is want
+def test_distinct_pairs_one_full_width_exchange(spark):
+    """distinct_pairs removes duplicate rows through exactly one exchange,
+    a hash exchange on every column with the session's partition count
+    that AQE may not coalesce (REPARTITION_BY_NUM), and no round-robin."""
+    rows = [(1, 2), (1, 2), (2, 3), (1, 3), (2, 3), (1, 2)]
+    out = distinct_pairs(spark.createDataFrame(rows, "id_a long, id_b long"))
+    assert sorted(tuple(r) for r in out.collect()) == [(1, 2), (1, 3), (2, 3)]
+    plan = out._jdf.queryExecution().executedPlan().executedPlan().toString()  # AQE-final
+    exchanges = [line.strip() for line in plan.splitlines() if "Exchange " in line]
+    n = spark.conf.get("spark.sql.shuffle.partitions")
+    assert len(exchanges) == 1, exchanges
+    assert re.search(rf"Exchange hashpartitioning\(id_a#\d+L, id_b#\d+L, {n}\), REPARTITION_BY_NUM", exchanges[0])
+    assert "RoundRobinPartitioning" not in plan
+    assert "AQEShuffleRead" not in plan
